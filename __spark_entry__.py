@@ -2058,7 +2058,10 @@ def q_stream_ingest_dedup(spark, sf_dir):
     corpus LSH index via foreachBatch.  Verdicts are micro-batch-split
     invariant (each doc is judged only against the static corpus), so the
     sink is checked by the dedup_incremental ORACLE VERBATIM — streaming
-    ≡ batch through storage."""
+    ≡ batch through storage.  The working directory (input files,
+    checkpoint, sink) is removed once the sink is read back into a local
+    checkpoint."""
+    import shutil
     import tempfile
 
     from dgraphpandas_spark.streaming.stream import stream_ingest_dedup
@@ -2075,21 +2078,24 @@ def q_stream_ingest_dedup(spark, sf_dir):
         )
     )
     tmp = tempfile.mkdtemp(prefix='stream_ingest_')
-    indir = os.path.join(tmp, 'in')
-    os.makedirs(indir)
-    for par in (0, 1):
-        new.filter(F.col('doc_id') % 2 == par).coalesce(1).write.mode('append').parquet(indir)
-    stream = (
-        spark.readStream.schema(new.schema)
-        .option('maxFilesPerTrigger', 1)
-        .parquet(indir)
-    )
-    out = os.path.join(tmp, 'verdicts')
-    q = stream_ingest_dedup(
-        stream, d, out, os.path.join(tmp, 'ck'), n=3, bands=4, threshold=0.5
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out)
+    try:
+        indir = os.path.join(tmp, 'in')
+        os.makedirs(indir)
+        for par in (0, 1):
+            new.filter(F.col('doc_id') % 2 == par).coalesce(1).write.mode('append').parquet(indir)
+        stream = (
+            spark.readStream.schema(new.schema)
+            .option('maxFilesPerTrigger', 1)
+            .parquet(indir)
+        )
+        out = os.path.join(tmp, 'verdicts')
+        q = stream_ingest_dedup(
+            stream, d, out, os.path.join(tmp, 'ck'), n=3, bands=4, threshold=0.5
+        )
+        q.awaitTermination()
+        return spark.read.parquet(out).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -9,10 +9,9 @@ render to string *at melt time* with per-source-dtype expressions (SURVEY §7
 "render-at-melt").  Everything here is built-in ``pyspark.sql.functions`` —
 JVM-side, whole-stage-codegen'd, no Python in the hot path.
 
-Known lexical deviations from CPython ``str()`` (documented, exercised in
-tests): float values needing scientific notation (|x| >= 1e16 or < 1e-4)
-render in Java style ``1.0E16`` vs Python ``1e+16``.  For exact pandas parity
-on such data use the Arrow melt strategy (operators/melt.py).
+Doubles render pandas-exact across the full range (``pandas_double_str_parts``);
+the one remaining lexical deviation from CPython ``str()`` is documented in
+``operators/melt.render_columns``.
 """
 from __future__ import annotations
 

@@ -1,30 +1,58 @@
-"""Horizontal transform: wide frame → melt → vertical chain.
+"""Horizontal transform: wide frame → per-branch melt → refine tail.
 
-Parity: /root/reference/dgraphpandas/strategies/horizontal.py:12-94.
-Stages: validate → (read csv if path) → no-data-column guard (P6) →
-date_fields parse (C2) → type_overrides cast (C1) → melt (R1) → tail-call
-vertical_transform.
+Parity: reference dgraphpandas/strategies/horizontal.py:12-94, which
+melts (R1) and tail-calls the vertical chain.  Stages: validate → (read csv
+if path) → no-data-column guard (P6) → date_fields parse (C2) →
+type_overrides cast (C1) → melt per branch → the vertical chain's per-branch
+tail (``finish_intrinsic`` / ``finish_edges``).
 
-Spark specifics: date parsing and casts are Column expressions on the wide
-frame (pushed into the same codegen stage as the melt's Expand); the melt
-pre-renders values so the long ``object`` column is a homogeneous string —
-see operators/melt.py.  Casting failures yield NULL (Spark semantics) where
-pandas would raise and the reference would ``exit()`` (horizontal.py:79);
-we consider silent-null the saner distributed behavior and document it.
+Spark specifics: every step of the vertical chain before the R4 split
+depends only on a row's *source column* (its predicate), so it is resolved
+here at plan time, once per column: the branch fate (C5 pre_rename → P1
+ignore_fields → R4 edge_fields, ``melt.branch_fates``), the renamed and
+'_id'-stripped predicate name (C5/C6, as the Expand's literal), the C7 object
+scrub (one ``regexp_replace`` per string-sourced column on the wide frame)
+and the C4 subject with its scrub.  Each branch then melts only its own
+columns (``melt.melt_branch``): ignored columns are never read, the edge
+branch reads the key columns plus its edge columns, and with unique
+subjects the dgraph.type row (R3) is one more projection of the intrinsic
+Expand.  The vertical (long-frame) entry keeps the per-row chain.
+
+Casting failures yield NULL (Spark semantics) where pandas would raise and
+the reference would ``exit()`` (horizontal.py:79); we consider silent-null
+the saner distributed behavior and document it.
 """
 from __future__ import annotations
 
-from typing import Any, Dict, List, Tuple, Union
+from functools import reduce
+from typing import Any, Dict, List, Optional, Tuple, Union
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import get_from_config
 from ..functions.strftime import strftime_to_spark
-from ..types import find_spark_type, is_datetime_type_name
-from .melt import downcast_forced_columns, melt
-from .vertical import vertical_transform
+from ..types import find_rdf_types, find_spark_type, is_datetime_type_name
+from .melt import (
+    EDGE,
+    INTRINSIC,
+    branch_fates,
+    downcast_forced_columns,
+    melt_branch,
+    render_columns,
+    resolve_edge_fields,
+)
+from .vertical import (
+    RefineOptions,
+    _expand_csv_edges,
+    _scrub_expr,
+    empty_triples,
+    finish_edges,
+    finish_intrinsic,
+    subject_expr,
+    type_rows,
+)
 
 
 def horizontal_transform(
@@ -41,13 +69,17 @@ def horizontal_transform(
     if not config_file_key:
         raise ValueError('config_file_key')
 
+    if get_from_config('melt_strategy', config, 'expressions', **kwargs) != 'expressions':
+        raise ValueError(
+            "melt_strategy was removed: the Arrow melt ('arrow') is gone and the "
+            "horizontal entry has one melt, the per-branch expressions unpivot"
+        )
+
     file_config: Dict[str, Any] = config['files'][config_file_key]
-    type_overrides: Dict[str, str] = dict(
-        get_from_config('type_overrides', file_config, {}, **kwargs)
-    )
+    o = RefineOptions.from_config(config, file_config, config_file_key, **kwargs)
+    type_overrides: Dict[str, str] = dict(o.type_overrides)
     subject_fields = get_from_config('subject_fields', file_config, **kwargs)
-    date_fields: Dict[str, Any] = get_from_config('date_fields', file_config, {}, **kwargs)
-    melt_strategy: str = get_from_config('melt_strategy', config, 'expressions', **kwargs)
+    date_fields: Dict[str, Any] = o.date_fields
 
     if isinstance(frame, str):
         # S1 — CSV scan (reference horizontal.py:35-38); header + inference
@@ -109,83 +141,123 @@ def horizontal_transform(
         c for c, t in type_overrides.items() if is_datetime_type_name(t)
     }
     value_vars = [c for c in frame.columns if c not in subject_fields]
+    dtypes = {f.name: f.dataType for f in frame.schema.fields}
 
-    # Post-filter scrub-downcast parity (see melt.downcast_forced_columns):
-    # resolve each column's branch fate with the same rules vertical_transform
-    # will use, then force float64 lexical form where the reference's
-    # Series.replace would downcast.
-    edge_fields = get_from_config('edge_fields', file_config, [], **kwargs)
-    if get_from_config('edge_id_convention', file_config, False, **kwargs):
-        # C12 acts pre-rename on the melted predicates == original col names
-        edge_fields = [c for c in value_vars if c.endswith('_id')]
-    elif callable(edge_fields):
-        edge_fields = edge_fields(frame) or []
-    pre_rename = get_from_config('pre_rename', file_config, {}, **kwargs)
+    # Each column's branch is fixed by the config alone (C5 → P1 → R4), so
+    # it is decided here, once; callables (C11) resolve against the wide
+    # frame.
+    edge_fields = resolve_edge_fields(o.edge_fields, o.edge_id_convention, value_vars, frame)
+    fates = branch_fates(value_vars, o.pre_rename, o.ignore_fields, edge_fields)
+    dgraph_type = o.dgraph_type(frame) if callable(o.dgraph_type) else o.dgraph_type
     force_double_cols = downcast_forced_columns(
-        dtypes={f.name: f.dataType for f in frame.schema.fields},
+        dtypes=dtypes,
         value_vars=value_vars,
         datetime_columns=datetime_cols,
-        pre_rename=pre_rename,
-        ignore_fields=get_from_config('ignore_fields', file_config, [], **kwargs),
-        edge_fields=edge_fields,
-        add_dgraph_type_records=get_from_config('add_dgraph_type_records', config, True, **kwargs),
-        scrub_intrinsic_object=bool(
-            get_from_config('illegal_characters_intrinsic_object', config, ['\"', '\\n', '\\r\\n'], **kwargs)
-        ),
-        scrub_edge_object=bool(
-            get_from_config('illegal_characters', config, ['%', '\\.', '\\s', '\"', '\\n', '\\r\\n'], **kwargs)
-        ),
+        fates=fates,
+        add_dgraph_type_records=o.add_dgraph_type_records,
+        scrub_intrinsic_object=bool(o.illegal_characters_intrinsic_object),
+        scrub_edge_object=bool(o.illegal_characters),
     )
 
-    # Subject precompute: build (and scrub, C7) the subject string ONCE on
-    # the wide frame so the melt's Expand replicates a finished string,
-    # instead of re-running concat_ws + regexp_replace on every melted row
-    # (M× per source row — measured 2× the whole melt-stage cost at 16M
-    # turns).  Identical lexical result: same subject_expr over the same
-    # key dtypes, same scrub alternation.  Skipped when dgraph_type is a
-    # callable (it must resolve against the long frame, vertical's
-    # contract).
-    from .vertical import _scrub_expr, subject_expr
+    # C4 + C7 subject: built and scrubbed ONCE per source row on the wide
+    # frame, so each Expand replicates a finished string instead of
+    # re-running concat_ws + regexp_replace on every melted row.
+    subj = subject_expr(list(subject_fields), o.key_seperator, dgraph_type, dtypes)
+    if o.illegal_characters:
+        subj = _scrub_expr(subj, o.illegal_characters)
+    staged, rendered, string_sources = render_columns(
+        frame.withColumn('__subject', subj), value_vars, datetime_cols, force_double_cols
+    )
 
-    dgraph_type = get_from_config('dgraph_type', file_config, config_file_key, **kwargs)
-    if callable(dgraph_type):
-        melt_id_vars = list(subject_fields)
-        internal_subject: Dict[str, Any] = {
-            '_wide_keys_df': frame.select(*subject_fields),
-        }
-    else:
-        key_seperator = get_from_config('key_separator', config, '_', **kwargs)
-        illegal_characters = get_from_config(
-            'illegal_characters', config, ['%', '\\.', '\\s', '\"', '\\n', '\\r\\n'], **kwargs
+    # C7 gating by final predicate name, as the long chain gates it:
+    # string-sourced columns, csv_edges and dgraph.type rows; edge names
+    # compare '_id'-stripped.  csv_edges rows are scrubbed after their
+    # split/strip, in the long frame; every other row is scrubbed here —
+    # per source column on the wide frame, or as a constant for the
+    # dgraph.type literal.
+    strip = o.strip_id_from_edge_names
+    # csv_edges match the unstripped name, so with csv_edges the C6 strip
+    # stays a long-frame step after the split; otherwise it is resolved
+    # into the melted predicate names
+    strip_late = strip and bool(o.csv_edges)
+    chars = {INTRINSIC: o.illegal_characters_intrinsic_object, EDGE: o.illegal_characters}
+
+    def final_name(pred: str, branch: str) -> str:
+        return pred.replace('_id', '') if branch == EDGE and strip else pred
+
+    def melted_name(pred: str, branch: str) -> str:
+        return pred if strip_late else final_name(pred, branch)
+
+    str_names = {o.pre_rename.get(c, c) for c in string_sources} | set(o.csv_edges)
+    if o.add_dgraph_type_records:
+        str_names.add('dgraph.type')
+    gate = {b: {final_name(p, b) for p in str_names} for b in (INTRINSIC, EDGE)}
+    long_gate = {b: {final_name(p, b) for p in o.csv_edges} for b in (INTRINSIC, EDGE)}
+
+    def scrubbed(value: Column, pred: str, branch: str) -> Column:
+        name = final_name(pred, branch)
+        if chars[branch] and name in gate[branch] and name not in long_gate[branch]:
+            return _scrub_expr(value, chars[branch])
+        return value
+
+    melted = [c for c in value_vars if fates[c] is not None]
+    wide = staged.select(
+        '__subject',
+        *[scrubbed(rendered[c], o.pre_rename.get(c, c), fates[c]).alias(c) for c in melted],
+    )
+    values: Dict[str, List[Column]] = {INTRINSIC: [], EDGE: []}
+    for c in melted:
+        values[fates[c]].append(F.col(c).alias(melted_name(o.pre_rename.get(c, c), fates[c])))
+
+    # R3 — dgraph.type rows land in the branch their predicate routes to.
+    # Without csv_edges/ignore_fields every source row keeps at least one
+    # long row, so the subjects are the wide frame's: with unique subjects
+    # the row is one more projection of that branch's Expand (no second
+    # scan, no union); otherwise a distinct over the wide subjects, or over
+    # the long rows when a stage before R3 may have removed a subject.
+    type_branch = EDGE if 'dgraph.type' in edge_fields else INTRINSIC
+    type_object = scrubbed(F.lit(dgraph_type), 'dgraph.type', type_branch)
+    wide_subjects = not (o.csv_edges or o.ignore_fields)
+    in_expand = o.add_dgraph_type_records and wide_subjects and o.assume_unique_subjects
+    if in_expand:
+        values[type_branch].append(type_object.alias('dgraph.type'))
+
+    longs: Dict[str, Optional[DataFrame]] = {}
+    for branch in (INTRINSIC, EDGE):
+        long = melt_branch(wide, '__subject', values[branch]) if values[branch] else None
+        if long is not None and o.csv_edges:
+            long = _expand_csv_edges(long, o.csv_edges, o.csv_edges_seperator)
+        longs[branch] = long
+
+    if o.add_dgraph_type_records and not in_expand:
+        if wide_subjects:
+            parts = [wide.select(F.col('__subject').alias('subject'))]
+        else:
+            parts = [lf.select('subject') for lf in longs.values() if lf is not None]
+        if parts:
+            subjects = reduce(DataFrame.unionByName, parts)
+            if not o.assume_unique_subjects:
+                subjects = subjects.distinct()
+            rows = type_rows(subjects, type_object)
+            long = longs[type_branch]
+            longs[type_branch] = rows if long is None else long.unionByName(rows)
+
+    spark = frame.sparkSession
+    rdf_map = find_rdf_types(type_overrides)
+    intrinsic = (
+        empty_triples(spark)
+        if longs[INTRINSIC] is None
+        else finish_intrinsic(
+            longs[INTRINSIC], o, rdf_map, datetime_cols,
+            scrub_subject=False, scrub_names=long_gate[INTRINSIC],
         )
-        wide_dtypes = {f.name: f.dataType for f in frame.schema.fields}
-        subj = subject_expr(list(subject_fields), key_seperator, dgraph_type, wide_dtypes)
-        if illegal_characters:
-            subj = _scrub_expr(subj, illegal_characters)
-        frame = frame.withColumn('__subject', subj)
-        melt_id_vars = ['__subject']
-        internal_subject = {
-            '_precomputed_subject': True,
-            '_wide_keys_df': frame.select('__subject'),
-        }
-
-    long_frame, string_sources = melt(
-        frame,
-        id_vars=melt_id_vars,
-        value_vars=value_vars,
-        datetime_columns=datetime_cols,
-        strategy=melt_strategy,
-        force_double_cols=force_double_cols,
     )
-
-    internal = dict(kwargs)
-    internal.update(
-        subject_fields=list(subject_fields),
-        type_overrides=type_overrides,
-        _object_rendered=True,
-        _string_source_predicates=string_sources,
-        _datetime_predicates=datetime_cols,
-        _predicate_universe=value_vars,
-        **internal_subject,
+    edges = (
+        empty_triples(spark)
+        if longs[EDGE] is None
+        else finish_edges(
+            longs[EDGE], o, strip_id=strip_late, scrub_subject=False,
+            scrub_names=long_gate[EDGE], string_names=gate[EDGE],
+        )
     )
-    return vertical_transform(long_frame, config, config_file_key, **internal)
+    return intrinsic, edges

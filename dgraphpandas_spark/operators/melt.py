@@ -3,29 +3,33 @@
 Reference: ``frame.melt(id_vars=subject_fields, var_name='predicate',
 value_name='object')`` at /root/reference/dgraphpandas/strategies/horizontal.py:88-92.
 
-Spark design: values are rendered to their pandas-compatible lexical string
-form *per source column* first (functions/render.py), then a single
-``DataFrame.unpivot`` emits the long frame.  That is one scan + one Expand
-node — no per-column union, no shuffle, fully whole-stage-codegen'd, and
-column pruning still reaches the parquet scan for downstream branches that
-only touch a subset of predicates.
-
-An alternative ``arrow`` strategy runs the reference's own pandas idioms per
-partition via ``mapInPandas`` (Arrow-batched, no per-row Python) for exact
-lexical parity on pathological float/scientific-notation data.
+Spark design: every source column's branch (intrinsic, edge, or ignored)
+is fixed by the config alone (``branch_fates``), so the horizontal entry
+decides it at plan time and melts each branch on its own.  Values are
+rendered to their pandas-compatible lexical string form *per source
+column* on the wide frame first (``render_columns``, functions/render.py);
+then ``melt_branch`` emits one branch's long rows with a
+``DataFrame.unpivot`` over that branch's columns only.  Each branch is one
+scan + one Expand node: no union of per-column frames, no shuffle, fully
+whole-stage-codegen'd, and the scan's ``ReadSchema`` holds only the key
+columns plus the branch's own columns, so ignored columns are never read
+and the edge branch never reads intrinsic text.
 
 Row ordering differs from pandas melt (which is column-major); triple
 comparison is set-based (SURVEY §2.7 W4).
 """
 from __future__ import annotations
 
-from typing import Iterable, List, Optional, Sequence, Set, Tuple
+from typing import Callable, Dict, Iterable, List, Optional, Sequence, Set, Tuple, Union
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.render import render_value
+
+INTRINSIC = 'intrinsic'
+EDGE = 'edge'
 
 
 def _dtype_class(dtype: T.DataType, is_declared_dt: bool) -> str:
@@ -42,13 +46,53 @@ def _dtype_class(dtype: T.DataType, is_declared_dt: bool) -> str:
     return 'other'
 
 
+def resolve_edge_fields(
+    edge_fields: Union[Sequence[str], Callable, None],
+    edge_id_convention: bool,
+    value_vars: Sequence[str],
+    frame: Optional[DataFrame] = None,
+) -> List[str]:
+    """The edge predicate list of the horizontal entry.
+
+    C12 (``edge_id_convention``, reference vertical_helpers.py:299-305)
+    acts on the melted predicates before pre_rename, i.e. on the original
+    column names; a callable (C11) is resolved once, against the wide frame.
+    """
+    if edge_id_convention:
+        return [c for c in value_vars if c.endswith('_id')]
+    if callable(edge_fields):
+        return list(edge_fields(frame) or [])
+    return list(edge_fields or [])
+
+
+def branch_fates(
+    value_vars: Sequence[str],
+    pre_rename: Optional[Dict[str, str]],
+    ignore_fields: Iterable[str],
+    edge_fields: Iterable[str],
+) -> Dict[str, Optional[str]]:
+    """Each source column's branch: ``INTRINSIC``, ``EDGE`` or ``None``
+    (ignored, never melted).
+
+    The vertical chain applies pre_rename (C5), then drops ignore_fields
+    (P1), then splits on edge_fields (R4) — all three by the *renamed*
+    predicate, so a rename can move a column into or out of either list.
+    """
+    pre_rename = pre_rename or {}
+    ignore = set(ignore_fields or ())
+    edges = set(edge_fields or ())
+    fates: Dict[str, Optional[str]] = {}
+    for c in value_vars:
+        pred = pre_rename.get(c, c)
+        fates[c] = None if pred in ignore else EDGE if pred in edges else INTRINSIC
+    return fates
+
+
 def downcast_forced_columns(
     dtypes: dict,
     value_vars: Sequence[str],
     datetime_columns: Iterable[str],
-    pre_rename: dict,
-    ignore_fields: Sequence[str],
-    edge_fields: Sequence[str],
+    fates: Dict[str, Optional[str]],
     add_dgraph_type_records: bool,
     scrub_intrinsic_object: bool = True,
     scrub_edge_object: bool = True,
@@ -64,9 +108,9 @@ def downcast_forced_columns(
     ``[0, 0.5] → float64``, but any bool or str in the mix keeps object
     dtype and per-value ``str()`` forms.
 
-    Every source column's branch (intrinsic / edge / dropped) is known at
-    plan time, so the downcast is decided statically here (single-chunk
-    semantics; the reference decides per chunk, so its output is
+    ``fates`` (``branch_fates``) fixes every column's branch at plan time,
+    so the downcast is decided statically here (single-chunk semantics;
+    the reference decides per chunk, so its output is
     chunk-boundary-dependent on such data — documented deviation).
     dgraph.type rows are string-valued and land in intrinsic, so
     ``add_dgraph_type_records`` blocks the intrinsic downcast.
@@ -75,37 +119,30 @@ def downcast_forced_columns(
     classes = {c: _dtype_class(dtypes[c], c in dt_cols) for c in value_vars}
     if set(classes.values()) <= {'int', 'float', 'bool'}:
         return set()  # float/intbool melt promotion modes already model this
-    pre_rename = pre_rename or {}
-    ignore = set(ignore_fields or ())
-    edge_set = set(edge_fields or ())
     forced: Set[str] = set()
-    for branch in ('intrinsic', 'edge'):
-        if branch == 'intrinsic' and (add_dgraph_type_records or not scrub_intrinsic_object):
+    for branch in (INTRINSIC, EDGE):
+        if branch == INTRINSIC and (add_dgraph_type_records or not scrub_intrinsic_object):
             continue
-        if branch == 'edge' and not scrub_edge_object:
+        if branch == EDGE and not scrub_edge_object:
             continue
-        fated = []
-        for c in value_vars:
-            pred = pre_rename.get(c, c)
-            if pred in ignore:
-                continue
-            if (pred in edge_set) != (branch == 'edge'):
-                continue
-            fated.append(c)
+        fated = [c for c in value_vars if fates[c] == branch]
         branch_classes = {classes[c] for c in fated}
         if fated and branch_classes <= {'int', 'float'} and 'float' in branch_classes:
             forced |= {c for c in fated if classes[c] == 'int'}
     return forced
 
 
-def melt_expressions(
+def render_columns(
     df: DataFrame,
-    id_vars: Sequence[str],
-    value_vars: Optional[Sequence[str]] = None,
+    value_vars: Sequence[str],
     datetime_columns: Iterable[str] = (),
     force_double_cols: Iterable[str] = (),
-) -> Tuple[DataFrame, Set[str]]:
-    """Wide→long with render-at-melt.  Returns (long_df, string_source_cols).
+) -> Tuple[DataFrame, Dict[str, Column], Set[str]]:
+    """Render-at-melt: each value column's lexical string form.
+
+    Returns ``(staged_df, rendered, string_source_cols)``: ``rendered``
+    maps each value column to its string expression over ``staged_df``
+    (``df`` plus the staged ``__pds_*`` float-repr attributes).
 
     ``datetime_columns`` are rendered ISO-8601 (reference C3); other
     timestamps render with ``str()`` semantics (space separator).
@@ -128,14 +165,14 @@ def melt_expressions(
     (functions/render.py: positional window rewrite + shortest-digits
     search); the one remaining deviation is non-integral or ≥2^63 doubles
     in the scientific range, where Java's digits can carry one extra digit
-    (<0.5% of such values; both forms round-trip to the same double).  The
-    arrow strategy has no deviation.
+    (<0.5% of such values; both forms round-trip to the same double).
+
+    The promotion mode is a property of the whole frame, so it is decided
+    over *all* value columns — also when the branches are melted apart.
     """
-    value_vars = list(value_vars) if value_vars is not None else [c for c in df.columns if c not in id_vars]
+    value_vars = list(value_vars)
     if not value_vars:
-        raise ValueError(
-            f'no data fields: subject_fields={list(id_vars)}, columns={df.columns}'
-        )
+        raise ValueError(f'no data fields: columns={df.columns}')
     dt_cols = set(datetime_columns)
     dtypes = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
 
@@ -222,83 +259,17 @@ def melt_expressions(
             )
         return render_value(col, dtype, as_datetime=(c in dt_cols))
 
-    rendered = staged.select(
-        *[F.col(c) for c in id_vars],
-        *[_render(c).alias(c) for c in value_vars],
-    )
-    long_df = rendered.unpivot(
-        ids=list(id_vars), values=value_vars, variableColumnName='predicate', valueColumnName='object'
-    )
-    return long_df, string_sources
+    return staged, {c: _render(c) for c in value_vars}, string_sources
 
 
-def melt_arrow(
-    df: DataFrame,
-    id_vars: Sequence[str],
-    value_vars: Optional[Sequence[str]] = None,
-    datetime_columns: Iterable[str] = (),
-    force_double_cols: Iterable[str] = (),
-) -> Tuple[DataFrame, Set[str]]:
-    """Arrow-batched melt running pandas' own ``melt`` + stringify per
-    partition (``mapInPandas``) — exact lexical parity with the reference,
-    at Arrow-transfer cost.  No per-row Python: one pandas call per batch.
-    """
-    import pandas as pd  # noqa: F401 (executor-side)
-
-    value_vars = list(value_vars) if value_vars is not None else [c for c in df.columns if c not in id_vars]
-    if not value_vars:
-        raise ValueError(
-            f'no data fields: subject_fields={list(id_vars)}, columns={df.columns}'
-        )
-    dt_cols = set(datetime_columns)
-    dtypes = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
-    string_sources = {c for c in value_vars if isinstance(dtypes[c], T.StringType)}
-
-    id_fields = [df.schema[c] for c in id_vars]
-    out_schema = T.StructType(
-        list(id_fields)
-        + [T.StructField('predicate', T.StringType()), T.StructField('object', T.StringType())]
-    )
-    ids = list(id_vars)
-    values = list(value_vars)
-    force_double = set(force_double_cols)
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            m = pdf[ids + values].melt(id_vars=ids, var_name='predicate', value_name='object')
-            obj = m['object']
-            mask = obj.notna()
-            if force_double:
-                # post-filter scrub downcast parity (downcast_forced_columns)
-                fsel = mask & m['predicate'].isin(force_double)
-                if bool(fsel.any()):
-                    obj = obj.copy()
-                    obj.loc[fsel] = obj.loc[fsel].astype('float64')
-            is_dt = m['predicate'].isin(dt_cols) if dt_cols else None
-            rendered = pd.Series([None] * len(m), index=m.index, dtype='object')
-            if is_dt is not None and bool(is_dt.any()):
-                sel = mask & is_dt
-                rendered.loc[sel] = obj.loc[sel].map(lambda x: x.isoformat())
-                sel2 = mask & ~is_dt
-                rendered.loc[sel2] = obj.loc[sel2].map(str)
-            else:
-                rendered.loc[mask] = obj.loc[mask].map(str)
-            m['object'] = rendered
-            yield m
-
-    return df.mapInPandas(gen, schema=out_schema), string_sources
+def melt_branch(df: DataFrame, subject: str, values: Sequence[Column]) -> DataFrame:
+    """One branch's long frame ``(subject, predicate, object)``: a single
+    unpivot (one Expand) over this branch's value expressions only.  Each
+    expression's alias is its predicate, so renames resolve at plan time
+    (aliases may repeat) and a literal value constant-folds into the
+    Expand's projection."""
+    return df.unpivot(
+        ids=[subject], values=list(values), variableColumnName='predicate', valueColumnName='object'
+    ).withColumnRenamed(subject, 'subject')
 
 
-def melt(
-    df: DataFrame,
-    id_vars: Sequence[str],
-    value_vars: Optional[Sequence[str]] = None,
-    datetime_columns: Iterable[str] = (),
-    strategy: str = 'expressions',
-    force_double_cols: Iterable[str] = (),
-) -> Tuple[DataFrame, Set[str]]:
-    if strategy == 'arrow':
-        return melt_arrow(df, id_vars, value_vars, datetime_columns, force_double_cols)
-    return melt_expressions(df, id_vars, value_vars, datetime_columns, force_double_cols)

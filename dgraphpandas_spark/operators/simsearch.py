@@ -335,7 +335,12 @@ def train_pq_codebooks(
     corpus scans).  Per-subspace results are identical to independent
     training: membership, seeds and the 6-dp rounding are all
     subspace-local; the oracle replays each subspace separately.
+
+    Raises ``ValueError`` unless ``m_sub`` divides ``dim``: the subspaces
+    must tile the vector, or trailing dimensions would be silently dropped.
     """
+    if m_sub <= 0 or dim % m_sub:
+        raise ValueError(f'm_sub={m_sub} must divide dim={dim} into equal subspaces')
     d_sub = dim // m_sub
     seed_rows = (
         df.select(F.col(id_col).alias('id'), F.col(vec_col).alias('v'))

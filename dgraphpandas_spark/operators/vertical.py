@@ -15,8 +15,9 @@ Stage map (reference file:line → here):
   csv_edges (R2)           vertical_helpers.py:14-38   → split+explode_outer+trim
   join key fields (C4)     vertical_helpers.py:41-67   → concat_ws, no row apply
   dgraph.type (R3)         vertical_helpers.py:70-84   → distinct subjects + union
-  split intrinsic/edges(R4) vertical_helpers.py:87-113 → two filters (disjoint
-                            column pruning ≈ one scan of IO at the source)
+  split intrinsic/edges(R4) vertical_helpers.py:87-113 → two filters over the
+                            same long frame, so each branch scans every
+                            column the long frame was built from
   '_id' strip (C6)         vertical_helpers.py:105-106 → F.replace (substring-
                             anywhere, matching pandas str.replace regex=False)
   rdf types (C8)           vertical_helpers.py:116-134 → map-literal + coalesce
@@ -27,10 +28,15 @@ Stage map (reference file:line → here):
   NA drops (P2)            vertical_helpers.py:201-213 → filter isNotNull
   edge qualify (C9)        vertical_helpers.py:216-249 → when/otherwise exprs
   projection (P4)          vertical.py:112-113         → select
+
+The steps after the R4 split are ``finish_intrinsic`` / ``finish_edges``,
+shared with the horizontal entry, which resolves every step before the
+split at plan time per source column instead (operators/horizontal.py).
 """
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass
 from typing import Any, Dict, Iterable, List, Optional, Set, Tuple
 
 from pyspark.sql import Column, DataFrame
@@ -43,6 +49,8 @@ from ..functions.strftime import strftime_to_spark
 from ..types import DEFAULT_RDF_TYPE, find_rdf_types
 
 TRIPLE_COLUMNS = ['subject', 'predicate', 'object', 'type']
+ILLEGAL_CHARACTERS = ['%', '\\.', '\\s', '\"', '\\n', '\\r\\n']
+ILLEGAL_CHARACTERS_INTRINSIC_OBJECT = ['\"', '\\n', '\\r\\n']
 
 
 def _map_literal_lookup(col: Column, mapping: Dict[str, str]) -> Column:
@@ -129,9 +137,210 @@ def _scrub_expr(col: Column, characters: List[str]) -> Column:
     return F.regexp_replace(col, '(?U)' + '|'.join(characters), '')
 
 
-def _empty_triples(frame: DataFrame) -> DataFrame:
+def empty_triples(spark) -> DataFrame:
     schema = T.StructType([T.StructField(c, T.StringType()) for c in TRIPLE_COLUMNS])
-    return frame.sparkSession.createDataFrame([], schema)
+    return spark.createDataFrame([], schema)
+
+
+@dataclass(frozen=True)
+class RefineOptions:
+    """The chain's config options, read once with the reference's
+    precedence (kwargs > config > default; config.py:9-21) and shared by
+    both entries."""
+
+    edge_fields: Any
+    dgraph_type: Any
+    key_seperator: str
+    add_dgraph_type_records: bool
+    strip_id_from_edge_names: bool
+    drop_na_intrinsic_objects: bool
+    drop_na_edge_objects: bool
+    illegal_characters: List[str]
+    illegal_characters_intrinsic_object: List[str]
+    csv_edges: List[str]
+    csv_edges_seperator: str
+    ignore_fields: List[str]
+    override_edge_name: Dict[str, Any]
+    pre_rename: Dict[str, str]
+    type_overrides: Dict[str, str]
+    date_fields: Dict[str, Any]
+    edge_id_convention: bool
+    assume_unique_subjects: bool
+
+    @classmethod
+    def from_config(
+        cls, config: Dict[str, Any], file_config: Dict[str, Any], config_file_key: str, **kwargs
+    ) -> 'RefineOptions':
+        def top(key, default):
+            return get_from_config(key, config, default, **kwargs)
+
+        def per_file(key, default):
+            return get_from_config(key, file_config, default, **kwargs)
+
+        return cls(
+            edge_fields=per_file('edge_fields', []),
+            dgraph_type=per_file('dgraph_type', config_file_key),
+            key_seperator=top('key_separator', '_'),
+            add_dgraph_type_records=top('add_dgraph_type_records', True),
+            strip_id_from_edge_names=top('strip_id_from_edge_names', True),
+            drop_na_intrinsic_objects=top('drop_na_intrinsic_objects', True),
+            drop_na_edge_objects=top('drop_na_edge_objects', True),
+            illegal_characters=top('illegal_characters', ILLEGAL_CHARACTERS),
+            illegal_characters_intrinsic_object=top(
+                'illegal_characters_intrinsic_object', ILLEGAL_CHARACTERS_INTRINSIC_OBJECT
+            ),
+            csv_edges=per_file('csv_edges', []),
+            csv_edges_seperator=per_file('csv_edges_seperator', ','),
+            ignore_fields=per_file('ignore_fields', []),
+            override_edge_name=per_file('override_edge_name', {}),
+            pre_rename=per_file('pre_rename', {}),
+            type_overrides=per_file('type_overrides', {}),
+            date_fields=per_file('date_fields', {}),
+            edge_id_convention=per_file('edge_id_convention', False),
+            assume_unique_subjects=top('assume_unique_subjects', False),
+        )
+
+
+def type_rows(subjects: DataFrame, dgraph_type: Column) -> DataFrame:
+    """R3 — one ``dgraph.type`` row per ``subject`` row
+    (vertical_helpers.py:70-84)."""
+    return subjects.select(
+        'subject', F.lit('dgraph.type').alias('predicate'), dgraph_type.alias('object')
+    )
+
+
+def _gated_scrub(df: DataFrame, field: str, chars: List[str], names: Optional[Iterable[str]]) -> DataFrame:
+    """C7 over ``field`` for rows whose predicate is in ``names`` (``None``:
+    every row) — pandas' ``Series.replace`` only rewrites str values."""
+    if not chars:
+        return df
+    if names is None:
+        return df.withColumn(field, _scrub_expr(F.col(field), chars))
+    names = sorted(names)
+    if not names:
+        return df
+    return df.withColumn(
+        field,
+        F.when(F.col('predicate').isin(names), _scrub_expr(F.col(field), chars)).otherwise(F.col(field)),
+    )
+
+
+def finish_intrinsic(
+    frame: DataFrame,
+    o: RefineOptions,
+    rdf_map: Dict[str, str],
+    datetime_predicates: Set[str],
+    scrub_subject: bool,
+    scrub_names: Optional[Iterable[str]],
+) -> DataFrame:
+    """The intrinsic branch after the R4 split: C8 types, C2/C3/P3 dates,
+    C7 scrubs, P2 NA drop, P4 projection.  ``scrub_names`` gates the
+    object scrub (``None``: every row)."""
+    intrinsic = frame
+    # C8 — RDF literal types on intrinsic
+    if rdf_map:
+        intrinsic = intrinsic.withColumn(
+            'type',
+            F.coalesce(_map_literal_lookup(F.col('predicate'), rdf_map), F.lit(DEFAULT_RDF_TYPE)),
+        )
+    else:
+        intrinsic = intrinsic.withColumn('type', F.lit(DEFAULT_RDF_TYPE))
+
+    # C2 (vertical path) + C3 + P3 — date parse/ISO render/NaT drop
+    if o.date_fields:
+        obj = F.col('object')
+        for dcol, opts in o.date_fields.items():
+            if dcol in datetime_predicates:
+                continue  # already ISO-rendered at melt
+            fmt = (opts or {}).get('format')
+            parsed = (
+                F.to_timestamp(F.col('object'), strftime_to_spark(fmt))
+                if fmt
+                else F.to_timestamp(F.col('object'))
+            )
+            obj = F.when(F.col('predicate') == dcol, iso_datetime(parsed)).otherwise(obj)
+        intrinsic = intrinsic.withColumn('object', obj)
+        intrinsic = intrinsic.withColumn(
+            'type',
+            F.when(
+                F.col('predicate').isin(list(o.date_fields)), F.lit('<xs:dateTime>')
+            ).otherwise(F.col('type')),
+        )
+    # P3 — NaT rows are dropped unconditionally (vertical_helpers.py:163)
+    intrinsic = intrinsic.filter(
+        ~((F.col('type') == '<xs:dateTime>') & F.col('object').isNull())
+    )
+
+    if scrub_subject:
+        intrinsic = _gated_scrub(intrinsic, 'subject', o.illegal_characters, None)
+    # P2 — NA drop BEFORE the object scrub: regexp_replace preserves
+    # nullness, so the results are identical, but filtering first keeps
+    # Catalyst from substituting the scrub regex into the Filter predicate
+    # (which would run the regexp twice per row — once to null-check, once
+    # to project).
+    if o.drop_na_intrinsic_objects:
+        intrinsic = intrinsic.filter(F.col('object').isNotNull())
+    intrinsic = _gated_scrub(intrinsic, 'object', o.illegal_characters_intrinsic_object, scrub_names)
+    return intrinsic.select(*TRIPLE_COLUMNS)
+
+
+def finish_edges(
+    frame: DataFrame,
+    o: RefineOptions,
+    strip_id: bool,
+    scrub_subject: bool,
+    scrub_names: Optional[Iterable[str]],
+    string_names: Optional[Iterable[str]],
+) -> DataFrame:
+    """The edge branch after the R4 split: C6 '_id' strip (when
+    ``strip_id``), C7 scrubs, P2 NA drop, C9 qualification.
+    ``scrub_names`` gates the object scrub and ``string_names`` picks the
+    string-sourced null form, both by final (stripped) predicate name
+    (``None``: every row)."""
+    edges = frame
+    if strip_id:
+        # C6 — substring-anywhere, matching pandas str.replace regex=False
+        edges = edges.withColumn('predicate', F.replace(F.col('predicate'), F.lit('_id'), F.lit('')))
+    if scrub_subject:
+        edges = _gated_scrub(edges, 'subject', o.illegal_characters, None)
+    # NA drop before the object scrub — same double-regexp avoidance as the
+    # intrinsic branch (scrub preserves nullness)
+    if o.drop_na_edge_objects:
+        edges = edges.filter(F.col('object').isNotNull())
+    edges = _gated_scrub(edges, 'object', o.illegal_characters, scrub_names)
+
+    # C9 — edge object qualification (vertical_helpers.py:216-249), pure
+    # expressions instead of the reference's in-place row mutation.
+    # str(None)='None' for string-sourced predicates, str(nan)='nan' for
+    # numeric ones (only reachable when drop_na_edge_objects=False).
+    key_seperator = o.key_seperator
+    if string_names is None:
+        null_form = F.lit('None')
+    else:
+        string_names = sorted(string_names)
+        null_form = (
+            F.when(F.col('predicate').isin(string_names), F.lit('None')).otherwise(F.lit('nan'))
+            if string_names
+            else F.lit('nan')
+        )
+    obj_safe = F.coalesce(F.col('object'), null_form)
+    if o.override_edge_name:
+        obj_expr: Column = F.concat(F.col('predicate'), F.lit(key_seperator), obj_safe)
+        pred_expr: Column = F.col('predicate')
+        for pred, ov in o.override_edge_name.items():
+            cond = F.col('predicate') == pred
+            obj_expr = F.when(
+                cond, F.concat(F.lit(ov['target_node_type'] + key_seperator), obj_safe)
+            ).otherwise(obj_expr)
+            if 'predicate' in ov:
+                pred_expr = F.when(cond, F.lit(ov['predicate'])).otherwise(pred_expr)
+        edges = edges.withColumn('object', obj_expr).withColumn('predicate', pred_expr)
+    else:
+        edges = edges.withColumn(
+            'object', F.concat(F.col('predicate'), F.lit(key_seperator), obj_safe)
+        )
+
+    return edges.withColumn('type', F.lit(None).cast('string')).select(*TRIPLE_COLUMNS)
 
 
 def vertical_transform(
@@ -144,17 +353,10 @@ def vertical_transform(
     ``DataFrame[subject, predicate, object, type]`` string-typed.
 
     Accepts the reference's config schema verbatim
-    (/root/reference/docs/configuration.md).  Internal kwargs set by
-    ``horizontal_transform``:
-
-    - ``_object_rendered``: object column already lexically rendered
-    - ``_string_source_predicates``: predicates sourced from string columns
-      (scrub gating)
-    - ``_datetime_predicates``: predicates already ISO-rendered
-    - ``_predicate_universe``: static predicate list (edge_id_convention
-      without a driver round-trip)
-    - ``_wide_keys_df``: pre-melt key columns for the R3 distinct (R×M
-      cheaper than distinct over the long frame)
+    (reference docs/configuration.md).  The horizontal entry does
+    not come through here: it resolves each source column's branch at plan
+    time and runs only the per-branch tail (``finish_intrinsic`` /
+    ``finish_edges``) — see horizontal.py.
     """
     if frame is None:
         raise ValueError('frame')
@@ -176,39 +378,15 @@ def vertical_transform(
         from ..plans.pipeline import _read_source
         frame = _read_source(SparkSession.getActiveSession(), frame, file_config, **kwargs)
 
+    o = RefineOptions.from_config(config, file_config, config_file_key, **kwargs)
     subject_fields = get_from_config('subject_fields', file_config, **kwargs)
-    edge_fields = get_from_config('edge_fields', file_config, [], **kwargs)
-    dgraph_type = get_from_config('dgraph_type', file_config, config_file_key, **kwargs)
     predicate_field = get_from_config('predicate_field', file_config, 'predicate', **kwargs)
     object_field = get_from_config('object_field', file_config, 'object', **kwargs)
-    key_seperator = get_from_config('key_separator', config, '_', **kwargs)
-    add_dgraph_type_records = get_from_config('add_dgraph_type_records', config, True, **kwargs)
-    strip_id_from_edge_names = get_from_config('strip_id_from_edge_names', config, True, **kwargs)
-    drop_na_intrinsic_objects = get_from_config('drop_na_intrinsic_objects', config, True, **kwargs)
-    drop_na_edge_objects = get_from_config('drop_na_edge_objects', config, True, **kwargs)
-    illegal_characters = get_from_config(
-        'illegal_characters', config, ['%', '\\.', '\\s', '\"', '\\n', '\\r\\n'], **kwargs
-    )
-    illegal_characters_intrinsic_object = get_from_config(
-        'illegal_characters_intrinsic_object', config, ['\"', '\\n', '\\r\\n'], **kwargs
-    )
-    csv_edges = get_from_config('csv_edges', file_config, [], **kwargs)
-    csv_edges_seperator = get_from_config('csv_edges_seperator', file_config, ',', **kwargs)
-    ignore_fields = get_from_config('ignore_fields', file_config, [], **kwargs)
-    override_edge_name = get_from_config('override_edge_name', file_config, {}, **kwargs)
-    pre_rename = get_from_config('pre_rename', file_config, {}, **kwargs)
-    type_overrides = get_from_config('type_overrides', file_config, {}, **kwargs)
-    date_fields = get_from_config('date_fields', file_config, {}, **kwargs)
-    edge_id_convention = get_from_config('edge_id_convention', file_config, False, **kwargs)
-    assume_unique_subjects = get_from_config('assume_unique_subjects', config, False, **kwargs)
+    edge_fields = o.edge_fields
 
-    predicate_universe: Optional[List[str]] = kwargs.get('_predicate_universe')
-
-    if edge_id_convention:
+    if o.edge_id_convention:
         # C12 — parity: vertical_helpers.py:299-305, wired vertical.py:65-67
-        def _find_id_edges(fr: DataFrame) -> List[str]:
-            if predicate_universe is not None:
-                return [p for p in predicate_universe if p.endswith('_id')]
+        def edge_fields(fr: DataFrame) -> List[str]:
             pred_col = predicate_field if predicate_field in fr.columns else 'predicate'
             return [
                 r[0]
@@ -218,8 +396,6 @@ def vertical_transform(
                 .collect()
             ]
 
-        edge_fields = _find_id_edges
-
     # C11 — callable config resolution (vertical_helpers.py:266-281).
     # Callables receive the Spark DataFrame (schema-level introspection).
     def _resolve(v):
@@ -227,7 +403,7 @@ def vertical_transform(
 
     key: List[str] = _resolve(subject_fields)
     edges_list: List[str] = _resolve(edge_fields) or []
-    dgraph_type = _resolve(dgraph_type)
+    dgraph_type = _resolve(o.dgraph_type)
     predicate_field = _resolve(predicate_field)
     object_field = _resolve(object_field)
 
@@ -240,237 +416,92 @@ def vertical_transform(
 
     frame = frame.withColumnsRenamed({predicate_field: 'predicate', object_field: 'object'})
 
-    rdf_map = find_rdf_types(type_overrides)
-    datetime_predicates: Set[str] = set(kwargs.get('_datetime_predicates', set()))
-    string_sources: Set[str] = set(kwargs.get('_string_source_predicates', set()))
+    rdf_map = find_rdf_types(o.type_overrides)
+    datetime_predicates: Set[str] = set()
+    string_sources: Set[str] = set()
 
-    # Vertical entry: lexically render the object column (horizontal entry
-    # arrives pre-rendered by the melt).
-    if not kwargs.get('_object_rendered', False):
-        obj_type = frame.schema['object'].dataType
-        dt_preds = set(date_fields) | {p for p, t in rdf_map.items() if t == '<xs:dateTime>'}
-        if isinstance(obj_type, (T.TimestampType, T.TimestampNTZType)):
-            frame = frame.withColumn(
-                'object',
-                F.when(F.col('predicate').isin(list(dt_preds)), iso_datetime(F.col('object')))
-                .otherwise(render_value(F.col('object'), obj_type)),
-            )
-            datetime_predicates |= dt_preds
-        else:
-            if isinstance(obj_type, T.StringType):
-                string_sources |= {'*'}  # every predicate is string-sourced
-            elif isinstance(obj_type, (T.FloatType, T.DoubleType)):
-                # stage the double-repr inputs as attributes: the inlined
-                # shortest-repr search exceeds janino's 64 KB method limit
-                # and drops the stage out of codegen (see melt.py)
-                from ..functions.render import (
-                    pandas_double_str_parts, sci_staged_cols, sci_staged_k,
-                )
+    # Lexically render the object column.
+    obj_type = frame.schema['object'].dataType
+    dt_preds = set(o.date_fields) | {p for p, t in rdf_map.items() if t == '<xs:dateTime>'}
+    if isinstance(obj_type, (T.TimestampType, T.TimestampNTZType)):
+        frame = frame.withColumn(
+            'object',
+            F.when(F.col('predicate').isin(list(dt_preds)), iso_datetime(F.col('object')))
+            .otherwise(render_value(F.col('object'), obj_type)),
+        )
+        datetime_predicates |= dt_preds
+    elif isinstance(obj_type, T.StringType):
+        string_sources.add('*')  # every predicate is string-sourced
+    elif isinstance(obj_type, (T.FloatType, T.DoubleType)):
+        # stage the double-repr inputs as attributes: the inlined
+        # shortest-repr search exceeds janino's 64 KB method limit
+        # and drops the stage out of codegen (see melt.py)
+        from ..functions.render import (
+            pandas_double_str_parts, sci_staged_cols, sci_staged_k,
+        )
 
-                frame = (
-                    frame.withColumn('__pds_d', F.col('object').cast('double'))
-                    .withColumn('__pds_s', F.col('__pds_d').cast('string'))
-                )
-                g, e = sci_staged_cols(F.col('__pds_d'), F.col('__pds_s'))
-                frame = frame.withColumn('__pds_g', g).withColumn('__pds_e', e)
-                frame = frame.withColumn(
-                    '__pds_k',
-                    sci_staged_k(
-                        F.col('__pds_d'), F.col('__pds_s'),
-                        F.col('__pds_g'), F.col('__pds_e'),
-                    ),
-                )
-                frame = frame.withColumn(
-                    'object',
-                    pandas_double_str_parts(
-                        F.col('__pds_d'), F.col('__pds_s'),
-                        ds=F.col('__pds_g'), expn=F.col('__pds_e'),
-                        k=F.col('__pds_k'),
-                    ),
-                ).drop('__pds_d', '__pds_s', '__pds_g', '__pds_e', '__pds_k')
-            else:
-                frame = frame.withColumn('object', render_value(F.col('object'), obj_type))
+        frame = (
+            frame.withColumn('__pds_d', F.col('object').cast('double'))
+            .withColumn('__pds_s', F.col('__pds_d').cast('string'))
+        )
+        g, e = sci_staged_cols(F.col('__pds_d'), F.col('__pds_s'))
+        frame = frame.withColumn('__pds_g', g).withColumn('__pds_e', e)
+        frame = frame.withColumn(
+            '__pds_k',
+            sci_staged_k(
+                F.col('__pds_d'), F.col('__pds_s'),
+                F.col('__pds_g'), F.col('__pds_e'),
+            ),
+        )
+        frame = frame.withColumn(
+            'object',
+            pandas_double_str_parts(
+                F.col('__pds_d'), F.col('__pds_s'),
+                ds=F.col('__pds_g'), expn=F.col('__pds_e'),
+                k=F.col('__pds_k'),
+            ),
+        ).drop('__pds_d', '__pds_s', '__pds_g', '__pds_e', '__pds_k')
+    else:
+        frame = frame.withColumn('object', render_value(F.col('object'), obj_type))
 
     dtypes = {f.name: f.dataType for f in frame.schema.fields}
 
-    def _apply_rename(name: str) -> str:
-        return pre_rename.get(name, name) if pre_rename else name
+    frame = _rename_predicates(frame, o.pre_rename)
+    frame = _ignore_fields(frame, o.ignore_fields)
+    frame = _expand_csv_edges(frame, o.csv_edges, o.csv_edges_seperator)
+    string_sources |= set(o.csv_edges)
 
-    # Scrub gating tracks *values*, so renamed predicates keep their
-    # string-sourced-ness; date_fields masks stay keyed by original names to
-    # match the reference (its _format_date_fields at vertical_helpers.py:149
-    # masks on post-rename predicates with pre-rename keys — a rename of a
-    # date field therefore misses, same as here).
-    string_sources = {_apply_rename(p) if p != '*' else p for p in string_sources}
-
-    frame = _rename_predicates(frame, pre_rename)
-    frame = _ignore_fields(frame, ignore_fields)
-    frame = _expand_csv_edges(frame, csv_edges, csv_edges_seperator)
-    string_sources |= set(csv_edges)
-
-    # C4 — subject key concat, then drop key columns.  The horizontal entry
-    # precomputes (and pre-scrubs) the subject on the wide frame so the melt
-    # replicates a finished string (see horizontal.py); the vertical entry
-    # builds it here per long row.
-    precomputed_subject = bool(kwargs.get('_precomputed_subject', False))
-    if precomputed_subject:
-        frame = frame.select(
-            F.col('__subject').alias('subject'), 'predicate', 'object'
-        )
-    else:
-        frame = frame.select(
-            subject_expr(key, key_seperator, dgraph_type, dtypes).alias('subject'),
-            'predicate',
-            'object',
-        )
-
-    # R3 — dgraph.type records (vertical_helpers.py:70-84)
-    if add_dgraph_type_records:
-        # the wide-keys shortcut (distinct over R keys instead of R×M long
-        # rows) is only valid when no earlier stage removed rows: csv_edges
-        # drops null-csv rows and ignore_fields drops predicates, either of
-        # which can eliminate a subject entirely (reference then emits no
-        # dgraph.type row for it)
-        wide_keys: Optional[DataFrame] = kwargs.get('_wide_keys_df')
-        if csv_edges or ignore_fields:
-            wide_keys = None
-        if wide_keys is not None:
-            if precomputed_subject:
-                subjects = wide_keys.select(F.col('__subject').alias('subject'))
-            else:
-                key_dtypes = {f.name: f.dataType for f in wide_keys.schema.fields}
-                subjects = wide_keys.select(
-                    subject_expr(key, key_seperator, dgraph_type, key_dtypes).alias('subject')
-                )
-        else:
-            subjects = frame.select('subject')
-        if not assume_unique_subjects:
-            subjects = subjects.distinct()
-        type_rows = subjects.select(
-            'subject',
-            F.lit('dgraph.type').alias('predicate'),
-            F.lit(dgraph_type).alias('object'),
-        )
-        frame = frame.unionByName(type_rows)
-        string_sources.add('dgraph.type')
-
-    # R4 — intrinsic/edge split + C6 '_id' strip (substring-anywhere)
-    if edges_list:
-        intrinsic = frame.filter(~F.col('predicate').isin(edges_list))
-        edges = frame.filter(F.col('predicate').isin(edges_list))
-        if strip_id_from_edge_names:
-            edges = edges.withColumn('predicate', F.replace(F.col('predicate'), F.lit('_id'), F.lit('')))
-    else:
-        intrinsic = frame
-        edges = None  # empty, materialized at the end
-
-    # C8 — RDF literal types on intrinsic
-    if rdf_map:
-        intrinsic = intrinsic.withColumn(
-            'type',
-            F.coalesce(_map_literal_lookup(F.col('predicate'), rdf_map), F.lit(DEFAULT_RDF_TYPE)),
-        )
-    else:
-        intrinsic = intrinsic.withColumn('type', F.lit(DEFAULT_RDF_TYPE))
-
-    # C2 (vertical path) + C3 + P3 — date parse/ISO render/NaT drop
-    if date_fields:
-        obj = F.col('object')
-        for dcol, opts in date_fields.items():
-            if dcol in datetime_predicates:
-                continue  # already ISO-rendered at melt
-            fmt = (opts or {}).get('format')
-            parsed = (
-                F.to_timestamp(F.col('object'), strftime_to_spark(fmt))
-                if fmt
-                else F.to_timestamp(F.col('object'))
-            )
-            obj = F.when(F.col('predicate') == dcol, iso_datetime(parsed)).otherwise(obj)
-        intrinsic = intrinsic.withColumn('object', obj)
-        intrinsic = intrinsic.withColumn(
-            'type',
-            F.when(
-                F.col('predicate').isin(list(date_fields)), F.lit('<xs:dateTime>')
-            ).otherwise(F.col('type')),
-        )
-    # P3 — NaT rows are dropped unconditionally (vertical_helpers.py:163)
-    intrinsic = intrinsic.filter(
-        ~((F.col('type') == '<xs:dateTime>') & F.col('object').isNull())
+    # C4 — subject key concat, then drop key columns
+    frame = frame.select(
+        subject_expr(key, o.key_seperator, dgraph_type, dtypes).alias('subject'),
+        'predicate',
+        'object',
     )
 
-    # C7 — illegal character scrubs (×4), gated to string-sourced predicates
-    all_string = '*' in string_sources
-    str_preds = sorted(string_sources - {'*'})
+    # R3 — dgraph.type records (vertical_helpers.py:70-84)
+    if o.add_dgraph_type_records:
+        subjects = frame.select('subject')
+        if not o.assume_unique_subjects:
+            subjects = subjects.distinct()
+        frame = frame.unionByName(type_rows(subjects, F.lit(dgraph_type)))
+        string_sources.add('dgraph.type')
 
-    def _gated_scrub(df: DataFrame, field: str, chars: List[str], stripped_names: bool = False) -> DataFrame:
-        if not chars:
-            return df
-        if field == 'subject':
-            return df.withColumn('subject', _scrub_expr(F.col('subject'), chars))
-        if all_string:
-            return df.withColumn(field, _scrub_expr(F.col(field), chars))
-        names = (
-            [p.replace('_id', '') for p in str_preds] if stripped_names else str_preds
-        )
-        if not names:
-            return df
-        return df.withColumn(
-            field,
-            F.when(
-                F.col('predicate').isin(names), _scrub_expr(F.col(field), chars)
-            ).otherwise(F.col(field)),
-        )
+    # C7 gating names; '*' (string object column) scrubs every row
+    str_preds: Optional[Set[str]] = None if '*' in string_sources else string_sources
+    edge_str_preds = str_preds
+    if str_preds is not None and o.strip_id_from_edge_names:
+        edge_str_preds = {p.replace('_id', '') for p in str_preds}
 
-    if not precomputed_subject:  # else scrubbed once on the wide frame
-        intrinsic = _gated_scrub(intrinsic, 'subject', illegal_characters)
-
-    # P2 — NA drop BEFORE the object scrub: regexp_replace preserves
-    # nullness, so the results are identical, but filtering first keeps
-    # Catalyst from substituting the scrub regex into the Filter predicate
-    # (which would run the regexp twice per row — once to null-check, once
-    # to project).
-    if drop_na_intrinsic_objects:
-        intrinsic = intrinsic.filter(F.col('object').isNotNull())
-    intrinsic = _gated_scrub(intrinsic, 'object', illegal_characters_intrinsic_object)
-
-    intrinsic = intrinsic.select(*TRIPLE_COLUMNS)
-
-    if edges is None:
-        return intrinsic, _empty_triples(frame)
-
-    if not precomputed_subject:  # else scrubbed once on the wide frame
-        edges = _gated_scrub(edges, 'subject', illegal_characters)
-    # NA drop before the object scrub — same double-regexp avoidance as the
-    # intrinsic branch (scrub preserves nullness)
-    if drop_na_edge_objects:
-        edges = edges.filter(F.col('object').isNotNull())
-    edges = _gated_scrub(edges, 'object', illegal_characters, stripped_names=bool(strip_id_from_edge_names))
-
-    # C9 — edge object qualification (vertical_helpers.py:216-249), pure
-    # expressions instead of the reference's in-place row mutation.
-    # str(None)='None' for string-sourced predicates, str(nan)='nan' for
-    # numeric ones (only reachable when drop_na_edge_objects=False).
-    if all_string:
-        null_form = F.lit('None')
-    else:
-        edge_str_names = [p.replace('_id', '') for p in str_preds] if strip_id_from_edge_names else str_preds
-        null_form = F.when(F.col('predicate').isin(edge_str_names), F.lit('None')).otherwise(F.lit('nan')) if edge_str_names else F.lit('nan')
-    obj_safe = F.coalesce(F.col('object'), null_form)
-    if override_edge_name:
-        obj_expr: Column = F.concat(F.col('predicate'), F.lit(key_seperator), obj_safe)
-        pred_expr: Column = F.col('predicate')
-        for pred, ov in override_edge_name.items():
-            cond = F.col('predicate') == pred
-            obj_expr = F.when(
-                cond, F.concat(F.lit(ov['target_node_type'] + key_seperator), obj_safe)
-            ).otherwise(obj_expr)
-            if 'predicate' in ov:
-                pred_expr = F.when(cond, F.lit(ov['predicate'])).otherwise(pred_expr)
-        edges = edges.withColumn('object', obj_expr).withColumn('predicate', pred_expr)
-    else:
-        edges = edges.withColumn(
-            'object', F.concat(F.col('predicate'), F.lit(key_seperator), obj_safe)
-        )
-
-    edges = edges.withColumn('type', F.lit(None).cast('string')).select(*TRIPLE_COLUMNS)
+    # R4 — intrinsic/edge split
+    in_edges = F.col('predicate').isin(edges_list)
+    intrinsic = finish_intrinsic(
+        frame.filter(~in_edges) if edges_list else frame,
+        o, rdf_map, datetime_predicates, scrub_subject=True, scrub_names=str_preds,
+    )
+    if not edges_list:
+        return intrinsic, empty_triples(frame.sparkSession)
+    edges = finish_edges(
+        frame.filter(in_edges), o, strip_id=o.strip_id_from_edge_names,
+        scrub_subject=True, scrub_names=edge_str_preds, string_names=edge_str_preds,
+    )
     return intrinsic, edges

@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pandas as pd
-import pytest
 
 from tests.conftest import ref_triples_set, triples_set
 
@@ -45,12 +44,9 @@ def _spark_transform(spark, rows, config, key, **kwargs):
     return horizontal_transform(sdf, config, key, **kwargs)
 
 
-@pytest.mark.parametrize('melt_strategy', ['expressions', 'arrow'])
-def test_f1_transcripts_match_reference(spark, melt_strategy):
+def test_f1_transcripts_match_reference(spark):
     ref_intrinsic, ref_edges = _ref_transform(F1_ROWS, F1_CONFIG, 'turn')
-    got_intrinsic, got_edges = _spark_transform(
-        spark, F1_ROWS, F1_CONFIG, 'turn', melt_strategy=melt_strategy
-    )
+    got_intrinsic, got_edges = _spark_transform(spark, F1_ROWS, F1_CONFIG, 'turn')
 
     assert triples_set(got_intrinsic) == ref_triples_set(ref_intrinsic)
     assert triples_set(got_edges) == ref_triples_set(ref_edges)

@@ -252,3 +252,46 @@ def test_temperature_sampling_is_a_fused_zero_shuffle_filter(spark):
     phys = _plan(kept).split('== Physical Plan ==')[1]
     assert 'Exchange' not in phys
     assert 'Filter' in phys
+
+
+def test_transcript_branches_melt_only_their_own_columns(spark, tmp_path):
+    """Horizontal entry on TRANSCRIPT_CONFIG (PLANS.md section 1): each
+    branch is one scan + one Expand over its own columns.  The edge branch
+    reads the key columns plus ``tool``; the intrinsic branch carries the
+    dgraph.type row as one more Expand projection (no second scan, no
+    Union); tool_nodes reads ``tool`` alone; and the object scrub runs per
+    source column on the wide frame, never as a per-long-row
+    ``CASE WHEN predicate IN (…) THEN regexp_replace``."""
+    import re
+
+    from dgraphpandas_spark import horizontal_transform
+    from dgraphpandas_spark.operators.canonicalize import link_entities, tool_nodes
+    from dgraphpandas_spark.sources.transcripts import TRANSCRIPT_CONFIG, synthetic_transcripts
+
+    path = str(tmp_path / 'transcripts')
+    synthetic_transcripts(spark, n_turns=200, seed=5).write.parquet(path)
+    tr = spark.read.parquet(path)
+    intrinsic, edges = horizontal_transform(tr, TRANSCRIPT_CONFIG, 'turn', assume_unique_subjects=True)
+
+    def phys(df):
+        return _plan(df).split('== Physical Plan ==')[1]
+
+    def read_schemas(p):
+        return [seg.splitlines()[0].strip() for seg in p.split('ReadSchema:')[1:]]
+
+    p_edges, p_intrinsic = phys(edges), phys(intrinsic)
+    assert read_schemas(p_edges) == ['struct<conv_id:string,turn_idx:int,tool:string>']
+
+    assert p_intrinsic.count('FileScan') == 1
+    assert 'Union' not in p_intrinsic
+    assert re.search(r'Expand \[.*\[[^\[\]]*, dgraph\.type, turn\]\]', p_intrinsic), \
+        'dgraph.type must be a projection of the intrinsic Expand'
+
+    dictionary = spark.createDataFrame([('tool_search', 'tool_websearch')], 'raw string, canonical string')
+    p_tools = phys(tool_nodes(link_entities(edges, dictionary, target_predicates=['tool'])))
+    assert read_schemas(p_tools) == ['struct<tool:string>']
+
+    per_row_scrub = re.compile(r'CASE WHEN \(?predicate#\d+ IN \([^)]*\)\)? THEN regexp_replace')
+    for p in (p_edges, p_intrinsic):
+        assert not per_row_scrub.search(p)
+        assert 'regexp_replace' in p.split('Expand [')[1], 'scrubs run below the Expand'

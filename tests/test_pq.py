@@ -127,3 +127,9 @@ def test_quantization_recovers_cluster_cohesion(emb, books):
         for i in range(40) for j in range(i + 1, 40) if i % 4 != j % 4
     )
     assert same_anchor > cross_anchor
+
+
+@pytest.mark.parametrize('dim,m_sub', [(8, 3), (10, 4), (8, 0)])
+def test_codebooks_reject_subspaces_that_do_not_tile_dim(emb, dim, m_sub):
+    with pytest.raises(ValueError, match='must divide dim'):
+        train_pq_codebooks(emb, m_sub=m_sub, n_codes=_N_CODES, iters=1, dim=dim)

@@ -123,11 +123,6 @@ def table_and_config(draw):
         'key_separator': draw(st.sampled_from(['_', '::', '.'])),
         'add_dgraph_type_records': draw(st.booleans()),
         'strip_id_from_edge_names': draw(st.booleans()),
-        # ~1 in 4 examples run the Arrow mapInPandas melt (U5) so the
-        # parity strategy is fuzzed too, not just matrix-pinned
-        'melt_strategy': draw(
-            st.sampled_from(['expressions', 'expressions', 'expressions', 'arrow'])
-        ),
     }
     return pd.DataFrame(data), config
 
@@ -209,15 +204,14 @@ _DOWNCAST_CASES = [
 ]
 
 
-@pytest.mark.parametrize('strategy', ['expressions', 'arrow'])
 @pytest.mark.parametrize(
     'data,file_config,overrides,_id',
     _DOWNCAST_CASES,
     ids=[c[3] for c in _DOWNCAST_CASES],
 )
-def test_scrub_downcast_parity(spark, data, file_config, overrides, _id, strategy):
+def test_scrub_downcast_parity(spark, data, file_config, overrides, _id):
     pdf = pd.DataFrame(data)
-    config = {'files': {'row': dict(file_config)}, 'melt_strategy': strategy, **overrides}
+    config = {'files': {'row': dict(file_config)}, **overrides}
     ref_i, ref_e = _ref_lines(pdf, config)
     our_i, our_e = _our_lines(spark, pdf, config)
     assert our_i == ref_i

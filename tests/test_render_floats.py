@@ -1,4 +1,4 @@
-"""Float lexical-form parity: the expressions melt must render doubles
+"""Float lexical-form parity: the melt's render must render doubles
 exactly as CPython ``str(float)`` (which is what the reference emits via
 ``astype(str)`` at writers/upserts.py:18-20).
 
@@ -12,9 +12,8 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
-from dgraphpandas_spark.operators.melt import melt_expressions
+from dgraphpandas_spark.operators.melt import render_columns
 
 BOUNDARY_VALUES = [
     # positional/scientific switch windows
@@ -35,11 +34,8 @@ BOUNDARY_VALUES = [
 def _render_via_melt(spark, values):
     rows = [(i, v, 'x') for i, v in enumerate(values)]
     df = spark.createDataFrame(rows, 'id long, score double, s string')
-    long_df, _ = melt_expressions(df, ['id'], ['score', 's'])
-    return {
-        r['id']: r['object']
-        for r in long_df.filter(F.col('predicate') == 'score').collect()
-    }
+    staged, rendered, _ = render_columns(df, ['score', 's'])
+    return {r['id']: r['object'] for r in staged.select('id', rendered['score'].alias('object')).collect()}
 
 
 def test_boundary_values_match_python_str(spark):
@@ -71,13 +67,8 @@ def test_ints_forced_to_float_form_render_like_float64(spark):
     ints = [0, 1, -1, 7, 10, 999, 10**15, 10**16, 2**53, 2**53 + 1, 10**18, -(2**62)]
     rows = [(i, v, 0.5, 'zz') for i, v in enumerate(ints)]
     df = spark.createDataFrame(rows, 'id long, n long, f double, s string')
-    long_df, _ = melt_expressions(
-        df, ['id'], ['n', 'f', 's'], force_double_cols={'n'}
-    )
-    out = {
-        r['id']: r['object']
-        for r in long_df.filter(F.col('predicate') == 'n').collect()
-    }
+    staged, rendered, _ = render_columns(df, ['n', 'f', 's'], force_double_cols={'n'})
+    out = {r['id']: r['object'] for r in staged.select('id', rendered['n'].alias('object')).collect()}
     mismatches = [
         (v, out[i], str(float(v))) for i, v in enumerate(ints) if out[i] != str(float(v))
     ]

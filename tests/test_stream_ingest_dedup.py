@@ -71,3 +71,17 @@ def test_streamed_verdicts_equal_batch_and_split_into_batches(spark, tmp_path):
     for i in exact_ids:
         d, j, k = by_id[i]
         assert not k and d == i - 1000 and j == 1.0
+
+
+def test_stream_ingest_query_removes_its_working_directory(spark, tmp_path, monkeypatch):
+    """q_stream_ingest_dedup reads its sink back and then deletes the
+    temp directory that held input, checkpoint and sink."""
+    import tempfile
+
+    import __spark_entry__ as e
+    from tests.test_plan_evidence import SF_DIR
+
+    monkeypatch.setattr(tempfile, 'tempdir', str(tmp_path))
+    verdicts = e.q_stream_ingest_dedup(spark, SF_DIR)
+    assert [p for p in os.listdir(tmp_path) if p.startswith('stream_ingest_')] == []
+    assert verdicts.count() > 0   # still readable after the directory is gone
