@@ -14,8 +14,11 @@ embedded into BOTH the Spark plan and the SQL text.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +38,18 @@ from dgraphpandas_spark.writers.upserts import generate_upserts  # noqa: E402
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f'{sf_dir}/{name}.parquet')
+
+
+@contextmanager
+def _working_dir(prefix: str):
+    """A ``tempfile.mkdtemp`` directory, removed on exit.  A query that
+    writes there returns its result read into a local checkpoint inside
+    the block, so the frame stays readable once the files are gone."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------- configs
@@ -293,17 +308,16 @@ def q_kg_types_lines(spark, sf_dir):
 def q_kg_rdf_gzip_roundtrip(spark, sf_dir):
     """S6 — gzip RDF sink round-trip: export via to_rdf, read the .gz part
     files back, and oracle-compare the line set (reference rdf.py:128-143)."""
-    import tempfile
-    out = tempfile.mkdtemp(prefix='rdf_roundtrip_')
-    to_rdf(
-        _t(spark, sf_dir, 'customer'), CUSTOMER_CONFIG, 'customer',
-        output_dir=out, export_rdf=True,
-    )
-    return (
-        spark.read.text(f'{out}/customer_intrinsic.gz')
-        .unionByName(spark.read.text(f'{out}/customer_edges.gz'))
-        .withColumnRenamed('value', 'line')
-    )
+    with _working_dir('rdf_roundtrip_') as out:
+        to_rdf(
+            _t(spark, sf_dir, 'customer'), CUSTOMER_CONFIG, 'customer',
+            output_dir=out, export_rdf=True,
+        )
+        return (
+            spark.read.text(f'{out}/customer_intrinsic.gz')
+            .unionByName(spark.read.text(f'{out}/customer_edges.gz'))
+            .withColumnRenamed('value', 'line')
+        ).localCheckpoint(eager=True)
 
 
 def q_orders_star_join(spark, sf_dir):
@@ -374,20 +388,19 @@ def q_source_orc_roundtrip(spark, sf_dir):
     through the ``sources.table_format.read_table`` seam, and aggregate.
     Doubles survive ORC bit-exactly, so the micro-integer sums match the
     oracle computed straight off the parquet view."""
-    import tempfile
-
     from dgraphpandas_spark.sources.table_format import read_table
 
-    out = os.path.join(tempfile.mkdtemp(prefix='orc_rt_'), 'events.orc')
-    ev = _t(spark, sf_dir, 'events').select('event_id', 'event_type', 'value')
-    ev.write.mode('overwrite').orc(out)
-    back = read_table(spark, out)
-    return back.groupBy('event_type').agg(
-        F.count('*').alias('n'),
-        F.sum(F.round(F.col('value') * 1e6, 0).cast('long')).alias('v_sum_micro'),
-        F.min('event_id').alias('min_id'),
-        F.max('event_id').alias('max_id'),
-    )
+    with _working_dir('orc_rt_') as tmp:
+        out = os.path.join(tmp, 'events.orc')
+        ev = _t(spark, sf_dir, 'events').select('event_id', 'event_type', 'value')
+        ev.write.mode('overwrite').orc(out)
+        back = read_table(spark, out)
+        return back.groupBy('event_type').agg(
+            F.count('*').alias('n'),
+            F.sum(F.round(F.col('value') * 1e6, 0).cast('long')).alias('v_sum_micro'),
+            F.min('event_id').alias('min_id'),
+            F.max('event_id').alias('max_id'),
+        ).localCheckpoint(eager=True)
 
 
 CALLABLE_VERTICAL_CONFIG = {
@@ -445,30 +458,28 @@ def q_stream_event_windows(spark, sf_dir):
     deterministic set the DuckDB oracle reproduces with a batch GROUP BY
     plus the same closed-window cutoff."""
     import os
-    import shutil
-    import tempfile
 
     from dgraphpandas_spark.streaming.windows import windowed_counts
 
-    tmp = tempfile.mkdtemp(prefix='stream_ev_')
-    indir = os.path.join(tmp, 'in')
-    os.makedirs(indir)
-    shutil.copy(f'{sf_dir}/events.parquet', os.path.join(indir, 'events.parquet'))
-    schema = ('event_id bigint, ts timestamp, user_id bigint, '
-              'event_type string, value double, props string')
-    stream = spark.readStream.schema(schema).parquet(indir)
-    out = windowed_counts(stream, 'ts', 'event_type', '1 day', '1 hour')
-    name = 'stream_ev_' + os.path.basename(tmp).replace('stream_ev_', '')
-    q = (
-        out.writeStream.trigger(availableNow=True)
-        .outputMode('append')
-        .format('memory')
-        .queryName(name)
-        .option('checkpointLocation', os.path.join(tmp, 'ck'))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    with _working_dir('stream_ev_') as tmp:
+        indir = os.path.join(tmp, 'in')
+        os.makedirs(indir)
+        shutil.copy(f'{sf_dir}/events.parquet', os.path.join(indir, 'events.parquet'))
+        schema = ('event_id bigint, ts timestamp, user_id bigint, '
+                  'event_type string, value double, props string')
+        stream = spark.readStream.schema(schema).parquet(indir)
+        out = windowed_counts(stream, 'ts', 'event_type', '1 day', '1 hour')
+        name = 'stream_ev_' + os.path.basename(tmp).replace('stream_ev_', '')
+        q = (
+            out.writeStream.trigger(availableNow=True)
+            .outputMode('append')
+            .format('memory')
+            .queryName(name)
+            .option('checkpointLocation', os.path.join(tmp, 'ck'))
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(name).localCheckpoint(eager=True)
 
 
 def q_stream_stateful_sessions(spark, sf_dir):
@@ -478,41 +489,39 @@ def q_stream_stateful_sessions(spark, sf_dir):
     conversation emits exactly one final session row — a deterministic set
     equal to a batch GROUP BY, which the DuckDB oracle reproduces."""
     import os
-    import shutil
-    import tempfile
 
     from dgraphpandas_spark.streaming.stateful import conversation_sessions
 
-    tmp = tempfile.mkdtemp(prefix='stream_state_')
-    indir = os.path.join(tmp, 'in')
-    os.makedirs(indir)
-    shutil.copy(f'{sf_dir}/events.parquet', os.path.join(indir, 'events.parquet'))
-    schema = ('event_id bigint, ts timestamp, user_id bigint, '
-              'event_type string, value double, props string')
-    stream = (
-        spark.readStream.schema(schema).parquet(indir)
-        .select(
-            F.concat(F.lit('u'), F.col('user_id')).alias('conv_id'),
-            F.col('event_id').cast('int').alias('turn_idx'),
-            F.col('event_type').alias('role'),
-            F.col('props').alias('text'),
-            # deterministic tool mapping: non-click events "invoke a tool"
-            F.when(F.col('event_type') != 'click', F.col('event_type')).alias('tool'),
-            'ts',
+    with _working_dir('stream_state_') as tmp:
+        indir = os.path.join(tmp, 'in')
+        os.makedirs(indir)
+        shutil.copy(f'{sf_dir}/events.parquet', os.path.join(indir, 'events.parquet'))
+        schema = ('event_id bigint, ts timestamp, user_id bigint, '
+                  'event_type string, value double, props string')
+        stream = (
+            spark.readStream.schema(schema).parquet(indir)
+            .select(
+                F.concat(F.lit('u'), F.col('user_id')).alias('conv_id'),
+                F.col('event_id').cast('int').alias('turn_idx'),
+                F.col('event_type').alias('role'),
+                F.col('props').alias('text'),
+                # deterministic tool mapping: non-click events "invoke a tool"
+                F.when(F.col('event_type') != 'click', F.col('event_type')).alias('tool'),
+                'ts',
+            )
         )
-    )
-    out = conversation_sessions(stream)
-    name = 'stream_state_' + os.path.basename(tmp).replace('stream_state_', '')
-    q = (
-        out.writeStream.trigger(availableNow=True)
-        .outputMode('update')
-        .format('memory')
-        .queryName(name)
-        .option('checkpointLocation', os.path.join(tmp, 'ck'))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+        out = conversation_sessions(stream)
+        name = 'stream_state_' + os.path.basename(tmp).replace('stream_state_', '')
+        q = (
+            out.writeStream.trigger(availableNow=True)
+            .outputMode('update')
+            .format('memory')
+            .queryName(name)
+            .option('checkpointLocation', os.path.join(tmp, 'ck'))
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(name).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------- training-data queries
@@ -724,37 +733,35 @@ def q_stream_static_enrich(spark, sf_dir):
     the streaming twin of batch entity linking.  Oracle = the batch
     join, valid because a stateless stream-static join is
     batch-equivalent under AvailableNow."""
-    import tempfile
-
     from dgraphpandas_spark.streaming.stream import enrich_stream
 
-    tmp = tempfile.mkdtemp(prefix='stream_enrich_')
-    indir = os.path.join(tmp, 'in')
-    os.makedirs(indir)
-    ev = _t(spark, sf_dir, 'events')
-    for par in (0, 1):
-        ev.filter(F.col('event_id') % 2 == par).coalesce(1).write.mode('append').parquet(indir)
-    dim = ev.select('user_id').distinct().select(
-        'user_id', (F.col('user_id') % 3).alias('tier')
-    )
-    stream = (
-        spark.readStream.schema(ev.schema).option('maxFilesPerTrigger', 1).parquet(indir)
-    )
-    out = enrich_stream(stream, dim, on='user_id').select(
-        'event_id', 'user_id', 'tier',
-        F.round(F.col('value') * 1e6, 0).cast('long').alias('v_micro'),
-    )
-    name = 'stream_enrich_' + os.path.basename(tmp).replace('stream_enrich_', '')
-    q = (
-        out.writeStream.trigger(availableNow=True)
-        .outputMode('append')
-        .format('memory')
-        .queryName(name)
-        .option('checkpointLocation', os.path.join(tmp, 'ck'))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    with _working_dir('stream_enrich_') as tmp:
+        indir = os.path.join(tmp, 'in')
+        os.makedirs(indir)
+        ev = _t(spark, sf_dir, 'events')
+        for par in (0, 1):
+            ev.filter(F.col('event_id') % 2 == par).coalesce(1).write.mode('append').parquet(indir)
+        dim = ev.select('user_id').distinct().select(
+            'user_id', (F.col('user_id') % 3).alias('tier')
+        )
+        stream = (
+            spark.readStream.schema(ev.schema).option('maxFilesPerTrigger', 1).parquet(indir)
+        )
+        out = enrich_stream(stream, dim, on='user_id').select(
+            'event_id', 'user_id', 'tier',
+            F.round(F.col('value') * 1e6, 0).cast('long').alias('v_micro'),
+        )
+        name = 'stream_enrich_' + os.path.basename(tmp).replace('stream_enrich_', '')
+        q = (
+            out.writeStream.trigger(availableNow=True)
+            .outputMode('append')
+            .format('memory')
+            .queryName(name)
+            .option('checkpointLocation', os.path.join(tmp, 'ck'))
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(name).localCheckpoint(eager=True)
 
 
 def q_text_vocab_topk(spark, sf_dir):
@@ -1274,14 +1281,15 @@ def q_multimodal_meta(spark, sf_dir):
 
 
 def q_kg_salted_dedup(spark, sf_dir):
-    """Salted triple dedup (``dedup_triples(salt_buckets=8)``,
-    operators/canonicalize.py) over a deliberately skewed triple set: ~90%
-    of event rows collapse onto one hot subject.  Catalyst collapses the
-    declared two-phase form into the single partial→final aggregate —
-    which is already the skew-safe plan, since map-side partial combine
-    absorbs the hot key's duplicates per task (physical shape pinned by
-    tests/test_plan_evidence.py).  Oracle: plain SELECT DISTINCT of the
-    same triple expressions."""
+    """Triple dedup (``dedup_triples``, operators/canonicalize.py) over a
+    deliberately skewed triple set: ~90% of event rows collapse onto one
+    hot subject.  The plan is the single partial→final aggregate, which is
+    skew-safe without a salt, since map-side partial combine absorbs the
+    hot key's duplicates per task (physical shape pinned by
+    tests/test_plan_evidence.py).  The name is kept from when the
+    operator took a ``salt_buckets`` option, which Catalyst compiled to
+    the same plan.  Oracle: plain SELECT DISTINCT of the same triple
+    expressions."""
     from dgraphpandas_spark.operators.canonicalize import dedup_triples
 
     ev = _t(spark, sf_dir, 'events')
@@ -1292,7 +1300,7 @@ def q_kg_salted_dedup(spark, sf_dir):
         F.concat(F.lit('"'), F.col('event_type'), F.lit('"')).alias('object'),
         F.lit('<xs:string>').alias('type'),
     )
-    return dedup_triples(triples, salt_buckets=8)
+    return dedup_triples(triples)
 
 
 def q_stream_stateful_multibatch(spark, sf_dir):
@@ -1305,50 +1313,49 @@ def q_stream_stateful_multibatch(spark, sf_dir):
     larger half, not the sum), and ``n_updates`` pins that both batches
     really touched the conversation."""
     import os
-    import tempfile
 
     from dgraphpandas_spark.streaming.stateful import conversation_sessions
 
-    tmp = tempfile.mkdtemp(prefix='stream_mb_')
-    indir = os.path.join(tmp, 'in')
-    os.makedirs(indir)
-    ev = _t(spark, sf_dir, 'events')
-    for par in (0, 1):
-        ev.filter(F.col('event_id') % 2 == par).coalesce(1).write.mode('append').parquet(indir)
-    schema = ('event_id bigint, ts timestamp, user_id bigint, '
-              'event_type string, value double, props string')
-    stream = (
-        spark.readStream.schema(schema)
-        .option('maxFilesPerTrigger', 1)
-        .parquet(indir)
-        .select(
-            F.concat(F.lit('u'), F.col('user_id')).alias('conv_id'),
-            F.col('event_id').cast('int').alias('turn_idx'),
-            F.col('event_type').alias('role'),
-            F.col('props').alias('text'),
-            F.when(F.col('event_type') != 'click', F.col('event_type')).alias('tool'),
-            'ts',
+    with _working_dir('stream_mb_') as tmp:
+        indir = os.path.join(tmp, 'in')
+        os.makedirs(indir)
+        ev = _t(spark, sf_dir, 'events')
+        for par in (0, 1):
+            ev.filter(F.col('event_id') % 2 == par).coalesce(1).write.mode('append').parquet(indir)
+        schema = ('event_id bigint, ts timestamp, user_id bigint, '
+                  'event_type string, value double, props string')
+        stream = (
+            spark.readStream.schema(schema)
+            .option('maxFilesPerTrigger', 1)
+            .parquet(indir)
+            .select(
+                F.concat(F.lit('u'), F.col('user_id')).alias('conv_id'),
+                F.col('event_id').cast('int').alias('turn_idx'),
+                F.col('event_type').alias('role'),
+                F.col('props').alias('text'),
+                F.when(F.col('event_type') != 'click', F.col('event_type')).alias('tool'),
+                'ts',
+            )
         )
-    )
-    out = conversation_sessions(stream)
-    name = 'stream_mb_' + os.path.basename(tmp).replace('stream_mb_', '')
-    q = (
-        out.writeStream.trigger(availableNow=True)
-        .outputMode('update')
-        .format('memory')
-        .queryName(name)
-        .option('checkpointLocation', os.path.join(tmp, 'ck'))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).groupBy('conv_id').agg(
-        F.max('n_turns').alias('n_turns'),
-        F.max('n_tool_calls').alias('n_tool_calls'),
-        F.min('first_ts').alias('first_ts'),
-        F.max('last_ts').alias('last_ts'),
-        F.max('max_turn_idx').alias('max_turn_idx'),
-        F.count('*').alias('n_updates'),
-    )
+        out = conversation_sessions(stream)
+        name = 'stream_mb_' + os.path.basename(tmp).replace('stream_mb_', '')
+        q = (
+            out.writeStream.trigger(availableNow=True)
+            .outputMode('update')
+            .format('memory')
+            .queryName(name)
+            .option('checkpointLocation', os.path.join(tmp, 'ck'))
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(name).groupBy('conv_id').agg(
+            F.max('n_turns').alias('n_turns'),
+            F.max('n_tool_calls').alias('n_tool_calls'),
+            F.min('first_ts').alias('first_ts'),
+            F.max('last_ts').alias('last_ts'),
+            F.max('max_turn_idx').alias('max_turn_idx'),
+            F.count('*').alias('n_updates'),
+        ).localCheckpoint(eager=True)
 
 
 def q_kg_graph_completion(spark, sf_dir):
@@ -1570,50 +1577,49 @@ def q_stream_kg_triples(spark, sf_dir):
     memory sink.  A stateless streaming transform is batch-equivalent by
     contract; the oracle is the batch SQL over the same rows."""
     import os
-    import tempfile
 
     from dgraphpandas_spark.streaming.stream import stream_transcripts, stream_triples
 
-    tmp = tempfile.mkdtemp(prefix='stream_kg_')
-    indir = os.path.join(tmp, 'in')
-    os.makedirs(indir)
-    ev = _t(spark, sf_dir, 'events')
-    turns = ev.select(
-        F.concat(F.lit('u'), F.col('user_id')).alias('conv_id'),
-        F.col('event_id').cast('int').alias('turn_idx'),
-        F.col('event_type').alias('role'),
-        F.col('props').alias('text'),
-        F.when(F.col('event_type') != 'click', F.col('event_type')).alias('tool'),
-        'ts',
-    )
-    for par in (0, 1):
-        turns.filter(F.col('turn_idx') % 2 == par).coalesce(1).write.mode('append').parquet(indir)
-    stream = stream_transcripts(spark, indir, max_files_per_trigger=1)
-    config = {
-        'transform': 'horizontal',
-        'files': {
-            'turn': {
-                'subject_fields': ['conv_id', 'turn_idx'],
-                'edge_fields': ['tool'],
-                'type_overrides': {'ts': 'datetime64[ns]'},
-                'date_fields': {'ts': {}},
-            }
-        },
-    }
-    out = stream_triples(stream, config, 'turn').withColumn(
-        'is_edge', F.col('is_edge').cast('int')
-    )
-    name = 'stream_kg_' + os.path.basename(tmp).replace('stream_kg_', '')
-    q = (
-        out.writeStream.trigger(availableNow=True)
-        .outputMode('append')
-        .format('memory')
-        .queryName(name)
-        .option('checkpointLocation', os.path.join(tmp, 'ck'))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    with _working_dir('stream_kg_') as tmp:
+        indir = os.path.join(tmp, 'in')
+        os.makedirs(indir)
+        ev = _t(spark, sf_dir, 'events')
+        turns = ev.select(
+            F.concat(F.lit('u'), F.col('user_id')).alias('conv_id'),
+            F.col('event_id').cast('int').alias('turn_idx'),
+            F.col('event_type').alias('role'),
+            F.col('props').alias('text'),
+            F.when(F.col('event_type') != 'click', F.col('event_type')).alias('tool'),
+            'ts',
+        )
+        for par in (0, 1):
+            turns.filter(F.col('turn_idx') % 2 == par).coalesce(1).write.mode('append').parquet(indir)
+        stream = stream_transcripts(spark, indir, max_files_per_trigger=1)
+        config = {
+            'transform': 'horizontal',
+            'files': {
+                'turn': {
+                    'subject_fields': ['conv_id', 'turn_idx'],
+                    'edge_fields': ['tool'],
+                    'type_overrides': {'ts': 'datetime64[ns]'},
+                    'date_fields': {'ts': {}},
+                }
+            },
+        }
+        out = stream_triples(stream, config, 'turn').withColumn(
+            'is_edge', F.col('is_edge').cast('int')
+        )
+        name = 'stream_kg_' + os.path.basename(tmp).replace('stream_kg_', '')
+        q = (
+            out.writeStream.trigger(availableNow=True)
+            .outputMode('append')
+            .format('memory')
+            .queryName(name)
+            .option('checkpointLocation', os.path.join(tmp, 'ck'))
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(name).localCheckpoint(eager=True)
 
 
 def q_stream_kg_materialize(spark, sf_dir):
@@ -1626,47 +1632,45 @@ def q_stream_kg_materialize(spark, sf_dir):
     must equal the batch transform of the same input (the oracle is the
     stream_kg_triples SQL), proving the storage path neither lost,
     duplicated, nor altered a triple across batch boundaries."""
-    import tempfile
-
     from dgraphpandas_spark.plans.lineage import appended_waves, read_appended
     from dgraphpandas_spark.streaming.stream import stream_materialize, stream_transcripts, stream_triples
 
-    tmp = tempfile.mkdtemp(prefix='stream_mat_')
-    indir = os.path.join(tmp, 'in')
-    os.makedirs(indir)
-    ev = _t(spark, sf_dir, 'events')
-    turns = ev.select(
-        F.concat(F.lit('u'), F.col('user_id')).alias('conv_id'),
-        F.col('event_id').cast('int').alias('turn_idx'),
-        F.col('event_type').alias('role'),
-        F.col('props').alias('text'),
-        F.when(F.col('event_type') != 'click', F.col('event_type')).alias('tool'),
-        'ts',
-    )
-    for par in (0, 1):
-        turns.filter(F.col('turn_idx') % 2 == par).coalesce(1).write.mode('append').parquet(indir)
-    stream = stream_transcripts(spark, indir, max_files_per_trigger=1)
-    config = {
-        'transform': 'horizontal',
-        'files': {
-            'turn': {
-                'subject_fields': ['conv_id', 'turn_idx'],
-                'edge_fields': ['tool'],
-                'type_overrides': {'ts': 'datetime64[ns]'},
-                'date_fields': {'ts': {}},
-            }
-        },
-    }
-    out = stream_triples(stream, config, 'turn').withColumn(
-        'is_edge', F.col('is_edge').cast('int')
-    )
-    store = os.path.join(tmp, 'store')
-    q = stream_materialize(out, store, os.path.join(tmp, 'ck'), n_buckets=8)
-    q.awaitTermination()
-    assert len(appended_waves(store)) >= 2  # two micro-batches → two waves
-    return read_appended(spark, store).select(
-        'subject', 'predicate', 'object', 'type', 'is_edge'
-    )
+    with _working_dir('stream_mat_') as tmp:
+        indir = os.path.join(tmp, 'in')
+        os.makedirs(indir)
+        ev = _t(spark, sf_dir, 'events')
+        turns = ev.select(
+            F.concat(F.lit('u'), F.col('user_id')).alias('conv_id'),
+            F.col('event_id').cast('int').alias('turn_idx'),
+            F.col('event_type').alias('role'),
+            F.col('props').alias('text'),
+            F.when(F.col('event_type') != 'click', F.col('event_type')).alias('tool'),
+            'ts',
+        )
+        for par in (0, 1):
+            turns.filter(F.col('turn_idx') % 2 == par).coalesce(1).write.mode('append').parquet(indir)
+        stream = stream_transcripts(spark, indir, max_files_per_trigger=1)
+        config = {
+            'transform': 'horizontal',
+            'files': {
+                'turn': {
+                    'subject_fields': ['conv_id', 'turn_idx'],
+                    'edge_fields': ['tool'],
+                    'type_overrides': {'ts': 'datetime64[ns]'},
+                    'date_fields': {'ts': {}},
+                }
+            },
+        }
+        out = stream_triples(stream, config, 'turn').withColumn(
+            'is_edge', F.col('is_edge').cast('int')
+        )
+        store = os.path.join(tmp, 'store')
+        q = stream_materialize(out, store, os.path.join(tmp, 'ck'), n_buckets=8)
+        q.awaitTermination()
+        assert len(appended_waves(store)) >= 2  # two micro-batches → two waves
+        return read_appended(spark, store).select(
+            'subject', 'predicate', 'object', 'type', 'is_edge'
+        ).localCheckpoint(eager=True)
 
 
 def q_stream_replay_dedup(spark, sf_dir):
@@ -1679,40 +1683,39 @@ def q_stream_replay_dedup(spark, sf_dir):
     cross-batch state the replays would re-emit and the row count would
     exceed it."""
     import os
-    import tempfile
 
     from dgraphpandas_spark.streaming.stream import dedup_replayed_turns
 
-    tmp = tempfile.mkdtemp(prefix='stream_rd_')
-    indir = os.path.join(tmp, 'in')
-    os.makedirs(indir)
-    ev = _t(spark, sf_dir, 'events')
-    turns = ev.select(
-        F.concat(F.lit('u'), F.col('user_id')).alias('conv_id'),
-        F.col('event_id').cast('int').alias('turn_idx'),
-        'ts',
-    )
-    turns.coalesce(1).write.mode('append').parquet(indir)
-    turns.filter(F.col('turn_idx') % 3 == 0).coalesce(1).write.mode('append').parquet(indir)
-    stream = (
-        spark.readStream.schema('conv_id string, turn_idx int, ts timestamp')
-        .option('maxFilesPerTrigger', 1)
-        .parquet(indir)
-    )
-    out = dedup_replayed_turns(stream, lateness='3650 days').select(
-        'conv_id', 'turn_idx', F.unix_micros('ts').alias('ts_us')
-    )
-    name = 'stream_rd_' + os.path.basename(tmp).replace('stream_rd_', '')
-    q = (
-        out.writeStream.trigger(availableNow=True)
-        .outputMode('append')
-        .format('memory')
-        .queryName(name)
-        .option('checkpointLocation', os.path.join(tmp, 'ck'))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    with _working_dir('stream_rd_') as tmp:
+        indir = os.path.join(tmp, 'in')
+        os.makedirs(indir)
+        ev = _t(spark, sf_dir, 'events')
+        turns = ev.select(
+            F.concat(F.lit('u'), F.col('user_id')).alias('conv_id'),
+            F.col('event_id').cast('int').alias('turn_idx'),
+            'ts',
+        )
+        turns.coalesce(1).write.mode('append').parquet(indir)
+        turns.filter(F.col('turn_idx') % 3 == 0).coalesce(1).write.mode('append').parquet(indir)
+        stream = (
+            spark.readStream.schema('conv_id string, turn_idx int, ts timestamp')
+            .option('maxFilesPerTrigger', 1)
+            .parquet(indir)
+        )
+        out = dedup_replayed_turns(stream, lateness='3650 days').select(
+            'conv_id', 'turn_idx', F.unix_micros('ts').alias('ts_us')
+        )
+        name = 'stream_rd_' + os.path.basename(tmp).replace('stream_rd_', '')
+        q = (
+            out.writeStream.trigger(availableNow=True)
+            .outputMode('append')
+            .format('memory')
+            .queryName(name)
+            .option('checkpointLocation', os.path.join(tmp, 'ck'))
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(name).localCheckpoint(eager=True)
 
 
 def q_ann_ivf_materialized_topk(spark, sf_dir):
@@ -1720,13 +1723,13 @@ def q_ann_ivf_materialized_topk(spark, sf_dir):
     by cell), then query via partition-pruned scan — must return exactly
     the inline ivf_topk result (the oracle is the same SQL)."""
     import os
-    import tempfile
 
     emb = _t(spark, sf_dir, 'embeddings')
     qvec = [float(x) for x in emb.filter('vec_id = 0').first()['embedding']]
-    path = os.path.join(tempfile.mkdtemp(prefix='ivf_mat_'), 'ivf')
-    cents = SS.ivf_materialize(emb, path, n_cells=8, dim=64, seed=7)
-    return SS.ivf_query_materialized(spark, path, cents, qvec, k=10, nprobe=2)
+    with _working_dir('ivf_mat_') as tmp:
+        path = os.path.join(tmp, 'ivf')
+        cents = SS.ivf_materialize(emb, path, n_cells=8, dim=64, seed=7)
+        return SS.ivf_query_materialized(spark, path, cents, qvec, k=10, nprobe=2).localCheckpoint(eager=True)
 
 
 def q_ann_recall(spark, sf_dir):
@@ -2061,9 +2064,6 @@ def q_stream_ingest_dedup(spark, sf_dir):
     ≡ batch through storage.  The working directory (input files,
     checkpoint, sink) is removed once the sink is read back into a local
     checkpoint."""
-    import shutil
-    import tempfile
-
     from dgraphpandas_spark.streaming.stream import stream_ingest_dedup
 
     d = _t(spark, sf_dir, 'documents').select('doc_id', 'text')
@@ -2077,8 +2077,7 @@ def q_stream_ingest_dedup(spark, sf_dir):
             )
         )
     )
-    tmp = tempfile.mkdtemp(prefix='stream_ingest_')
-    try:
+    with _working_dir('stream_ingest_') as tmp:
         indir = os.path.join(tmp, 'in')
         os.makedirs(indir)
         for par in (0, 1):
@@ -2094,8 +2093,6 @@ def q_stream_ingest_dedup(spark, sf_dir):
         )
         q.awaitTermination()
         return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -2964,9 +2961,7 @@ SELECT 'u' || user_id AS conv_id,
 FROM events GROUP BY 1
 """
 
-    # Salted dedup is plain DISTINCT semantically — the salt only changes
-    # the physical aggregation shape (two-phase, hot key spread over 8
-    # reducers), never the result.
+    # Dedup under a hot key is plain DISTINCT.
     sql['kg_salted_dedup'] = """
 SELECT DISTINCT
   CASE WHEN event_id % 10 < 9 THEN 'hot_conv' ELSE 'u' || user_id END AS subject,

@@ -41,9 +41,14 @@ def unit(a: Column) -> Column:
     FLOP cut in the stage that dominates blocked kNN/near-dup verify
     (``cosine(a, b)`` recomputes both self-dots per pair).  Bit-exactly
     mirrorable in DuckDB (same left-to-right fold, IEEE sqrt/divide), so
-    prenormalized operators stay oracle-hashable."""
-    n = norm(a)
-    return F.transform(a, lambda x: x.cast('double') / n)
+    prenormalized operators stay oracle-hashable.
+
+    The norm enters the lambda as a second array rather than as a captured
+    column: Spark does no common-subexpression elimination inside lambdas,
+    so ``transform(a, x -> x / norm(a))`` would recompute the norm for
+    every element (O(dim²) per row).  ``array_repeat`` evaluates it once
+    per row; null and empty arrays give null and empty results as before."""
+    return F.zip_with(a, F.array_repeat(norm(a), F.size(a)), lambda x, n: x.cast('double') / n)
 
 
 def hyperplanes(n_planes: int, dim: int, seed: int = 42) -> List[List[float]]:

@@ -5,11 +5,9 @@ reference, which delegates all identity resolution to
 
 Three pieces:
 
-1. **Salted dedup** of entity xids: triple-level ``dropDuplicates`` runs as
-   a two-phase hash aggregate (map-side partial → final), so hot
-   conversations never concentrate on one reducer.  The explicit
-   ``salt_buckets`` form is provably equivalent — Catalyst removes the
-   salt phase as redundant (see ``dedup_triples``).
+1. **Skew-safe dedup** of entity xids: triple-level ``dropDuplicates``
+   runs as a two-phase hash aggregate (map-side partial → final), so hot
+   conversations never concentrate on one reducer (see ``dedup_triples``).
 2. **Broadcast dictionary linking**: edge objects (e.g. raw tool names) are
    joined against a small canonical dictionary with ``F.broadcast`` — a
    map-side hash join, zero shuffle of the big side.
@@ -19,8 +17,7 @@ Three pieces:
 Skew strategy at 10^12-turn scale: AQE skew-join splitting
 (``spark.sql.adaptive.skewJoin.enabled``, on in session.py) handles join
 skew at runtime; exact-dedup aggregation skew is neutralized by map-side
-partial combine (PLANS.md §5b); explicit salting remains for
-payload-carrying hot groups and aggregated-child joins AQE can't split.
+partial combine (PLANS.md §5b), so it needs no salt.
 """
 from __future__ import annotations
 
@@ -32,33 +29,20 @@ from pyspark.sql import functions as F
 from .vertical import TRIPLE_COLUMNS
 
 
-def dedup_triples(triples: DataFrame, salt_buckets: Optional[int] = None) -> DataFrame:
+def dedup_triples(triples: DataFrame) -> DataFrame:
     """Exact dedup of (subject, predicate, object, type).
 
-    Plain ``dropDuplicates`` already executes as partial+final hash
-    aggregate (map-side combine absorbs hot subjects).  With
-    ``salt_buckets``, an explicit two-phase variant is declared: first
-    dedup within (key, salt) — salt derived deterministically from the
-    full tuple hash, no randomness — then dedup the survivors globally.
-
-    Physical truth (pinned by tests/test_plan_evidence.py): Catalyst's
-    ``RemoveRedundantAggregates`` PROVES the salt phase redundant and
-    collapses both forms to the identical single partial→exchange→final
-    aggregate — and that plan is already the skew-safe shape, because the
-    map-side partial aggregate collapses a hot key's duplicates to one row
-    per task before the shuffle (the reducer for a hot key receives at
-    most n_tasks rows).  The parameter is kept for API portability to
-    engines without map-side combine; on Spark, explicit salting is for
-    JOIN skew (AQE skew-join, PLANS.md §5b), not exact dedup.
+    ``dropDuplicates`` executes as a partial → exchange → final hash
+    aggregate, which is already skew-safe: the map-side partial aggregate
+    collapses a hot key's duplicates to one row per task before the
+    shuffle, so the reducer for a hot key receives at most n_tasks rows
+    (pinned by tests/test_plan_evidence.py).  An explicit salt phase adds
+    nothing on Spark — Catalyst's ``RemoveRedundantAggregates`` removes it
+    and compiles the salted form to this same plan — so there is no salt
+    option; explicit salting on Spark is for JOIN skew AQE cannot split
+    (PLANS.md §5b).
     """
-    if not salt_buckets:
-        return triples.dropDuplicates(TRIPLE_COLUMNS)
-    salted = triples.withColumn(
-        '_salt',
-        F.pmod(F.xxhash64(*TRIPLE_COLUMNS), F.lit(salt_buckets)),
-    )
-    phase1 = salted.dropDuplicates(TRIPLE_COLUMNS + ['_salt']).drop('_salt')
-    return phase1.dropDuplicates(TRIPLE_COLUMNS)
+    return triples.dropDuplicates(TRIPLE_COLUMNS)
 
 
 def link_entities(

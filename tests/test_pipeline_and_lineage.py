@@ -130,8 +130,6 @@ def test_canonicalize_link_and_nodes(spark, transcripts):
 
     deduped = dedup_triples(edges.unionByName(edges))
     assert deduped.count() == edges.distinct().count()
-    salted = dedup_triples(edges.unionByName(edges), salt_buckets=4)
-    assert salted.count() == deduped.count()
 
 
 def test_streaming_available_now(spark, transcripts, tmp_path):

@@ -6,9 +6,10 @@ hot-conversation join is split by AQE's OptimizeSkewedJoin, and documents
 the structural precondition discovered while building this test: the rule
 only matches a SortMergeJoin whose BOTH children are plain shuffle stages.
 An aggregation between the shuffle and the join (e.g. a distinct-built dim)
-blocks the split — which is exactly why the engine's aggregation-path skew
-handling is explicit salting (operators/canonicalize.dedup_triples), not
-AQE.
+blocks the split — which is why aggregated-child join shapes need
+explicit salting rather than AQE.  (Exact dedup needs neither: its
+map-side partial aggregate absorbs a hot key — operators/canonicalize.
+dedup_triples.)
 
 Thresholds are tuned down so the 200k-row fixture crosses them; at
 production scale the session defaults (64 MB advisory) apply unchanged.
@@ -59,7 +60,7 @@ def test_aqe_splits_hot_conversation_join(skew_spark):
 def test_agg_above_shuffle_blocks_skew_rule_hence_salting(skew_spark):
     """Negative control: a distinct between shuffle and join prevents the
     skew split (splitting would break the aggregation) — the documented
-    reason dedup/canonicalization uses explicit salting instead."""
+    reason such join shapes need explicit salting instead."""
     t = synthetic_transcripts(skew_spark, n_turns=200_000, seed=42).localCheckpoint()
     dims = t.select('conv_id').distinct().withColumn('meta', F.md5('conv_id'))
     j = t.join(dims, 'conv_id')

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from dgraphpandas_spark.operators.dedup import incremental_dedup
@@ -73,15 +74,33 @@ def test_streamed_verdicts_equal_batch_and_split_into_batches(spark, tmp_path):
         assert not k and d == i - 1000 and j == 1.0
 
 
-def test_stream_ingest_query_removes_its_working_directory(spark, tmp_path, monkeypatch):
-    """q_stream_ingest_dedup reads its sink back and then deletes the
-    temp directory that held input, checkpoint and sink."""
+# every __spark_entry__ query that writes to a tempfile.mkdtemp directory,
+# with that directory's prefix
+WORKING_DIR_QUERIES = [
+    ('q_stream_ingest_dedup', 'stream_ingest_'),
+    ('q_kg_rdf_gzip_roundtrip', 'rdf_roundtrip_'),
+    ('q_source_orc_roundtrip', 'orc_rt_'),
+    ('q_stream_event_windows', 'stream_ev_'),
+    ('q_stream_stateful_sessions', 'stream_state_'),
+    ('q_stream_static_enrich', 'stream_enrich_'),
+    ('q_stream_stateful_multibatch', 'stream_mb_'),
+    ('q_stream_kg_triples', 'stream_kg_'),
+    ('q_stream_kg_materialize', 'stream_mat_'),
+    ('q_stream_replay_dedup', 'stream_rd_'),
+    ('q_ann_ivf_materialized_topk', 'ivf_mat_'),
+]
+
+
+@pytest.mark.parametrize('query,prefix', WORKING_DIR_QUERIES, ids=[q for q, _ in WORKING_DIR_QUERIES])
+def test_stream_ingest_query_removes_its_working_directory(spark, tmp_path, monkeypatch, query, prefix):
+    """Each query reads its result back into a local checkpoint and then
+    deletes the temp directory that held its input, checkpoint and sink."""
     import tempfile
 
     import __spark_entry__ as e
     from tests.test_plan_evidence import SF_DIR
 
     monkeypatch.setattr(tempfile, 'tempdir', str(tmp_path))
-    verdicts = e.q_stream_ingest_dedup(spark, SF_DIR)
-    assert [p for p in os.listdir(tmp_path) if p.startswith('stream_ingest_')] == []
-    assert verdicts.count() > 0   # still readable after the directory is gone
+    result = getattr(e, query)(spark, SF_DIR)
+    assert [p for p in os.listdir(tmp_path) if p.startswith(prefix)] == []
+    assert result.count() > 0   # still readable after the directory is gone

@@ -1,4 +1,4 @@
-"""Capture reference-free goldens for the horizontal entry.
+"""Capture reference-free goldens for the horizontal and vertical entries.
 
 Each case pushes a small, explicitly typed wide frame through
 ``horizontal_transform`` and records, per output branch, the
@@ -13,17 +13,26 @@ pre_rename into and out of ``edge_fields``, ``ignore_fields``,
 character inside ``dgraph_type``, and mixed-dtype frames whose branches'
 own dtype classes differ from the whole frame's.
 
-``tests/test_golden_matrix.py`` recomputes every checksum and compares it
-with ``tests/golden/horizontal_matrix.json``.
+The vertical cases (``VERTICAL_CASES``) push the same option surface
+through ``vertical_transform``: every case above except the callable one,
+with its wide frame unpivoted to a long ``(key..., predicate, object)``
+frame whose object column is the value columns cast to string, plus
+long frames with a double, a float and a timestamp object column and one
+for ``edge_id_convention``.
 
-Usage: python tools/capture_goldens.py [out_json]
-       (default: tests/golden/horizontal_matrix.json)
+``tests/test_golden_matrix.py`` recomputes every checksum and compares it
+with ``tests/golden/horizontal_matrix.json`` and
+``tests/golden/vertical_matrix.json``.
+
+Usage: python tools/capture_goldens.py [horizontal|vertical ...]
+       (default: both, each to its file under tests/golden/)
 """
 from __future__ import annotations
 
 import json
 import os
 import sys
+from datetime import datetime, timezone
 from typing import Any, Dict, List, Tuple
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -31,6 +40,7 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 GOLDEN_PATH = os.path.join(REPO, 'tests', 'golden', 'horizontal_matrix.json')
+VERTICAL_GOLDEN_PATH = os.path.join(REPO, 'tests', 'golden', 'vertical_matrix.json')
 
 TRANSCRIPT_SCHEMA = 'conv_id string, turn_idx int, role string, text string, tool string, ts string'
 TRANSCRIPT_ROWS = [
@@ -166,6 +176,43 @@ CASES: List[Tuple[str, str, list, Dict[str, Any], str, Dict[str, Any]]] = [
 ]
 
 
+def _utc(*args) -> datetime:
+    return datetime(*args, tzinfo=timezone.utc)
+
+
+def _vcfg(**file_config) -> Dict[str, Any]:
+    return {'transform': 'vertical', 'files': {'row': file_config}}
+
+
+# Long frames for the vertical entry, (name, schema, rows, config,
+# config_file_key, vertical_transform kwargs); the schema already has the
+# ``predicate`` and ``object`` columns, so they are used as given.
+VERTICAL_FRAMES: List[Tuple[str, str, list, Dict[str, Any], str, Dict[str, Any]]] = [
+    ('double_objects', 'id long, predicate string, object double',
+     [(1, 'weight', 0.1), (1, 'height', 1e7), (2, 'weight', 1e17), (2, 'height', 2.5e-7),
+      (3, 'weight', -0.0), (3, 'height', 3.0), (4, 'weight', None), (4, 'loc_id', 123456.789),
+      (5, 'height', 1e16), (5, 'weight', 12345678.5)],
+     _vcfg(subject_fields=['id'], edge_fields=['loc_id']), 'row', {}),
+    ('float_objects', 'id long, predicate string, object float',
+     [(1, 'x', 0.1), (1, 'y', 3.25), (2, 'x', 1e20), (2, 'y', None), (3, 'x', 7.0)],
+     _vcfg(subject_fields=['id'], edge_fields=['y']), 'row', {'assume_unique_subjects': True}),
+    ('timestamp_objects', 'id long, predicate string, object timestamp',
+     [(1, 'born', _utc(2021, 4, 1)), (1, 'seen', _utc(2021, 4, 1, 10, 30, 5)),
+      (2, 'born', _utc(1999, 12, 31, 23, 59, 59)), (2, 'seen', None),
+      (3, 'seen', _utc(2026, 1, 1, 0, 0, 0, 250000)), (3, 'other', _utc(2020, 2, 29, 12))],
+     _vcfg(subject_fields=['id'], type_overrides={'born': 'datetime64[ns]'},
+           date_fields={'seen': {'format': '%Y-%m-%d %H:%M:%S'}}), 'row', {}),
+    ('edge_id_convention_long', 'id long, predicate string, object string',
+     [(1, 'location_id', 'loc 1.x'), (1, 'name', 'Ann "A."'), (1, 'store_id', '7'),
+      (2, 'location_id', None), (2, 'store_id', 's%2'), (3, 'name', 'bo\nb'), (3, 'note_idx', 'k')],
+     _vcfg(subject_fields=['id'], edge_id_convention=True), 'row', {}),
+]
+
+# Every horizontal case but the callable one, unpivoted to a long frame,
+# then the long frames above.
+VERTICAL_CASES = [c for c in CASES if c[0] != 'callable_edge_fields_and_dgraph_type'] + VERTICAL_FRAMES
+
+
 def branch_checksum(df) -> List[int]:
     """``[count, bit_xor(xxhash64(subject, predicate, object, type))]``."""
     from pyspark.sql import functions as F
@@ -188,24 +235,59 @@ def case_checksums(spark, case) -> Dict[str, List[int]]:
     return {'intrinsic': branch_checksum(intrinsic), 'edges': branch_checksum(edges)}
 
 
-def capture(spark) -> Dict[str, Dict[str, List[int]]]:
-    return {case[0]: case_checksums(spark, case) for case in CASES}
+def long_frame(spark, schema: str, rows: list, subject_fields: List[str]):
+    """The case's frame in the vertical entry's long shape: used as given
+    when it has ``predicate``/``object`` columns, else every non-key column
+    unpivoted to ``(predicate, object)`` with the object cast to string."""
+    from pyspark.sql import functions as F
+
+    frame = spark.createDataFrame(rows, schema)
+    if 'predicate' in frame.columns:
+        return frame
+    values = [c for c in frame.columns if c not in subject_fields]
+    frame = frame.select(*subject_fields, *[F.col(c).cast('string').alias(c) for c in values])
+    return frame.unpivot(subject_fields, values, 'predicate', 'object')
+
+
+def vertical_case_checksums(spark, case) -> Dict[str, List[int]]:
+    import copy
+
+    from dgraphpandas_spark import vertical_transform
+
+    _name, schema, rows, config, key, kwargs = case
+    config = copy.deepcopy(config)
+    frame = long_frame(spark, schema, rows, config['files'][key]['subject_fields'])
+    intrinsic, edges = vertical_transform(frame, config, key, **kwargs)
+    return {'intrinsic': branch_checksum(intrinsic), 'edges': branch_checksum(edges)}
+
+
+ENTRIES = {
+    'horizontal': (CASES, case_checksums, GOLDEN_PATH),
+    'vertical': (VERTICAL_CASES, vertical_case_checksums, VERTICAL_GOLDEN_PATH),
+}
+
+
+def capture(spark, entry: str) -> Dict[str, Dict[str, List[int]]]:
+    cases, checksums, _path = ENTRIES[entry]
+    return {case[0]: checksums(spark, case) for case in cases}
 
 
 def main(argv: List[str]) -> int:
     from dgraphpandas_spark.session import get_spark
 
-    out = argv[1] if len(argv) > 1 else GOLDEN_PATH
+    entries = argv[1:] or list(ENTRIES)
     spark = get_spark(app_name='capture-goldens', master='local[2]', shuffle_partitions=2)
     try:
-        cases = capture(spark)
+        captured = {entry: capture(spark, entry) for entry in entries}
     finally:
         spark.stop()
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    with open(out, 'w') as f:
-        json.dump({'cases': cases}, f, indent=1, sort_keys=True)
-        f.write('\n')
-    print(f'{len(cases)} cases -> {out}')
+    for entry, cases in captured.items():
+        out = ENTRIES[entry][2]
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        with open(out, 'w') as f:
+            json.dump({'cases': cases}, f, indent=1, sort_keys=True)
+            f.write('\n')
+        print(f'{entry}: {len(cases)} cases -> {out}')
     return 0
 
 
