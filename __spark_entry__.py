@@ -2060,10 +2060,10 @@ def q_stream_ingest_dedup(spark, sf_dir):
     maxFilesPerTrigger=1) and each trigger is judged against the static
     corpus LSH index via foreachBatch.  Verdicts are micro-batch-split
     invariant (each doc is judged only against the static corpus), so the
-    sink is checked by the dedup_incremental ORACLE VERBATIM — streaming
-    ≡ batch through storage.  The working directory (input files,
-    checkpoint, sink) is removed once the sink is read back into a local
-    checkpoint."""
+    sink's verdict columns are checked by the dedup_incremental ORACLE
+    VERBATIM — streaming ≡ batch through storage.  The working directory
+    (input files, checkpoint, sink) is removed once the sink is read back
+    into a local checkpoint."""
     from dgraphpandas_spark.streaming.stream import stream_ingest_dedup
 
     d = _t(spark, sf_dir, 'documents').select('doc_id', 'text')
@@ -2092,7 +2092,10 @@ def q_stream_ingest_dedup(spark, sf_dir):
             stream, d, out, os.path.join(tmp, 'ck'), n=3, bands=4, threshold=0.5
         )
         q.awaitTermination()
-        return spark.read.parquet(out).localCheckpoint(eager=True)
+        return (
+            spark.read.parquet(out).select('id', 'dup_of', 'jaccard', 'keep')
+            .localCheckpoint(eager=True)
+        )
 
 
 def entry(spark: SparkSession) -> DataFrame:

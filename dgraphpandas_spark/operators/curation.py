@@ -741,9 +741,9 @@ def bigram_logprob(
     Physical shape: bigram extraction is the same pure array ``transform``
     as ``collocations`` (no posexplode self-join); TWO train-side
     HashAggregates (bigram + unigram counts, map-side combined); the
-    vocabulary-sized LM tables join back broadcast while they fit (at
-    trillion-token scale drop the broadcast hints — AQE plans the
-    sort-merge); one regroup on the doc id.  Returns
+    vocabulary-sized LM tables join back unhinted, so AQE broadcasts them
+    while they fit and plans a shuffle join beyond that; one regroup on
+    the doc id.  Returns
     DataFrame[id, n_bigrams, avg_logprob] — docs with < 2 non-empty
     tokens have no bigrams and no row.
     """
@@ -777,11 +777,9 @@ def bigram_logprob(
     alpha_micro = F.round(F.log(F.lit(float(alpha))) * 1e6, 0).cast('long')
     scored = (
         _bigrams(df, True)
-        .join(F.broadcast(bc), ['w1', 'w2'], 'left')
-        .join(F.broadcast(uni.select(F.col('w').alias('w1'),
-                                     F.col('c').alias('cu1'))), 'w1', 'left')
-        .join(F.broadcast(uni.select(F.col('w').alias('w2'),
-                                     F.col('c').alias('cu2'))), 'w2', 'left')
+        .join(bc, ['w1', 'w2'], 'left')
+        .join(uni.select(F.col('w').alias('w1'), F.col('c').alias('cu1')), 'w1', 'left')
+        .join(uni.select(F.col('w').alias('w2'), F.col('c').alias('cu2')), 'w2', 'left')
         .crossJoin(F.broadcast(total))
         .select(
             'id',

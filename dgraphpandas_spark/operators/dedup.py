@@ -8,8 +8,8 @@ Scale design notes (the point at 100 TB):
   map-side before the shuffle; only one (hash → min id) pair per group
   crosses the wire.
 - shingle joins: the candidate generator joins on shingle/bucket keys, never
-  all-pairs; ``max_df`` drops ultra-frequent shingles (the classic hot-key
-  guard — a shingle appearing in k docs contributes k² candidate pairs).
+  all-pairs; ``max_df``/``max_bucket`` drop hot keys first
+  (operators/blocking.py — a key in k docs contributes k² candidate pairs).
 - MinHash/LSH: signatures are per-doc aggregations (map-side partial);
   candidates only join within a band bucket.
 - All hashes are md5-derived → deterministic, identical in DuckDB oracles.
@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.similarity import dot, unit
 from ..functions.text import fingerprint, token_count, tokens
+from .blocking import drop_hot_keys, hamming1
 
 
 def exact_dedup(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text') -> DataFrame:
@@ -80,14 +81,10 @@ def ngram_jaccard_pairs(
     """Near-duplicate pairs by n-gram Jaccard ≥ threshold.
 
     shingle-join candidate generation: |A∩B| from a self-join on shingle,
-    |A|,|B| from per-doc counts, J = ∩ / (|A|+|B|−∩).  ``max_df`` removes
-    shingles present in more than max_df docs before the join — the
-    hot-key guard is ON by default (a shingle appearing in k docs yields
-    k² candidate rows; one stopword-ish shingle at 100 TB is a quadratic
-    blowup).  Pass ``max_df=None`` for exact small-data runs; the oracle
-    mirrors the guard.  NB the guard changes |A∩B| only for pairs whose
-    overlap includes an ultra-common shingle, and |A|,|B| stay exact, so
-    guarded Jaccard is a lower bound of the true value.
+    |A|,|B| from per-doc counts, J = ∩ / (|A|+|B|−∩).  ``max_df`` is the
+    hot-shingle guard (operators/blocking.py), ON by default; pass
+    ``max_df=None`` for exact small-data runs; the oracle mirrors the
+    guard.  |A|,|B| count the shingles that survive the guard.
     """
     # DISK_ONLY, not memory cache: the shingle frame is O(corpus tokens) —
     # at 100 TB it cannot live in executor memory, and it is read 4×
@@ -95,14 +92,9 @@ def ngram_jaccard_pairs(
     # the corpus 4×.  Disk spill of the exploded frame is the right trade.
     from pyspark import StorageLevel
 
-    sh = shingles(df, id_col, text_col, n).persist(StorageLevel.DISK_ONLY)
-    if max_df:
-        # broadcast the HOT list (small by construction: few ultra-frequent
-        # shingles) and anti-join — not the keep list, which is ~all shingles
-        hot = sh.groupBy('shingle').count().filter(F.col('count') > max_df).select('shingle')
-        sh = sh.join(F.broadcast(hot), 'shingle', 'left_anti')
-    sizes = sh.groupBy('id').agg(F.count('*').alias('sz'))
-
+    sh = drop_hot_keys(
+        shingles(df, id_col, text_col, n).persist(StorageLevel.DISK_ONLY), 'shingle', max_df
+    )
     a = sh.select(F.col('id').alias('id_a'), 'shingle')
     b = sh.select(F.col('id').alias('id_b'), 'shingle')
     inter = (
@@ -111,14 +103,22 @@ def ngram_jaccard_pairs(
         .groupBy('id_a', 'id_b')
         .agg(F.count('*').alias('inter'))
     )
-    out = (
+    return _jaccard(inter, sh).filter(F.col('jaccard') >= threshold)
+
+
+def _jaccard(inter: DataFrame, sh: DataFrame) -> DataFrame:
+    """(id_a, id_b, jaccard) from per-pair shingle overlaps ``inter`` and
+    the (id, shingle) rows ``sh`` the per-doc sizes are counted from."""
+    sizes = sh.groupBy('id').agg(F.count('*').alias('sz'))
+    return (
         inter.join(sizes.withColumnsRenamed({'id': 'id_a', 'sz': 'sz_a'}), 'id_a')
         .join(sizes.withColumnsRenamed({'id': 'id_b', 'sz': 'sz_b'}), 'id_b')
-        .withColumn('jaccard', F.round(F.col('inter') / (F.col('sz_a') + F.col('sz_b') - F.col('inter')), 6))
-        .filter(F.col('jaccard') >= threshold)
+        .withColumn(
+            'jaccard',
+            F.round(F.col('inter') / (F.col('sz_a') + F.col('sz_b') - F.col('inter')), 6),
+        )
         .select('id_a', 'id_b', 'jaccard')
     )
-    return out
 
 
 def minhash_signatures(
@@ -171,8 +171,7 @@ def minhash_lsh_candidates(
     with a narrow ``posexplode``, then pairs expanded as a *within-bucket
     self-join* (``a JOIN b ON bucket WHERE id_a < id_b``) — a single
     logical shuffle on bucket, never an all-pairs join.  ``max_bucket``
-    drops degenerate hot buckets (a bucket of k docs yields k² pairs —
-    the LSH hot-key guard at scale).
+    is the hot-bucket guard (operators/blocking.py).
 
     Why a self-join and not ``collect_set`` + double ``explode`` (the
     round-3 shape): collect_set is a payload-carrying aggregate partial
@@ -182,21 +181,10 @@ def minhash_lsh_candidates(
     constant, lets AQE's skew-join split a hot bucket across tasks, and
     Spark's ReuseExchange dedupes the two identical join inputs, so the
     bucket stream is still shuffled once."""
-    sigs = minhash_signatures(df, id_col, text_col, n, bands)
-    buckets = sigs.select(
-        'id',
-        F.posexplode(F.array(*[F.col(f'sig_{j}') for j in range(bands)])).alias('band', 'sig'),
-    ).select('id', F.concat(F.col('band').cast('string'), F.lit('|'), F.col('sig')).alias('bucket'))
     # ids are unique within a bucket (the band index is part of the bucket
     # key and posexplode emits one row per (id, band)), so count(*) is the
     # bucket's membership size
-    ok = (
-        buckets.groupBy('bucket')
-        .agg(F.count('*').alias('k'))
-        .filter((F.col('k') >= 2) & (F.col('k') <= max_bucket))
-        .select('bucket')
-    )
-    eligible = buckets.join(ok, 'bucket')
+    eligible = drop_hot_keys(minhash_buckets(df, id_col, text_col, n, bands), 'bucket', max_bucket)
     a = eligible.select('bucket', F.col('id').alias('id_a'))
     b = eligible.select('bucket', F.col('id').alias('id_b'))
     return (
@@ -237,7 +225,6 @@ def jaccard_for_pairs(
         from pyspark import StorageLevel
 
         sh = sh.persist(getattr(StorageLevel, shingle_storage))
-    sizes = sh.groupBy('id').agg(F.count('*').alias('sz'))
     sa = sh.select(F.col('id').alias('id_a'), 'shingle')
     sb = sh.select(F.col('id').alias('id_b'), 'shingle')
     inter = (
@@ -247,15 +234,7 @@ def jaccard_for_pairs(
         .groupBy('id_a', 'id_b')
         .agg(F.count('*').alias('inter'))
     )
-    return (
-        inter.join(sizes.withColumnsRenamed({'id': 'id_a', 'sz': 'sz_a'}), 'id_a')
-        .join(sizes.withColumnsRenamed({'id': 'id_b', 'sz': 'sz_b'}), 'id_b')
-        .withColumn(
-            'jaccard',
-            F.round(F.col('inter') / (F.col('sz_a') + F.col('sz_b') - F.col('inter')), 6),
-        )
-        .select('id_a', 'id_b', 'jaccard')
-    )
+    return _jaccard(inter, sh)
 
 
 def connected_components(
@@ -424,38 +403,27 @@ def embedding_neardup_pairs_lsh(
     exactly one hyperplane.  Raises per-pair recall from p^P to
     p^P + P·p^(P-1)(1−p) without coarsening the blocks.
 
-    ``max_bucket`` (ON by default) drops degenerate hot buckets before the
-    self-join — a bucket of k vectors yields k² scored rows, the same
-    quadratic hot-key failure as a hot shingle; mirrored in the oracle."""
+    ``max_bucket`` (ON by default) is the hot-bucket guard
+    (operators/blocking.py); mirrored in the oracle."""
     from ..functions.similarity import hyperplanes, lsh_bucket
 
     planes = hyperplanes(n_planes, dim, seed)
     # bucket from the RAW vector (fp-exact blocking parity with the
     # oracle); stored v prenormalized for the one-dot cosine
-    bucketed = df.select(
+    bucketed = drop_hot_keys(df.select(
         F.col(id_col).alias('id'),
         unit(F.col(vec_col)).alias('v'),
         lsh_bucket(F.col(vec_col), planes).alias('bucket'),
-    )
-    if max_bucket:
-        # broadcast the HOT bucket list (small by construction) + anti-join
-        hot = (
-            bucketed.groupBy('bucket').count()
-            .filter(F.col('count') > max_bucket)
-            .select('bucket')
-        )
-        bucketed = bucketed.join(F.broadcast(hot), 'bucket', 'left_anti')
+    ), 'bucket', max_bucket)
     a = bucketed.select(F.col('id').alias('id_a'), F.col('v').alias('va'), 'bucket')
     b_src = bucketed
     if multi_probe:
         # asymmetric expansion: only ONE side probes its bit-flip neighbors,
         # so a pair at Hamming distance 1 meets exactly where the flipped
         # bit matches the other side's true bucket
-        probes = F.array(
-            F.col('bucket'),
-            *[F.col('bucket').bitwiseXOR(F.lit(2 ** i)) for i in range(n_planes)],
+        b_src = bucketed.select(
+            'id', 'v', F.explode(hamming1(F.col('bucket'), n_planes)).alias('bucket')
         )
-        b_src = bucketed.select('id', 'v', F.explode(probes).alias('bucket'))
     b = b_src.select(F.col('id').alias('id_b'), F.col('v').alias('vb'), 'bucket')
     return (
         a.join(b, 'bucket')
@@ -706,23 +674,21 @@ def containment_pairs(
     containment_ppm = |fp(A) ∩ fp(B)| · 1e6 DIV |fp(A)| ≥
     ``threshold_ppm`` (integer ppm — engine-portable, no float ratio).
 
-    Scale shape: fingerprints explode to (id, fp) rows; hashes shared by
-    more than ``max_df`` docs are dropped FIRST (the stopword-gram hot
-    guard of ``ngram_jaccard_dedup``, audited by the denominator: ``n_a``
-    counts RETAINED fingerprints, so the ratio stays consistent); the
-    candidate generator is one equi-join on the 60-bit hash (never
-    all-pairs, per-hash fan-out ≤ max_df²) into one (id_a, id_b)
-    HashAggregate; the per-doc size joins back broadcast-eligible.  Docs
+    Scale shape: fingerprints explode to (id, fp) rows; hashes in more
+    than ``max_df`` rows are dropped FIRST (the hot-key guard,
+    operators/blocking.py; ``n_a`` counts RETAINED fingerprints, so the
+    ratio stays consistent); the candidate generator is one equi-join on
+    the 60-bit hash (never all-pairs, per-hash fan-out ≤ max_df²) into one
+    (id_a, id_b) HashAggregate; the per-doc size joins back
+    broadcast-eligible.  Docs
     shorter than ``k`` tokens fingerprint to ∅ and emit nothing.
     """
     from ..functions.text import winnow_fingerprints
 
-    fp = df.select(
+    kept = drop_hot_keys(df.select(
         F.col(id_col).alias('id'),
         F.explode(winnow_fingerprints(F.col(text_col), k=k, w=w)).alias('fp'),
-    )
-    ok = fp.groupBy('fp').agg(F.count('*').alias('df_')).filter(F.col('df_') <= max_df)
-    kept = fp.join(ok.select('fp'), 'fp')
+    ), 'fp', max_df)
     sizes = kept.groupBy('id').agg(F.count('*').alias('n'))
     shared = (
         kept.select(F.col('id').alias('id_a'), 'fp')
@@ -755,9 +721,9 @@ def minhash_buckets(
     corpus wave and written partitioned (or bucketed) by ``bucket``;
     every subsequent ingestion batch joins against the stored index with
     a partition-pruned scan instead of re-signing the corpus.  One
-    signature HashAggregate + a narrow posexplode — identical arithmetic
-    to ``minhash_lsh_candidates``' bucket stage (same bucket keys, so an
-    index built here is valid for within-corpus candidates too)."""
+    signature HashAggregate + a narrow posexplode — the bucket stage of
+    ``minhash_lsh_candidates`` too, so an index built here is valid for
+    within-corpus candidates."""
     sigs = minhash_signatures(df, id_col, text_col, n, bands)
     return sigs.select(
         'id',
@@ -797,11 +763,9 @@ def incremental_dedup(
     ``corpus_buckets``: pass a precomputed ``minhash_buckets`` frame
     (e.g. read back from a bucket-partitioned table) to skip re-signing
     the corpus — the steady-state path; ``corpus_df`` is then only needed
-    for the Jaccard verify shingles.  The hot-bucket guard caps CORPUS
-    bucket membership (a stopword-degenerate bucket pairs every new doc
-    with ``k`` corpus docs); like ``knn_graph`` the cap is a recall
-    guard, mirrored by the oracle, and at ``max_bucket=10_000`` only
-    degenerate buckets hit it.
+    for the Jaccard verify shingles.  The hot-bucket guard
+    (operators/blocking.py) counts CORPUS bucket membership; it is a
+    recall guard, mirrored by the oracle.
 
     Plan shape: one equi-join on bucket (batch side small → broadcast-
     eligible under AQE), DISTINCT pair projection, the bounded
@@ -816,14 +780,8 @@ def incremental_dedup(
     if corpus_buckets is None:
         corpus_buckets = minhash_buckets(corpus_df, id_col, text_col, n, bands)
     new_buckets = minhash_buckets(new_df, id_col, text_col, n, bands)
-    ok = (
-        corpus_buckets.groupBy('bucket')
-        .agg(F.count('*').alias('k'))
-        .filter(F.col('k') <= max_bucket)
-        .select('bucket')
-    )
     pairs = (
-        new_buckets.join(corpus_buckets.join(ok, 'bucket')
+        new_buckets.join(drop_hot_keys(corpus_buckets, 'bucket', max_bucket)
                          .select('bucket', F.col('id').alias('id_b')), 'bucket')
         .select(F.col('id').alias('id_a'), 'id_b')
         .distinct()

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .blocking import drop_hot_keys
 from .checkpointing import make_checkpointer
 
 
@@ -341,23 +342,16 @@ def bipartite_project(
     Scale shape: the projection is the textbook bipartite explosion — a
     src with degree d emits d² pairs, so one hot conversation touching
     10^5 tools would emit 10^10 rows.  ``max_src_degree`` is therefore ON
-    by default (same pattern as dedup's ``max_df`` hot-shingle guard):
-    srcs above the cap are dropped from the projection via a key-only
-    aggregate + broadcast-friendly anti-join BEFORE the self-join.  The
-    self-join itself is an equi-join on src (never all-pairs); the final
-    weight rollup is a hash-groupBy on the (a, b) pair with map-side
+    by default: srcs above the cap are dropped BEFORE the self-join (the
+    hot-key guard, operators/blocking.py).  The self-join itself is an
+    equi-join on src (never all-pairs); the final weight rollup is a hash-groupBy on the (a, b) pair with map-side
     partials.  Edges are deduped to DISTINCT (src, dst) first so weight
     counts conversations, not event multiplicity.
     """
-    e = edges.select(F.col(src).alias('src'), F.col(dst).alias('dst')).distinct()
-    if max_src_degree is not None:
-        hot = (
-            e.groupBy('src')
-            .agg(F.count('*').alias('d'))
-            .filter(F.col('d') > max_src_degree)
-            .select('src')
-        )
-        e = e.join(hot, 'src', 'left_anti')
+    e = drop_hot_keys(
+        edges.select(F.col(src).alias('src'), F.col(dst).alias('dst')).distinct(),
+        'src', max_src_degree,
+    )
     a = e.select('src', F.col('dst').alias('a'))
     b = e.select('src', F.col('dst').alias('b'))
     return (

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.similarity import cosine, dot, hyperplanes, ivf_cell, lsh_bucket, unit
+from .blocking import hamming1, hot_keys
 
 
 def brute_force_topk(
@@ -597,19 +598,19 @@ def knn_graph(
     back — the same knobs as the near-dup path, measured in
     ``ann_recall``.
 
-    Hot buckets (> ``max_bucket`` members) are NOT silently dropped
-    (round-4 verdict item #4): members of a hot bucket are routed through
-    a FALLBACK join instead — re-bucketed with ``n_sub_planes`` extra
-    hyperplanes (independent seed), splitting each hot bucket into up to
-    2^n_sub_planes refinements, and joined within (bucket, sub) with the
-    same asymmetric Hamming-1 probe expansion over the sub bits.  Hot
-    members meet only hot members of the same original bucket, so no
-    pair can arise from both paths and no dedup pass is needed.  Hot
-    buckets are detected by an eager key-only count (result bounded by
-    2^n_planes rows — metadata-scale collect, same class as the IVF
-    centroid collect); when none exist (the common case) the fallback
-    branch is not planned at all, so the no-hot plan is IDENTICAL to a
-    capless run minus the anti-join.  Pass ``audit={}`` to receive
+    Hot buckets (operators/blocking.py: > ``max_bucket`` members) are
+    NOT silently dropped (round-4 verdict item #4): members of a hot
+    bucket are routed through a FALLBACK join instead — re-bucketed
+    with ``n_sub_planes`` extra hyperplanes (independent seed), splitting
+    each hot bucket into up to 2^n_sub_planes refinements, and joined
+    within (bucket, sub) with the same asymmetric Hamming-1 probe
+    expansion over the sub bits.  Hot members meet only hot members of
+    the same original bucket, so no pair can arise from both paths and
+    no dedup pass is needed.  Hot buckets are collected eagerly from
+    ``blocking.hot_keys`` (at most 2^n_planes rows — metadata-scale,
+    same class as the IVF centroid collect); when none exist (the common
+    case) the fallback branch is not planned at all, so the no-hot plan
+    is IDENTICAL to a capless run.  Pass ``audit={}`` to receive
     ``hot_buckets`` / ``hot_nodes`` counts (free — derived from the same
     detection aggregate).  Nodes in degenerate refinements (a
     bucket-of-one after sub-splitting, probes exhausted) can still end
@@ -632,6 +633,22 @@ def knn_graph(
     """
     from pyspark.sql import Window
 
+    def pairs(side, keys, bits):
+        # directed within-block pairs of `side` on `keys`; with `bits`, the
+        # build side explodes its last key to the Hamming-1 probes
+        a = side.select('id', F.col('v').alias('va'), *keys)
+        b_src = side
+        if bits:
+            b_src = side.select(
+                'id', 'v', *keys[:-1], F.explode(hamming1(F.col(keys[-1]), bits)).alias(keys[-1])
+            )
+        b = b_src.select(F.col('id').alias('nbr'), F.col('v').alias('vb'), *keys)
+        return (
+            a.join(b, keys)
+            .filter(F.col('id') != F.col('nbr'))
+            .select('id', 'nbr', F.round(dot(F.col('va'), F.col('vb')), 6).alias('cos'))
+        )
+
     if method == 'ivf':
         cents = centroids if centroids is not None else train_ivf_centroids(
             df, n_cells=n_cells, iters=iters, id_col=id_col, vec_col=vec_col
@@ -639,12 +656,10 @@ def knn_graph(
         # cell assignment reads the RAW vector (identical blocking to the
         # oracle); the stored v is prenormalized so the per-pair cosine
         # below is ONE dot product instead of three (functions.unit)
-        bucketed = ivf_assign(df, vec_col=vec_col, centroids=cents).select(
+        cand = pairs(ivf_assign(df, vec_col=vec_col, centroids=cents).select(
             F.col(id_col).alias('id'), unit(F.col(vec_col)).alias('v'),
             F.col('cell').alias('bucket'),
-        )
-        a = bucketed.select('id', F.col('v').alias('va'), 'bucket')
-        b = bucketed.select(F.col('id').alias('nbr'), F.col('v').alias('vb'), 'bucket')
+        ), ['bucket'], None)
     else:
         planes = hyperplanes(n_planes, dim, seed)
         # bucket from the RAW vector (sign-LSH is scale-invariant in exact
@@ -658,65 +673,31 @@ def knn_graph(
         hot_buckets: list = []
         if max_bucket:
             # Eager key-only detection: ≤ 2^n_planes rows — metadata-scale.
-            hot_rows = (
-                bucketed.groupBy('bucket').count()
-                .filter(F.col('count') > max_bucket)
-                .collect()
-            )
+            hot_rows = hot_keys(bucketed, 'bucket', max_bucket).collect()
             hot_buckets = [r['bucket'] for r in hot_rows]
             if audit is not None:
                 audit['hot_buckets'] = len(hot_buckets)
                 audit['hot_nodes'] = int(sum(r['count'] for r in hot_rows))
             if hot_buckets:
                 bucketed = bucketed.filter(~F.col('bucket').isin(hot_buckets))
-        a = bucketed.select(F.col('id'), F.col('v').alias('va'), 'bucket')
-        b_src = bucketed
-        if multi_probe:
-            probes = F.array(
-                F.col('bucket'),
-                *[F.col('bucket').bitwiseXOR(F.lit(2 ** i)) for i in range(n_planes)],
+        cand = pairs(bucketed, ['bucket'], n_planes if multi_probe else None)
+        if hot_buckets:
+            # Fallback routing for hot-bucket members: refine with independent
+            # extra planes, join within (bucket, sub).  Hot meets only hot of
+            # the same original bucket — disjoint from the primary join's
+            # pairs, so a plain unionByName is duplicate-free.
+            # Both bucket AND sub come from the RAW vector (see above); v is
+            # prenormalized for the one-dot cosine.
+            sub_planes = hyperplanes(n_sub_planes, dim, seed + 104_729)
+            hot_ref = df.select(
+                F.col(id_col).alias('id'),
+                unit(F.col(vec_col)).alias('v'),
+                lsh_bucket(F.col(vec_col), planes).alias('bucket'),
+                lsh_bucket(F.col(vec_col), sub_planes).alias('sub'),
+            ).filter(F.col('bucket').isin(hot_buckets))
+            cand = cand.unionByName(
+                pairs(hot_ref, ['bucket', 'sub'], n_sub_planes if multi_probe else None)
             )
-            b_src = bucketed.select('id', 'v', F.explode(probes).alias('bucket'))
-        b = b_src.select(F.col('id').alias('nbr'), F.col('v').alias('vb'), 'bucket')
-    cand = (
-        a.join(b, 'bucket')
-        .filter(F.col('id') != F.col('nbr'))
-        .select('id', 'nbr', F.round(dot(F.col('va'), F.col('vb')), 6).alias('cos'))
-    )
-    if method != 'ivf' and max_bucket and hot_buckets:
-        # Fallback routing for hot-bucket members: refine with independent
-        # extra planes, join within (bucket, sub).  Hot meets only hot of
-        # the same original bucket — disjoint from the primary join's
-        # pairs, so a plain unionByName is duplicate-free.
-        # Both bucket AND sub come from the RAW vector (see above); v is
-        # prenormalized for the one-dot cosine.
-        sub_planes = hyperplanes(n_sub_planes, dim, seed + 104_729)
-        hot_ref = df.select(
-            F.col(id_col).alias('id'),
-            unit(F.col(vec_col)).alias('v'),
-            lsh_bucket(F.col(vec_col), planes).alias('bucket'),
-            lsh_bucket(F.col(vec_col), sub_planes).alias('sub'),
-        ).filter(F.col('bucket').isin(hot_buckets))
-        ha = hot_ref.select('id', F.col('v').alias('va'), 'bucket', 'sub')
-        hb_src = hot_ref
-        if multi_probe:
-            sub_probes = F.array(
-                F.col('sub'),
-                *[F.col('sub').bitwiseXOR(F.lit(2 ** i)) for i in range(n_sub_planes)],
-            )
-            hb_src = hot_ref.select(
-                'id', 'v', 'bucket', F.explode(sub_probes).alias('sub')
-            )
-        hb = hb_src.select(
-            F.col('id').alias('nbr'), F.col('v').alias('vb'), 'bucket', 'sub'
-        )
-        hot_cand = (
-            ha.join(hb, ['bucket', 'sub'])
-            .filter(F.col('id') != F.col('nbr'))
-            .select('id', 'nbr',
-                    F.round(dot(F.col('va'), F.col('vb')), 6).alias('cos'))
-        )
-        cand = cand.unionByName(hot_cand)
     w = Window.partitionBy('id').orderBy(F.desc('cos'), F.asc('nbr'))
     return (
         cand.withColumn('rank', F.row_number().over(w))
@@ -786,11 +767,7 @@ def knn_classify(
         r = r.withColumn('bucket', lsh_bucket(F.col('rraw'), planes))
         qb = q.withColumn('bucket', lsh_bucket(F.col('qraw'), planes))
         if multi_probe:
-            probes = F.array(
-                F.col('bucket'),
-                *[F.col('bucket').bitwiseXOR(F.lit(2 ** i)) for i in range(n_planes)],
-            )
-            qb = qb.select('qid', 'qv', F.explode(probes).alias('bucket'))
+            qb = qb.select('qid', 'qv', F.explode(hamming1(F.col('bucket'), n_planes)).alias('bucket'))
         cand = r.join(F.broadcast(qb), 'bucket')
     else:
         cand = r.crossJoin(F.broadcast(q.select('qid', 'qv')))

@@ -131,16 +131,19 @@ def stream_ingest_dedup(
     """Admission-control dedup AT INGEST: every micro-batch of newly
     arriving documents is judged against the STATIC corpus LSH index
     (operators/dedup.py:incremental_dedup) and its verdict rows
-    (id, dup_of, jaccard, keep) are appended to ``output_dir``.
+    (id, dup_of, jaccard, keep) are written to
+    ``output_dir/batch_id=<micro-batch id>``, so reading ``output_dir``
+    gives the verdicts plus a ``batch_id`` partition column.
 
     Micro-batch-split INVARIANT by construction: each document's verdict
     depends only on the static corpus — never on which trigger carried
     the document or what else shared its batch (batch-internal dups are
     out of scope, exactly as in the batch operator) — so the union of all
     batch outputs equals one batch run over the whole stream, and the
-    driver oracle for the batch operator checks this sink verbatim.
-    Exactly-once through storage: checkpoint + per-batch append of a
-    deterministic transform (a replayed batch rewrites identical rows).
+    batch operator's oracle checks the sink's verdict columns verbatim.
+    Exactly-once through storage: a replayed micro-batch (same id, same
+    offsets after a restart from the checkpoint) overwrites its own
+    ``batch_id`` directory with the same rows and touches no other batch.
 
     At 100 TB: ``corpus_buckets`` is the bucket-partitioned index
     materialized once per corpus wave (``minhash_buckets``) — the stream
@@ -159,7 +162,7 @@ def stream_ingest_dedup(
             n=n, bands=bands, threshold=threshold, max_bucket=max_bucket,
             corpus_buckets=corpus_buckets,
         )
-        verdicts.write.mode('append').parquet(output_dir)
+        verdicts.write.mode('overwrite').parquet(f'{output_dir}/batch_id={batch_id}')
 
     return write_stream_available_now(docs_stream, checkpoint_dir, batch_fn)
 

@@ -1,10 +1,12 @@
-"""Lambda-capture guard for the ``functions.similarity`` helpers.
+"""Lambda-capture guard for the ``functions.similarity`` helpers and the
+LSH-blocked operators built on them.
 
 Spark does no common-subexpression elimination inside a lambda, so a
 higher-order function or aggregate in a lambda body that references none
 of that lambda's own variables is re-evaluated for every element:
 ``transform(a, x -> x / norm(a))`` costs O(dim²) per row.  The walk below
-reads the analyzed plan of each helper and flags such a subexpression.
+reads the analyzed plan of each helper or operator and flags such a
+subexpression.
 """
 from __future__ import annotations
 
@@ -15,6 +17,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from dgraphpandas_spark.functions import similarity as S
+from dgraphpandas_spark.operators.blocking import hamming1
+from dgraphpandas_spark.operators.dedup import embedding_neardup_pairs_lsh
+from dgraphpandas_spark.operators.simsearch import knn_classify, knn_graph
 
 _CATALYST = 'org.apache.spark.sql.catalyst.expressions.'
 
@@ -86,6 +91,35 @@ def vectors(spark):
 @pytest.mark.parametrize('helper', sorted(HELPERS))
 def test_similarity_helpers_capture_no_per_element_work(vectors, helper):
     assert captured_subexpressions(vectors.select(HELPERS[helper]().alias('v'))) == []
+
+
+CORPUS = [(1, [3.0, 4.0, 0.0], 'x'), (2, [3.0, 4.0, 0.1], 'x'),
+          (3, [0.1, -0.2, 0.3], 'y'), (4, [-1.0, 0.5, 2.0], 'y')]
+
+
+def _knn_graph(corpus, max_bucket):
+    audit = {}
+    out = knn_graph(corpus, n_planes=2, dim=3, seed=1, max_bucket=max_bucket, audit=audit)
+    assert (audit['hot_buckets'] > 0) == (max_bucket == 1)   # the path asked for
+    return out
+
+
+OPERATORS = {
+    'blocking.hamming1': lambda c: c.select(
+        hamming1(S.lsh_bucket(F.col('embedding'), PLANES), len(PLANES)).alias('p')),
+    'embedding_neardup_pairs_lsh[multi_probe]': lambda c: embedding_neardup_pairs_lsh(
+        c, n_planes=2, dim=3, seed=1, multi_probe=True),
+    'knn_graph[primary]': lambda c: _knn_graph(c, 10_000),
+    'knn_graph[hot]': lambda c: _knn_graph(c, 1),
+    'knn_classify[lsh]': lambda c: knn_classify(
+        c, c, k=2, method='lsh', n_planes=2, dim=3, seed=1),
+}
+
+
+@pytest.mark.parametrize('operator', sorted(OPERATORS))
+def test_blocked_operators_capture_no_per_element_work(spark, operator):
+    corpus = spark.createDataFrame(CORPUS, 'vec_id long, embedding array<float>, label string')
+    assert captured_subexpressions(OPERATORS[operator](corpus)) == []
 
 
 def test_the_walk_flags_a_captured_norm(vectors):

@@ -3,6 +3,7 @@ stream_ingest_dedup): the sink after draining N forced micro-batches must
 equal ONE batch run of operators/dedup.incremental_dedup over the same
 input (micro-batch-split invariance — each doc is judged only against the
 static corpus), and the stream must actually have split into >= 2 batches.
+A micro-batch replayed after a restart must not duplicate its verdicts.
 """
 from __future__ import annotations
 
@@ -36,33 +37,40 @@ def _frames(spark):
     return corpus, new
 
 
-def test_streamed_verdicts_equal_batch_and_split_into_batches(spark, tmp_path):
-    corpus, new = _frames(spark)
+def _drain(spark, new, corpus, tmp_path):
+    """Stream ``new`` in two forced micro-batches through
+    stream_ingest_dedup (input files written on the first call only) and
+    wait for the drain; returns the finished query."""
     indir = str(tmp_path / 'in')
-    os.makedirs(indir)
-    for par in (0, 1):
-        new.filter(F.col('doc_id') % 2 == par).coalesce(1) \
-            .write.mode('append').parquet(indir)
+    if not os.path.exists(indir):
+        os.makedirs(indir)
+        for par in (0, 1):
+            new.filter(F.col('doc_id') % 2 == par).coalesce(1) \
+                .write.mode('append').parquet(indir)
     stream = (
         spark.readStream.schema(new.schema)
         .option('maxFilesPerTrigger', 1)
         .parquet(indir)
     )
-    out = str(tmp_path / 'verdicts')
     q = stream_ingest_dedup(
-        stream, corpus, out, str(tmp_path / 'ck'), n=3, bands=4, threshold=0.5
+        stream, corpus, str(tmp_path / 'verdicts'), str(tmp_path / 'ck'),
+        n=3, bands=4, threshold=0.5,
     )
     q.awaitTermination()
+    return q
+
+
+def _verdicts(rows):
+    return sorted((r['id'], r['dup_of'], r['jaccard'], r['keep']) for r in rows)
+
+
+def test_streamed_verdicts_equal_batch_and_split_into_batches(spark, tmp_path):
+    corpus, new = _frames(spark)
+    q = _drain(spark, new, corpus, tmp_path)
     assert len(q.recentProgress) >= 2          # genuinely micro-batched
 
-    streamed = sorted(
-        (r['id'], r['dup_of'], r['jaccard'], r['keep'])
-        for r in spark.read.parquet(out).collect()
-    )
-    batch = sorted(
-        (r['id'], r['dup_of'], r['jaccard'], r['keep'])
-        for r in incremental_dedup(new, corpus, n=3, bands=4, threshold=0.5).collect()
-    )
+    streamed = _verdicts(spark.read.parquet(str(tmp_path / 'verdicts')).collect())
+    batch = _verdicts(incremental_dedup(new, corpus, n=3, bands=4, threshold=0.5).collect())
     assert streamed == batch
     assert len(streamed) == new.count()        # one verdict per new doc
     # every planted EXACT dup was caught with jaccard 1.0 against its source
@@ -72,6 +80,27 @@ def test_streamed_verdicts_equal_batch_and_split_into_batches(spark, tmp_path):
     for i in exact_ids:
         d, j, k = by_id[i]
         assert not k and d == i - 1000 and j == 1.0
+
+
+def test_replayed_micro_batch_does_not_duplicate_verdicts(spark, tmp_path):
+    """Deleting the checkpoint's last commit makes a restarted query run
+    that micro-batch again with the same id and offsets; the sink must
+    still hold exactly one batch run's verdicts."""
+    corpus, new = _frames(spark)
+    _drain(spark, new, corpus, tmp_path)
+    commits = tmp_path / 'ck' / 'commits'
+    last = max((p for p in commits.iterdir() if p.name.isdigit()), key=lambda p: int(p.name))
+    assert int(last.name) >= 1
+    for stale in (last, commits / f'.{last.name}.crc'):
+        if stale.exists():
+            stale.unlink()
+    replay = _drain(spark, new, corpus, tmp_path)
+    assert [p['batchId'] for p in replay.recentProgress if p['numInputRows']] == [int(last.name)]
+
+    streamed = _verdicts(spark.read.parquet(str(tmp_path / 'verdicts')).collect())
+    batch = _verdicts(incremental_dedup(new, corpus, n=3, bands=4, threshold=0.5).collect())
+    assert streamed == batch
+    assert len({v[0] for v in streamed}) == len(streamed) == new.count()
 
 
 # every __spark_entry__ query that writes to a tempfile.mkdtemp directory,
