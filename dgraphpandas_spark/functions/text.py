@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .determinism import md5_int
+
 # deterministic marker sets for the n-gram/stopword language heuristic
 LANG_MARKERS = {
     'en': ['the', 'and', 'of', 'to', 'a', 'in', 'is'],
@@ -126,9 +128,7 @@ def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
         gram = F.zip_with(gram, F.slice(toks, j + 1, m),
                           lambda x, y: F.concat(x, F.lit(' '), y))
     grams = F.when(F.size(toks) < k, F.array().cast('array<string>')).otherwise(gram)
-    hashes = F.transform(
-        grams, lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast('long')
-    )
+    hashes = F.transform(grams, lambda g: md5_int(g, 15))
     m2 = F.size(hashes) - F.lit(w - 1)
     win = F.slice(hashes, 1, m2)
     for j in range(1, w):

@@ -22,6 +22,7 @@ from typing import Dict, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.determinism import md5_int, units
 from ..functions.text import lang_id, quality_score, token_count
 from .dedup import dedup_clusters
 
@@ -32,7 +33,7 @@ def _id_bucket(col: Column, n: int) -> Column:
     the assignment byte-for-byte (DuckDB oracle, downstream auditors);
     the per-row cost is noise next to scan IO, and swapping in xxhash64
     is a one-line change if provenance tooling ever allows it."""
-    return F.conv(F.substring(F.md5(col.cast('string')), 1, 8), 16, 10).cast('long') % n
+    return md5_int(col.cast('string'), 8) % n
 
 
 def split_corpus(
@@ -622,9 +623,7 @@ def sample_weighted(
         F.concat(F.col(id_col).cast('string'), F.lit(salt)) if salt else F.col(id_col),
         scale,
     )
-    p = F.round(
-        F.least(F.lit(1.0), F.greatest(F.lit(0.0), weight)) * scale, 0
-    ).cast('long')
+    p = units(F.least(F.lit(1.0), F.greatest(F.lit(0.0), weight)), scale)
     return df.filter(bucket < p)
 
 
@@ -702,9 +701,7 @@ def unigram_logprob(
     total = freq.agg(F.sum('c').alias('total'))
     lp = freq.crossJoin(F.broadcast(total)).select(
         'token',
-        F.round(F.log(F.col('c').cast('double') / F.col('total')) * 1e6, 0)
-        .cast('long')
-        .alias('lp_micro'),
+        units(F.log(F.col('c').cast('double') / F.col('total')), 1e6).alias('lp_micro'),
     )
     return (
         tok.join(lp, 'token')
@@ -774,7 +771,7 @@ def bigram_logprob(
         .agg(F.count('*').alias('c'))
     )
     total = uni.agg(F.sum('c').alias('total'))
-    alpha_micro = F.round(F.log(F.lit(float(alpha))) * 1e6, 0).cast('long')
+    alpha_micro = units(F.log(F.lit(float(alpha))), 1e6)
     scored = (
         _bigrams(df, True)
         .join(bc, ['w1', 'w2'], 'left')
@@ -785,16 +782,12 @@ def bigram_logprob(
             'id',
             F.when(
                 F.col('cb').isNotNull(),
-                F.round(F.log(F.col('cb').cast('double') / F.col('cu1')) * 1e6, 0)
-                .cast('long'),
+                units(F.log(F.col('cb').cast('double') / F.col('cu1')), 1e6),
             ).when(
                 F.col('cu2').isNotNull(),
-                alpha_micro
-                + F.round(F.log(F.col('cu2').cast('double') / F.col('total')) * 1e6, 0)
-                .cast('long'),
+                alpha_micro + units(F.log(F.col('cu2').cast('double') / F.col('total')), 1e6),
             ).otherwise(
-                alpha_micro
-                + F.round(F.log(F.lit(1.0) / F.col('total')) * 1e6, 0).cast('long')
+                alpha_micro + units(F.log(F.lit(1.0) / F.col('total')), 1e6)
             ).alias('lp_micro'),
         )
     )
@@ -881,8 +874,7 @@ def corpus_health(
         F.count('*').alias('n_docs'),
         F.sum(token_count(F.col(text_col)).cast('long')).alias('n_tokens'),
         cd(fingerprint(F.col(text_col))).alias('n_distinct'),
-        F.sum(F.round(quality_score(F.col(text_col)) * 1e6, 0).cast('long'))
-        .alias('q_micro'),
+        F.sum(units(quality_score(F.col(text_col)), 1e6)).alias('q_micro'),
     )
     top_lang = (
         df.select(lang_id(F.col(text_col)).alias('lang'))
@@ -1024,11 +1016,10 @@ def shard_corpus(
         if salt
         else F.col(id_col).cast('string')
     )
-    h = F.md5(key)
     staged = df.select(
         F.col(id_col).alias('id'),
-        (F.conv(F.substring(h, 1, 8), 16, 10).cast('long') % n_shards).alias('shard'),
-        h.alias('__h'),
+        (md5_int(key, 8) % n_shards).alias('shard'),
+        F.md5(key).alias('__h'),
     )
     w = Window.partitionBy('shard').orderBy('__h', 'id')
     return staged.select(

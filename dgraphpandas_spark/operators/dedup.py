@@ -21,6 +21,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.determinism import md5_int
 from ..functions.similarity import dot, unit
 from ..functions.text import fingerprint, token_count, tokens
 from .blocking import drop_hot_keys, hamming1
@@ -146,11 +147,7 @@ def minhash_signatures(
     harmless for the same reason)."""
     sh = shingles(df, id_col, text_col, n, distinct=False)
     aggs = [
-        F.min(
-            F.conv(
-                F.substring(F.md5(F.concat(F.col('shingle'), F.lit(f'#{j}'))), 1, 15), 16, 10
-            ).cast('long')
-        ).alias(f'sig_{j}')
+        F.min(md5_int(F.concat(F.col('shingle'), F.lit(f'#{j}')), 15)).alias(f'sig_{j}')
         for j in range(bands)
     ]
     return sh.groupBy('id').agg(*aggs)
@@ -343,8 +340,7 @@ def simhash(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text', bits:
     first 4 hex chars of md5 → 16-bit int; fingerprint bit b set iff the
     weighted bit-sum is positive."""
     tok = df.select(F.col(id_col).alias('id'), F.explode(tokens(F.col(text_col))).alias('tok'))
-    h = F.conv(F.substring(F.md5(F.col('tok').cast('binary')), 1, 4), 16, 10).cast('int')
-    tok = tok.withColumn('h', h)
+    tok = tok.withColumn('h', md5_int(F.col('tok').cast('binary'), 4))
     bit_sums = [
         F.sum(
             F.when(F.shiftright(F.col('h'), b).bitwiseAND(F.lit(1)) == 1, F.lit(1)).otherwise(F.lit(-1))

@@ -10,12 +10,18 @@ fixed/driver-bounded iteration over DataFrames, a checkpoint per round to
 truncate lineage (``localCheckpoint`` by default, reliable
 ``checkpoint(dir)`` when ``checkpoint_dir`` is passed — see
 operators/checkpointing.py), labels/ranks shuffled — never payloads.
+
+One PageRank iteration loop: ``pagerank`` is ``pagerank_weighted`` with
+unit weights and uniform teleport.  Ranks, contributions and md5 node
+hashes go through ``functions/determinism.py``, so a DuckDB oracle
+replays them bit for bit.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.determinism import md5_int, quantize, units
 from .blocking import drop_hot_keys
 from .checkpointing import make_checkpointer
 
@@ -29,75 +35,21 @@ def pagerank(
     ndigits: int = 6,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list.  Returns
-    DataFrame[id, pr].
+    """Fixed-iteration PageRank over a directed edge list: ``pagerank_weighted``
+    with every weight 1 and uniform teleport.  Returns DataFrame[id, pr].
 
-    Deterministic and oracle-replayable by construction: rank vectors are
-    rounded to ``ndigits`` after every iteration, so floating-point error
-    cannot propagate between engines (the same re-synchronization trick as
-    the k-means quantizer in simsearch.train_ivf_centroids) — a DuckDB
-    oracle unrolls the same ``iters`` rounds as CTEs and matches exactly.
-
-    Scale shape (the 100 TB story): per iteration ONE shuffle-join of
-    (src, pr/outd) contributions against the edge list keyed on src and
-    ONE shuffle-agg summing contributions by dst — both key+double rows,
-    never payloads.  The edge list is checkpointed once (``checkpoint_dir``
-    selects reliable vs local — operators/checkpointing.py) and AQE
-    handles hub-node skew in the join (hubs
-    are the web's power-law reality).  Dangling nodes (no out-edges)
-    contribute no redistributed mass — the standard simplification; feed
-    symmetrized edges if every node must have out-degree ≥ 1.  The single
-    driver-side action is the node count (one long).
+    With unit weights a contribution pr·1/Σ1 is pr/outdegree exactly.
+    The teleport term is (1−d)·(1/n) where the textbook form (and the
+    ``kg_pagerank`` oracle) writes (1−d)/n: the two can differ by one ulp,
+    which the per-round quantize absorbs unless a rank lies within that
+    ulp of a rounding boundary.
     """
-    ckpt = make_checkpointer(checkpoint_dir)
-    e = edges.select(F.col(src).alias('src'), F.col(dst).alias('dst'))
-    nodes = ckpt(
-        e.select(F.col('src').alias('id'))
-        .unionByName(e.select(F.col('dst').alias('id')))
-        .distinct()
+    unit = edges.select(
+        F.col(src).alias('src'), F.col(dst).alias('dst'), F.lit(1).alias('weight')
     )
-    n = nodes.count()
-    outd = e.groupBy('src').agg(F.count('*').alias('outd'))
-    ed = ckpt(e.join(outd, 'src'))
-
-    # both engines compute 1.0/n and (1-d)/n in IEEE double identically;
-    # the oracle interpolates repr(damping)/repr(1-damping) verbatim
-    pr = nodes.withColumn('pr', F.lit(1.0) / F.lit(float(n)))
-    base = F.lit(1.0 - damping) / F.lit(float(n))
-    for _ in range(iters):
-        # per-dst sums quantized to integer pico-units before aggregation
-        # — double addition is order-dependent across engines' partial
-        # aggregates and can flip the 6-dp round at a half-ulp boundary
-        # on high-in-degree nodes (see pagerank_weighted); integer sums
-        # are order-free
-        contrib = (
-            ed.join(pr.withColumnRenamed('id', 'src'), 'src')
-            .select(
-                F.col('dst').alias('id'),
-                F.round(F.col('pr') / F.col('outd') * 1e12, 0).cast('long').alias('c_pico'),
-            )
-        )
-        sums = contrib.groupBy('id').agg((F.sum('c_pico') / 1e12).alias('s'))
-        # integer-space final quantize — see pagerank_weighted for why
-        # round(x, ndigits) is NOT engine-consistent at decimal-fraction
-        # boundaries while round-to-integer is
-        scale = F.lit(float(10 ** ndigits))
-        pr = (
-            nodes.join(sums, 'id', 'left')
-            .select(
-                'id',
-                (
-                    F.round(
-                        (base + F.lit(damping) * F.coalesce(F.col('s'), F.lit(0.0)))
-                        * scale,
-                        0,
-                    ).cast('long')
-                    / scale
-                ).alias('pr'),
-            )
-        )
-        pr = ckpt(pr, eager=False)
-    return pr
+    return pagerank_weighted(
+        unit, iters=iters, damping=damping, ndigits=ndigits, checkpoint_dir=checkpoint_dir
+    )
 
 
 def pagerank_weighted(
@@ -130,19 +82,23 @@ def pagerank_weighted(
       ``None`` means uniform 1/n — plain weighted PageRank.  The start
       vector pr₀ IS the normalized teleport vector.
 
-    Determinism contract (same quantize-per-round trick as ``pagerank``
-    /k-means): ranks are rounded to ``ndigits`` after every iteration;
-    the teleport normalization is a single exact-integer division, so a
-    DuckDB oracle unrolling the same rounds matches bit-for-bit.
+    Determinism contract: ranks are quantized to ``ndigits`` after every
+    iteration and contributions to integer pico-units before the per-dst
+    sum (``functions/determinism.py``), so floating-point error cannot
+    carry between engines; the teleport normalization is a single
+    exact-integer division, so a DuckDB oracle unrolling the same rounds
+    matches bit-for-bit.
 
-    Scale shape: identical to ``pagerank`` — per iteration ONE
-    shuffle-join of (src, pr·w/Σw) contributions keyed on src and ONE
-    shuffle-agg by dst, key+double rows only; edge list and teleport
+    Scale shape (the 100 TB story): per iteration ONE shuffle-join of
+    (src, pr·w/Σw) contributions keyed on src and ONE shuffle-agg by dst,
+    key+double rows only, never payloads; AQE splits hub-node skew in the
+    join (hubs are the web's power-law reality).  Edge list and teleport
     vector are checkpointed once (``checkpoint_dir`` selects reliable vs
-    local); dangling mass is not
-    redistributed (standard simplification; symmetrized input — the
-    projection is symmetrized — has none).  The only driver actions are
-    the node count and the 1-row teleport total.
+    local — operators/checkpointing.py).  Dangling nodes (no out-edges)
+    contribute no redistributed mass — the standard simplification; feed
+    symmetrized edges (the projection is symmetrized) if every node must
+    have out-degree ≥ 1.  The only driver actions are the node count
+    (uniform teleport) or the 1-row teleport total (personalized).
     """
     # checkpoint the edge list FIRST: nodes/wout/ed/teleport all derive
     # from it, and an upstream that is itself expensive (the bipartite
@@ -188,37 +144,16 @@ def pagerank_weighted(
             ed.join(pr.withColumnRenamed('id', 'src'), 'src')
             .select(
                 F.col('dst').alias('id'),
-                F.round(F.col('pr') * F.col('w') / F.col('wout') * 1e12, 0)
-                .cast('long')
-                .alias('c_pico'),
+                units(F.col('pr') * F.col('w') / F.col('wout'), 1e12).alias('c_pico'),
             )
         )
         sums = contrib.groupBy('id').agg((F.sum('c_pico') / 1e12).alias('s'))
-        # final quantize in INTEGER space (×10^ndigits → round-to-integer
-        # → ÷10^ndigits), not round(x, ndigits): the integer boundary X.5
-        # is always exactly representable, so the half-up decision is
-        # engine-consistent for ANY input double, whereas a
-        # decimal-fraction boundary like 0.5153125 is NOT a double and
-        # engines whose decimal rounding goes through shortest-string
-        # conversion (Spark's BigDecimal.valueOf) can disagree with
-        # arithmetic rounding about which side a value sits on
-        scale = F.lit(float(10 ** ndigits))
-        pr = (
-            tvec.join(sums, 'id', 'left')
-            .select(
-                'id',
-                (
-                    F.round(
-                        (
-                            base * F.col('t')
-                            + F.lit(damping) * F.coalesce(F.col('s'), F.lit(0.0))
-                        )
-                        * scale,
-                        0,
-                    ).cast('long')
-                    / scale
-                ).alias('pr'),
-            )
+        pr = tvec.join(sums, 'id', 'left').select(
+            'id',
+            quantize(
+                base * F.col('t') + F.lit(damping) * F.coalesce(F.col('s'), F.lit(0.0)),
+                ndigits,
+            ).alias('pr'),
         )
         pr = ckpt(pr, eager=False)
     return pr
@@ -416,10 +351,7 @@ def index_nodes(nodes: DataFrame, id_col: str = 'id', n_buckets: int = 64) -> Da
     # md5-derived bucket (not xxhash64): every hash in this operator is
     # md5 so a DuckDB oracle reproduces the identical indices and draws
     # (same convention as operators/dedup.py)
-    b = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast('binary')), 1, 8), 16, 10)
-        .cast('long') % n_buckets
-    ).cast('int')
+    b = (md5_int(F.col(id_col).cast('binary'), 8) % n_buckets).cast('int')
     with_b = nodes.select(F.col(id_col).alias('id')).distinct().withColumn('__b', b)
     counts = {r['__b']: r['c'] for r in with_b.groupBy('__b').agg(F.count('*').alias('c')).collect()}
     offsets, acc = {}, 0
@@ -490,9 +422,7 @@ def negative_sample(
     ).drop('__i')
     key = F.concat_ws('|', F.col(src), F.col(rel), F.col(dst),
                       F.col('neg_idx').cast('string'), F.lit(str(seed)))
-    draw = (
-        F.conv(F.substring(F.md5(key.cast('binary')), 1, 8), 16, 10).cast('long') % n
-    )
+    draw = md5_int(key.cast('binary'), 8) % n
     with_true = fan.join(
         idx.select(F.col('id').alias(dst), F.col('idx').alias('__true_idx')), dst
     )

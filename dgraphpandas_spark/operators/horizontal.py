@@ -27,12 +27,13 @@ from __future__ import annotations
 from functools import reduce
 from typing import Any, Dict, List, Optional, Tuple, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import get_from_config
 from ..functions.strftime import strftime_to_spark
+from ..sources.table_format import _read_source
 from ..types import find_rdf_types, find_spark_type, is_datetime_type_name
 from .melt import (
     EDGE,
@@ -82,19 +83,8 @@ def horizontal_transform(
     date_fields: Dict[str, Any] = o.date_fields
 
     if isinstance(frame, str):
-        # S1 — CSV scan (reference horizontal.py:35-38); header + inference
-        # mirror pandas read_csv defaults; read_csv_options passes through
-        # Spark csv options.
-        spark = SparkSession.getActiveSession()
-        read_csv_options = dict(get_from_config('read_csv_options', file_config, {}, **kwargs))
-        sep = read_csv_options.pop('sep', read_csv_options.pop('delimiter', ','))
-        frame = (
-            spark.read.option('header', True)
-            .option('inferSchema', True)
-            .option('sep', sep)
-            .options(**read_csv_options)
-            .csv(frame)
-        )
+        # S1 — path scan (reference horizontal.py:35-38 reads CSV)
+        frame = _read_source(frame, file_config, **kwargs)
 
     if callable(subject_fields):
         subject_fields = subject_fields(frame)

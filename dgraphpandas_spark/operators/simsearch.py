@@ -17,6 +17,7 @@ from typing import List, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.determinism import half_up
 from ..functions.similarity import cosine, dot, hyperplanes, ivf_cell, lsh_bucket, unit
 from .blocking import hamming1, hot_keys
 
@@ -531,7 +532,7 @@ def pca_top_component(
         for y in w[1:]:
             s = s + y * y
         n = math.sqrt(s)
-        v = [math.floor(x / n * 1_000_000 + 0.5) / 1_000_000 for x in w]
+        v = [half_up(x / n, 6) for x in w]
     return v
 
 

@@ -20,6 +20,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.determinism import half_up
+
 _US = 1_000_000  # microseconds per second — exact integer event-time math
 
 
@@ -163,8 +165,6 @@ def ewma(
     order yields the same state).  Pass ``tiebreak_col`` when ties should
     resolve by a domain column (e.g. event_id) instead of by value.
     """
-    import math
-
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     out_schema = StructType(
@@ -183,11 +183,11 @@ def ewma(
         vals = pdf[value_col].to_numpy()
         state = float(vals[0])
         for x in vals[1:]:
-            state = math.floor((alpha * float(x) + (1.0 - alpha) * state) * 1e6 + 0.5) / 1e6
+            state = half_up(alpha * float(x) + (1.0 - alpha) * state, 6)
         # final 6-dp round matches the oracle's round(..., 6): half-up on
         # an already-quantized value is the identity except for 1-element
         # groups, where it quantizes the raw first value identically
-        state = math.floor(state * 1e6 + 0.5) / 1e6
+        state = half_up(state, 6)
         return pd.DataFrame(
             {key_col: [pdf[key_col].iloc[0]], 'n_events': [len(vals)], 'ewma': [state]}
         )

@@ -46,6 +46,7 @@ from pyspark.sql import types as T
 from ..config import get_from_config
 from ..functions.render import iso_datetime, render_value
 from ..functions.strftime import strftime_to_spark
+from ..sources.table_format import _read_source
 from ..types import DEFAULT_RDF_TYPE, find_rdf_types
 
 TRIPLE_COLUMNS = ['subject', 'predicate', 'object', 'type']
@@ -373,10 +374,7 @@ def vertical_transform(
     if isinstance(frame, str):
         # Path entry, parity: reference strategies/vertical.py:38-41 reads the
         # CSV itself when handed a path (honoring read_csv_options).
-        from pyspark.sql import SparkSession
-
-        from ..plans.pipeline import _read_source
-        frame = _read_source(SparkSession.getActiveSession(), frame, file_config, **kwargs)
+        frame = _read_source(frame, file_config, **kwargs)
 
     o = RefineOptions.from_config(config, file_config, config_file_key, **kwargs)
     subject_fields = get_from_config('subject_fields', file_config, **kwargs)

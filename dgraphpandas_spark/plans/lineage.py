@@ -14,7 +14,8 @@ Resume = process only buckets without a manifest row; dynamic partition
 overwrite makes a re-run of a half-written bucket byte-identical (the
 pipeline is deterministic end-to-end: hash-derived salts, no Date.now/rand).
 
-Buckets come from ``pmod(xxhash64(bucket_key), n_buckets)`` — the same
+Buckets come from ``sources/table_format.with_bucket``,
+``pmod(xxhash64(bucket_key), n_buckets)`` — the same
 Iceberg-style ``bucket(N, conv_id)`` layout, Parquet-backed because this
 sandbox has no Iceberg runtime jars (BASELINE.md); swap the writer for an
 Iceberg table when the runtime is present.
@@ -23,27 +24,38 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Callable, Dict, List, Optional
+from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-BUCKET_COL = 'conv_bucket'
+from ..sources.table_format import BUCKET_COL, with_bucket
 
 
-def with_bucket(df: DataFrame, n_buckets: int, bucket_key: str = 'subject') -> DataFrame:
-    return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(F.col(bucket_key)), F.lit(n_buckets)).cast('int'))
-
-
-def committed_buckets(output_dir: str) -> List[int]:
+def _markers(output_dir: str, prefix: str) -> List[int]:
+    """Sorted ids N of the ``manifest/<prefix>N.json`` commit markers."""
     mdir = os.path.join(output_dir, 'manifest')
     if not os.path.isdir(mdir):
         return []
-    out = []
-    for name in os.listdir(mdir):
-        if name.startswith('bucket=') and name.endswith('.json'):
-            out.append(int(name[len('bucket='):-len('.json')]))
-    return sorted(out)
+    return sorted(
+        int(name[len(prefix):-len('.json')])
+        for name in os.listdir(mdir)
+        if name.startswith(prefix) and name.endswith('.json')
+    )
+
+
+def _write_marker(path: str, row: dict) -> None:
+    """Commit one marker: write ``path.tmp`` then ``os.replace`` it, so a
+    reader sees the whole JSON row or no file at all."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + '.tmp'
+    with open(tmp, 'w') as f:
+        json.dump(row, f)
+    os.replace(tmp, path)
+
+
+def committed_buckets(output_dir: str) -> List[int]:
+    return _markers(output_dir, 'bucket=')
 
 
 def load_manifest(output_dir: str) -> Dict[int, dict]:
@@ -53,17 +65,6 @@ def load_manifest(output_dir: str) -> Dict[int, dict]:
         with open(os.path.join(mdir, f'bucket={b}.json')) as f:
             rows[b] = json.load(f)
     return rows
-
-
-def _commit_manifest(output_dir: str, rows: List[dict]) -> None:
-    mdir = os.path.join(output_dir, 'manifest')
-    os.makedirs(mdir, exist_ok=True)
-    for row in rows:
-        path = os.path.join(mdir, f"bucket={row['bucket']}.json")
-        tmp = path + '.tmp'
-        with open(tmp, 'w') as f:
-            json.dump(row, f)
-        os.replace(tmp, path)  # atomic commit marker
 
 
 def materialize_triples(
@@ -163,7 +164,8 @@ def materialize_triples(
                 'wave_ms': wave_ms,
                 'wave_rows': wave_rows,
             })
-        _commit_manifest(output_dir, rows)
+        for row in rows:
+            _write_marker(os.path.join(output_dir, 'manifest', f'bucket={row["bucket"]}.json'), row)
         if fail_after_wave is not None and (w // wave_size) + 1 >= fail_after_wave:
             raise RuntimeError(f'simulated failure after wave {fail_after_wave}')
 
@@ -224,14 +226,7 @@ def _append_manifest_path(output_dir: str, wave: int) -> str:
 
 
 def appended_waves(output_dir: str) -> List[int]:
-    mdir = os.path.join(output_dir, 'manifest')
-    if not os.path.isdir(mdir):
-        return []
-    out = []
-    for name in os.listdir(mdir):
-        if name.startswith('wave=') and name.endswith('.json'):
-            out.append(int(name[len('wave='):-len('.json')]))
-    return sorted(out)
+    return _markers(output_dir, 'wave=')
 
 
 def append_triples(
@@ -294,11 +289,7 @@ def append_triples(
         'rows': int(obs.get['rows']),
         'ms': int((_time.time() - t0) * 1000),
     }
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    tmp = marker + '.tmp'
-    with open(tmp, 'w') as f:
-        json.dump(row, f)
-    os.replace(tmp, marker)
+    _write_marker(marker, row)
     return row
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..config import get_from_config, load_config
 from ..operators.horizontal import horizontal_transform
 from ..operators.vertical import vertical_transform
+from ..sources.table_format import _read_source
 from ..writers.upserts import generate_upserts
 
 
@@ -35,20 +36,6 @@ def resolve_transform(config: Dict[str, Any]):
     if config.get('transform') == 'vertical':
         return vertical_transform
     return horizontal_transform
-
-
-def _read_source(spark: SparkSession, path: str, file_config: Dict[str, Any], **kwargs) -> DataFrame:
-    if path.endswith('.parquet') or path.endswith('.pq'):
-        return spark.read.parquet(path)
-    read_csv_options = dict(get_from_config('read_csv_options', file_config, {}, **kwargs))
-    sep = read_csv_options.pop('sep', read_csv_options.pop('delimiter', ','))
-    return (
-        spark.read.option('header', True)
-        .option('inferSchema', True)
-        .option('sep', sep)
-        .options(**read_csv_options)
-        .csv(path)
-    )
 
 
 def _is_utf8(encoding: str) -> bool:
@@ -189,7 +176,7 @@ def to_rdf(
     source_name = config_key
     if isinstance(frame, str):
         source_name = os.path.basename(frame).split('.')[0]
-        frame = _read_source(SparkSession.getActiveSession(), frame, file_config, **kwargs)
+        frame = _read_source(frame, file_config, **kwargs)
 
     console = get_from_config('console', config, False, **kwargs)
     export_csv = get_from_config('export_csv', file_config, False, **kwargs)

@@ -23,9 +23,21 @@ conf; nothing in the engine changes.
 from __future__ import annotations
 
 import os
+from typing import Any, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..config import get_from_config
+
+BUCKET_COL = 'conv_bucket'
+
+
+def with_bucket(df: DataFrame, n_buckets: int, bucket_key: str = 'subject') -> DataFrame:
+    """Add ``BUCKET_COL`` = ``pmod(xxhash64(bucket_key), n_buckets)`` — the
+    one spelling of the parquet bucket layout (``write_bucketed`` and the
+    manifest-committed writers in plans/lineage.py)."""
+    return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(F.col(bucket_key)), F.lit(n_buckets)).cast('int'))
 
 
 def is_path(identifier: str) -> bool:
@@ -62,6 +74,26 @@ def read_table(spark: SparkSession, identifier: str) -> DataFrame:
     return spark.read.table(identifier)
 
 
+def _read_source(path: str, file_config: Dict[str, Any], **kwargs) -> DataFrame:
+    """A transform's path input, on the active session: ``.parquet``/``.pq``
+    → parquet; anything else → CSV with a header and inferred types (the
+    pandas ``read_csv`` defaults the reference relies on), ``sep`` or
+    ``delimiter`` and any other ``read_csv_options`` passed through as
+    Spark CSV options."""
+    spark = SparkSession.getActiveSession()
+    if path.endswith(('.parquet', '.pq')):
+        return spark.read.parquet(path)
+    read_csv_options = dict(get_from_config('read_csv_options', file_config, {}, **kwargs))
+    sep = read_csv_options.pop('sep', read_csv_options.pop('delimiter', ','))
+    return (
+        spark.read.option('header', True)
+        .option('inferSchema', True)
+        .option('sep', sep)
+        .options(**read_csv_options)
+        .csv(path)
+    )
+
+
 def write_bucketed(
     df: DataFrame,
     identifier: str,
@@ -90,12 +122,10 @@ def write_bucketed(
         else:
             raise ValueError(f'unsupported mode for catalog table: {mode!r}')
         return
-    bucketed = df.withColumn(
-        'conv_bucket', F.pmod(F.xxhash64(F.col(bucket_key)), F.lit(n_buckets))
-    )
     (
-        bucketed.repartition(F.col('conv_bucket'))
+        with_bucket(df, n_buckets, bucket_key)
+        .repartition(F.col(BUCKET_COL))
         .write.mode(mode)
-        .partitionBy('conv_bucket')
+        .partitionBy(BUCKET_COL)
         .parquet(identifier)
     )

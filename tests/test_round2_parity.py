@@ -1,6 +1,7 @@
 """Round-2 parity shims and robustness fixes:
 
 - vertical transform accepts a CSV path (reference strategies/vertical.py:38-41)
+- horizontal transform reads a ``.parquet`` path as parquet
 - export ``encoding`` honored end-to-end (reference rdf.py:99-142)
 - lineage read-back verification optional (``verify=False`` still commits)
 - stateful streaming ignores NaT timestamps (no INT64_MIN corruption)
@@ -52,6 +53,28 @@ def test_vertical_transform_accepts_csv_path(spark, tmp_path):
     assert ('customer_1', 'age', '23') in got
     edge_rows = {(r['subject'], r['predicate'], r['object']) for r in edges.collect()}
     assert ('customer_1', 'location', 'location_45') in edge_rows
+
+
+def test_horizontal_transform_reads_parquet_path(spark, tmp_path):
+    """A ``.parquet`` path reaches horizontal_transform as a parquet scan,
+    the same source reader ``to_rdf`` and ``vertical_transform`` use —
+    not as CSV text."""
+    from dgraphpandas_spark import horizontal_transform
+
+    path = str(tmp_path / 'customer.parquet')
+    spark.createDataFrame(
+        [(1, 23, 45), (2, 31, 46)], 'customer_id int, age int, location_id int'
+    ).write.parquet(path)
+    config = {'files': {'customer': VERTICAL_CONFIG['files']['customer']}}
+    intrinsic, edges = horizontal_transform(path, config, 'customer')
+    got = {(r['subject'], r['predicate'], r['object']) for r in intrinsic.collect()}
+    assert ('customer_1', 'age', '23') in got
+    assert ('customer_2', 'age', '31') in got
+    edge_rows = {(r['subject'], r['predicate'], r['object']) for r in edges.collect()}
+    assert edge_rows == {
+        ('customer_1', 'location', 'location_45'),
+        ('customer_2', 'location', 'location_46'),
+    }
 
 
 def test_rdf_export_honors_encoding(spark, tmp_path):
