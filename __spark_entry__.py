@@ -13,7 +13,10 @@ embedded into BOTH the Spark plan and the SQL text.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -2107,164 +2110,28 @@ def entry(spark: SparkSession) -> DataFrame:
     return intrinsic.unionByName(edges)
 
 
+def _last_checked() -> dict[str, int]:
+    """Query name -> the highest round N whose ``CORRECTNESS_rN.json``
+    beside this module lists it."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    rounds: dict[str, int] = {}
+    for path in glob.glob(os.path.join(here, 'CORRECTNESS_r*.json')):
+        m = re.fullmatch(r'CORRECTNESS_r(\d+)\.json', os.path.basename(path))
+        if m:
+            with open(path) as f:
+                for name in json.load(f):
+                    rounds[name] = max(rounds.get(name, 0), int(m.group(1)))
+    return rounds
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver checks entries in dict order with a
-    # ~50-entry cap (25→39→50 across rounds).  The literal below is the
-    # round-4 order; _R5_HEAD reorders it for round 5 (see its comment).
-    base = {
-        # -- never driver-checked before round 4 ------------------------
-        'ann_cosine_topk': q_ann_cosine_topk,
-        'ann_lsh_histogram': q_ann_lsh_histogram,
-        'ann_ivf_histogram': q_ann_ivf_histogram,
-        'ann_ivf_topk': q_ann_ivf_topk,
-        'ann_ivf_trained_topk': q_ann_ivf_trained_topk,
-        'ann_ivf_materialized_topk': q_ann_ivf_materialized_topk,
-        'ann_recall': q_ann_recall,
-        'dedup_semantic': q_dedup_semantic,
-        'emb_covariance': q_emb_covariance,
-        'emb_neardup_lsh': q_emb_neardup_lsh,
-        'emb_neardup_lsh_multiprobe': q_emb_neardup_lsh_multiprobe,
-        'emb_neardup_pairs': q_emb_neardup_pairs,
-        'multimodal_meta': q_multimodal_meta,
-        'multimodal_wav_decode': q_multimodal_wav_decode,
-        'events_sessionize': q_events_sessionize,
-        'events_asof_join': q_events_asof_join,
-        'events_rolling': q_events_rolling,
-        'events_quantiles': q_events_quantiles,
-        'events_cardinality': q_events_cardinality,
-        'events_ewma': q_events_ewma,
-        'events_funnel': q_events_funnel,
-        'events_retention': q_events_retention,
-        'events_json_props': q_events_json_props,
-        'kg_tool_transitions': q_kg_tool_transitions,
-        'kg_triple_history': q_kg_triple_history,
-        'text_pii_redact': q_text_pii_redact,
-        'text_stats': q_text_stats,
-        'text_repetition': q_text_repetition,
-        'text_winnow_fingerprints': q_text_winnow_fingerprints,
-        'text_vocab_topk': q_text_vocab_topk,
-        'text_unigram_logprob': q_text_unigram_logprob,
-        'corpus_tokenize': q_corpus_tokenize,
-        'corpus_sample_stratified': q_corpus_sample_stratified,
-        'corpus_sample_weighted': q_corpus_sample_weighted,
-        'corpus_chunk': q_corpus_chunk,
-        'stream_static_enrich': q_stream_static_enrich,
-        # -- round 3's one red row (total-order fix, round 4) -----------
-        'corpus_pack': q_corpus_pack,
-        # -- new in round 4 ----------------------------------------------
-        'corpus_bpe': q_corpus_bpe,
-        'corpus_bpe_encode': q_corpus_bpe_encode,
-        'kg_pagerank_weighted': q_kg_pagerank_weighted,
-        'corpus_sample_temperature': q_corpus_sample_temperature,
-        'emb_knn_graph': q_emb_knn_graph,
-        'emb_knn_graph_ivf': q_emb_knn_graph_ivf,
-        'dedup_spans': q_dedup_spans,
-        # -- driver-green in rounds 1-3 ----------------------------------
-        'kg_customer_intrinsic': q_kg_customer_intrinsic,
-        'kg_customer_edges': q_kg_customer_edges,
-        'kg_events_intrinsic': q_kg_events_intrinsic,
-        'kg_events_edges': q_kg_events_edges,
-        'kg_orders_composite': q_kg_orders_composite,
-        'kg_orders_override_edge': q_kg_orders_override_edge,
-        'kg_part_csv_edges': q_kg_part_csv_edges,
-        'kg_lineitem': q_kg_lineitem,
-        'kg_nation_pre_rename': q_kg_nation_pre_rename,
-        'kg_supplier_vertical': q_kg_supplier_vertical,
-        'kg_upserts_customer': q_kg_upserts_customer,
-        'kg_conversation_edges': q_kg_conversation_edges,
-        'kg_link_entities': q_kg_link_entities,
-        'kg_region_linked_edges': q_kg_region_linked_edges,
-        'kg_schema_lines': q_kg_schema_lines,
-        'kg_types_lines': q_kg_types_lines,
-        'kg_rdf_gzip_roundtrip': q_kg_rdf_gzip_roundtrip,
-        'source_orc_roundtrip': q_source_orc_roundtrip,
-        'orders_star_join': q_orders_star_join,
-        'events_pivot': q_events_pivot,
-        'docs_set_ops': q_docs_set_ops,
-        'kg_callable_config': q_kg_callable_config,
-        'kg_edge_id_convention': q_kg_edge_id_convention,
-        'kg_salted_dedup': q_kg_salted_dedup,
-        'kg_graph_completion': q_kg_graph_completion,
-        'kg_pagerank': q_kg_pagerank,
-        'kg_degree_stats': q_kg_degree_stats,
-        'kg_incremental_merge': q_kg_incremental_merge,
-        'kg_negative_samples': q_kg_negative_samples,
-        'kg_orphan_edges': q_kg_orphan_edges,
-        'kg_khop': q_kg_khop,
-        'kg_tool_cooccurrence': q_kg_tool_cooccurrence,
-        'kg_triangles': q_kg_triangles,
-        'text_topk_per_lang': q_text_topk_per_lang,
-        'stream_event_windows': q_stream_event_windows,
-        'stream_stateful_sessions': q_stream_stateful_sessions,
-        'stream_stateful_multibatch': q_stream_stateful_multibatch,
-        'stream_replay_dedup': q_stream_replay_dedup,
-        'stream_kg_triples': q_stream_kg_triples,
-        'stream_kg_materialize': q_stream_kg_materialize,
-        'dedup_exact': q_dedup_exact,
-        'dedup_ngram_jaccard': q_dedup_ngram_jaccard,
-        'dedup_minhash_lsh': q_dedup_minhash_lsh,
-        'dedup_clusters': q_dedup_clusters,
-        'dedup_simhash': q_dedup_simhash,
-        'dedup_blocks': q_dedup_blocks,
-        'corpus_curation': q_corpus_curation,
-        'corpus_split': q_corpus_split,
-        'corpus_decontaminate': q_corpus_decontaminate,
-        'emb_knn_graph_hot': q_emb_knn_graph_hot,
-        'corpus_bpe_encode_trie': q_corpus_bpe_encode_trie,
-        'corpus_tfidf_topk': q_corpus_tfidf_topk,
-        'corpus_shard': q_corpus_shard,
-        'corpus_collocations': q_corpus_collocations,
-        'emb_knn_classify': q_emb_knn_classify,
-        'dedup_incremental': q_dedup_incremental,
-        'emb_pq_codes': q_emb_pq_codes,
-        'emb_pq_topk': q_emb_pq_topk,
-        'emb_pq_ivf_topk': q_emb_pq_ivf_topk,
-        'emb_pq_rerank_topk': q_emb_pq_rerank_topk,
-        'emb_pq_recall': q_emb_pq_recall,
-        'emb_pca_project': q_emb_pca_project,
-        'stream_ingest_dedup': q_stream_ingest_dedup,
-        'text_bigram_logprob': q_text_bigram_logprob,
-        'corpus_source_cap': q_corpus_source_cap,
-        'kg_lpa_communities': q_kg_lpa_communities,
-        'corpus_health': q_corpus_health,
-        'dedup_containment': q_dedup_containment,
-    }
-    # Round-5 rotation (VERDICT r4 items #1/#7): the two NEW round-5
-    # queries and the two r4-red queries go first (the red pair's HUGEINT
-    # oracle columns are now CAST to BIGINT — the driver must re-check
-    # them), then the 43 queries whose last driver check was round 3
-    # (they rotated out when round 4 fronted the never-checked set), so no
-    # query goes two rounds unchecked.  The 48 r4-green entries take the
-    # tail; with the ~50-entry cap the first few get a bonus re-check.
-    head = [
-        'emb_pq_codes', 'emb_pq_topk', 'emb_pq_ivf_topk',
-        'emb_pq_rerank_topk', 'emb_pq_recall', 'emb_pca_project',
-        'stream_ingest_dedup', 'text_bigram_logprob', 'corpus_source_cap',
-        'kg_lpa_communities', 'corpus_health', 'dedup_containment',
-        'corpus_tfidf_topk', 'corpus_shard',
-        'corpus_collocations', 'emb_knn_classify', 'dedup_incremental',
-        'emb_knn_graph_hot', 'corpus_bpe_encode_trie',
-        'corpus_pack', 'events_rolling',
-        'kg_part_csv_edges', 'kg_lineitem', 'kg_nation_pre_rename',
-        'kg_supplier_vertical', 'kg_upserts_customer',
-        'kg_conversation_edges', 'kg_link_entities',
-        'kg_region_linked_edges', 'kg_schema_lines', 'kg_types_lines',
-        'kg_rdf_gzip_roundtrip', 'source_orc_roundtrip', 'orders_star_join',
-        'events_pivot', 'docs_set_ops', 'kg_callable_config',
-        'kg_edge_id_convention', 'kg_salted_dedup', 'kg_graph_completion',
-        'kg_pagerank', 'kg_degree_stats', 'kg_incremental_merge',
-        'kg_negative_samples', 'kg_orphan_edges', 'kg_khop',
-        'kg_tool_cooccurrence', 'kg_triangles', 'text_topk_per_lang',
-        'stream_event_windows', 'stream_stateful_sessions',
-        'stream_stateful_multibatch', 'stream_replay_dedup',
-        'stream_kg_triples', 'stream_kg_materialize', 'dedup_exact',
-        'dedup_ngram_jaccard', 'dedup_minhash_lsh', 'dedup_clusters',
-        'dedup_simhash', 'dedup_blocks', 'corpus_curation', 'corpus_split',
-        'corpus_decontaminate',
-    ]
-    ordered = {name: base[name] for name in head}
-    ordered.update((name, fn) for name, fn in base.items() if name not in ordered)
-    return ordered
+    """Every module-level ``q_<name>`` function as ``name -> fn``, least
+    recently driver-checked first (rank 0 when no record lists it), ties
+    in declaration order.  The driver checks entries in this order with a
+    ~50-entry cap, so each round checks what went longest unchecked."""
+    fns = {n[2:]: fn for n, fn in globals().items() if n.startswith('q_') and callable(fn)}
+    rounds = _last_checked()
+    return {n: fns[n] for n in sorted(fns, key=lambda n: rounds.get(n, 0))}
 
 
 # ------------------------------------------------------------- oracle SQL

@@ -15,7 +15,9 @@ the one remaining lexical deviation from CPython ``str()`` is documented in
 """
 from __future__ import annotations
 
-from pyspark.sql import Column
+from typing import Dict, Sequence, Tuple
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -160,8 +162,8 @@ def pandas_double_str_parts(
     (its Java string form).  IMPORTANT: pass plain column *references* —
     this expression uses them ~20×, so inlining a non-trivial tree here
     multiplies plan size and codegen compile time (measured 5-20 s per
-    fresh plan before staging).  ``melt`` stages them as projection
-    attributes for exactly this reason; it also stages ``ds``
+    fresh plan before staging).  ``stage_double_str`` stages them as
+    projection attributes for exactly this reason; it also stages ``ds``
     (``shortest_digits_input``), ``expn`` (the parsed base-10 exponent)
     and ``k`` (``shortest_digits_k``) — pass those too in hot paths or
     the shortest-repr search blows past janino's 64 KB method limit and
@@ -240,6 +242,46 @@ def pandas_double_str_parts(
     )
 
 
+def stage_double_str(df: DataFrame, cols: Sequence[str]) -> Tuple[DataFrame, Dict[str, Column]]:
+    """``str(float)`` of each of ``cols`` over staged attributes: returns
+    ``(staged_df, {col: expression over staged_df})``.
+
+    ``staged_df`` is ``df`` plus ``__pds_{d,s,g,e,k}_<col>`` (the double,
+    its Java string, ``shortest_digits_input``, the exponent and
+    ``shortest_digits_k``), added in four projections so each references
+    the previous one's attributes.  ``pandas_double_str_parts`` uses them
+    ~20×; inlining their subtrees made planning + codegen the dominant
+    cost (5-60 s per fresh plan, measured) and the search outgrows
+    janino's 64 KB method limit."""
+
+    def a(part: str, c: str) -> Column:
+        return F.col(f'__pds_{part}_{c}')
+
+    cols = list(cols)
+    if not cols:
+        return df, {}
+    ge = {c: sci_staged_cols(a('d', c), a('s', c)) for c in cols}
+    staged = (
+        df.select('*', *[F.col(c).cast('double').alias(f'__pds_d_{c}') for c in cols])
+        .select('*', *[a('d', c).cast('string').alias(f'__pds_s_{c}') for c in cols])
+        .select(
+            '*',
+            *[ge[c][0].alias(f'__pds_g_{c}') for c in cols],
+            *[ge[c][1].alias(f'__pds_e_{c}') for c in cols],
+        )
+        .select('*', *[
+            sci_staged_k(a('d', c), a('s', c), a('g', c), a('e', c)).alias(f'__pds_k_{c}')
+            for c in cols
+        ])
+    )
+    return staged, {
+        c: pandas_double_str_parts(
+            a('d', c), a('s', c), ds=a('g', c), expn=a('e', c), k=a('k', c)
+        )
+        for c in cols
+    }
+
+
 def pandas_double_str(col: Column) -> Column:
     """``str(float)`` (CPython repr) for a numeric column, exactly.
 
@@ -249,7 +291,7 @@ def pandas_double_str(col: Column) -> Column:
     converts Java's form in the disagreement windows.  NaN renders NULL
     (pandas treats NaN as missing); ±Infinity → ``inf``/``-inf``.
 
-    Prefer the staged form (see melt) in hot paths: this convenience
+    Prefer ``stage_double_str`` in hot paths: this convenience
     wrapper inlines the cast subtree many times.
     """
     d = col.cast('double')

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.render import render_value
+from ..functions.render import render_value, stage_double_str
 
 INTRINSIC = 'intrinsic'
 EDGE = 'edge'
@@ -188,13 +188,8 @@ def render_columns(
     else:
         mode = 'object'
 
-    # Columns whose render needs the pandas-exact double repr: stage the
-    # (double, java-string) pair as real projection attributes first —
-    # pandas_double_str_parts references them ~20×, and inlining the cast
-    # subtree that many times made Catalyst planning + codegen compile the
-    # dominant cost (5-60 s per fresh plan, measured).
-    from ..functions.render import pandas_double_str_parts
-
+    # Columns whose render needs the pandas-exact double repr, rendered
+    # over staged attributes (stage_double_str).
     force_double = set(force_double_cols)
     needs_pds = [
         c
@@ -203,44 +198,12 @@ def render_columns(
         or (mode == 'object' and classes[c] == 'float')
         or (mode == 'object' and c in force_double)
     ]
-    staged = df
-    if needs_pds:
-        from ..functions.render import sci_staged_cols, sci_staged_k
-
-        def _ge(c):
-            return sci_staged_cols(F.col(f'__pds_d_{c}'), F.col(f'__pds_s_{c}'))
-
-        staged = df.select(
-            '*',
-            *[F.col(c).cast('double').alias(f'__pds_d_{c}') for c in needs_pds],
-        ).select(
-            '*',
-            *[F.col(f'__pds_d_{c}').cast('string').alias(f'__pds_s_{c}') for c in needs_pds],
-        ).select(
-            '*',
-            *[_ge(c)[0].alias(f'__pds_g_{c}') for c in needs_pds],
-            *[_ge(c)[1].alias(f'__pds_e_{c}') for c in needs_pds],
-        ).select(
-            '*',
-            *[
-                sci_staged_k(
-                    F.col(f'__pds_d_{c}'), F.col(f'__pds_s_{c}'),
-                    F.col(f'__pds_g_{c}'), F.col(f'__pds_e_{c}'),
-                ).alias(f'__pds_k_{c}')
-                for c in needs_pds
-            ],
-        )
+    staged, double_str = stage_double_str(df, needs_pds)
 
     def _render(c: str):
         col, dtype, cls = F.col(c), dtypes[c], classes[c]
-        if c in needs_pds:
-            return pandas_double_str_parts(
-                F.col(f'__pds_d_{c}'),
-                F.col(f'__pds_s_{c}'),
-                ds=F.col(f'__pds_g_{c}'),
-                expn=F.col(f'__pds_e_{c}'),
-                k=F.col(f'__pds_k_{c}'),
-            )
+        if c in double_str:
+            return double_str[c]
         if mode == 'float':
             if cls == 'bool':
                 return (

@@ -2,18 +2,13 @@
 the task brief).
 
 Media payloads are opaque ``binary`` columns with a typed metadata struct.
-Decoding goes through a pluggable per-mime registry (``DECODERS`` /
-``register_decoder``): two REAL codecs ship built-in — PCM WAV (stdlib
-``wave``) and binary PPM/PGM images (numpy header parse) — because they
-need no media libraries; compressed formats (JPEG/PNG/MP3/H.264) are the
-STUBBED part (register a PIL/ffmpeg-backed decoder on a host that has
-them; nothing else changes).  ``fake=True`` substitutes a deterministic
-byte-statistics "decoder" for unregistered mimes so the pipeline is
-exercisable end-to-end; ``fake=False`` decodes registered mimes for real
-and raises NotImplementedError for the rest, by design.
+Decoding goes through a per-mime registry (``DECODERS``): two REAL codecs
+ship built-in — PCM WAV (stdlib ``wave``) and binary PPM/PGM images (numpy
+header parse) — because they need no media libraries; compressed formats
+(JPEG/PNG/MP3/H.264) have no decoder here.
 
-Batch sizing matters at 100 TB: media rows are large, so feature extraction
-runs via ``mapInPandas`` with ``spark.sql.execution.arrow.maxRecordsPerBatch``
+Batch sizing matters at 100 TB: media rows are large, so decoding runs via
+``mapInPandas`` with ``spark.sql.execution.arrow.maxRecordsPerBatch``
 bounding per-batch memory (set in session.py), and the recommended physical
 layout is one row-group per file with payloads in their own column chunk
 (parquet already gives column-level IO: scanning metadata never reads bytes).
@@ -26,7 +21,6 @@ import wave
 from typing import Callable, Dict, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType([
@@ -39,14 +33,6 @@ MEDIA_SCHEMA = T.StructType([
         T.StructField('height', T.IntegerType()),
         T.StructField('duration_ms', T.IntegerType()),
     ])),
-])
-
-FEATURE_SCHEMA = T.StructType([
-    T.StructField('media_id', T.LongType()),
-    T.StructField('kind', T.StringType()),
-    T.StructField('n_bytes', T.IntegerType()),
-    T.StructField('digest', T.StringType()),
-    T.StructField('features', T.ArrayType(T.FloatType())),
 ])
 
 
@@ -150,43 +136,6 @@ DECODERS: Dict[str, Callable[[bytes], dict]] = {
 }
 
 
-def register_decoder(mime: str, fn: Callable[[bytes], dict]) -> None:
-    """Plug a real decoder in (e.g. PIL-backed JPEG on a host that has it).
-    Executors pick it up as long as registration happens at import time of
-    the job module (closures are shipped with the mapInPandas function)."""
-    DECODERS[mime] = fn
-
-
-def _resize_nn(pixels, max_side: int):
-    """Nearest-neighbor aspect-preserving fit into ``max_side``."""
-    import numpy as np
-
-    h, w = pixels.shape[0], pixels.shape[1]
-    if max(h, w) <= max_side:
-        return pixels
-    scale = max_side / max(h, w)
-    nh, nw = max(1, round(h * scale)), max(1, round(w * scale))
-    rows = np.minimum((np.arange(nh) / scale).astype(int), h - 1)
-    cols = np.minimum((np.arange(nw) / scale).astype(int), w - 1)
-    return pixels[rows][:, cols]
-
-
-def synthetic_media(spark, n_rows: int = 100, seed: int = 42) -> DataFrame:
-    """Deterministic opaque-binary fixture (payload = hash-derived bytes)."""
-    kinds = ['image', 'audio', 'video']
-    rows = []
-    for i in range(n_rows):
-        h = hashlib.sha256(f'{seed}:{i}'.encode()).digest()
-        kind = kinds[i % 3]
-        rows.append((
-            i,
-            kind,
-            h * (1 + i % 7),
-            {'mime': f'{kind}/x-fake', 'width': 64 + i % 32, 'height': 64, 'duration_ms': 1000 + i},
-        ))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 def synthetic_real_media(spark, n_rows: int = 60, seed: int = 42) -> DataFrame:
     """Deterministic fixture whose payloads are REAL encoded media: 16-bit
     PCM WAV sine tones and binary PPM gradient images (hash-seeded params,
@@ -265,120 +214,3 @@ def decode_media_stats(df: DataFrame) -> DataFrame:
             yield pd.DataFrame(out, columns=cols)
 
     return df.mapInPandas(gen, schema=MEDIA_STATS_SCHEMA)
-
-
-def extract_features(df: DataFrame, dim: int = 8, fake: bool = True) -> DataFrame:
-    """Decode + feature-extract via ``mapInPandas`` (Arrow batches; the
-    per-payload loop is inherent to variable-size binary decode and stays
-    inside one Arrow batch).
-
-    Mimes with a registered decoder (WAV/PPM/PGM built-in, more via
-    ``register_decoder``) decode for REAL: features are per-chunk RMS of the
-    decoded signal (audio samples / normalized pixels).  Unregistered mimes:
-    fake=True → deterministic byte-statistics pseudo-features;
-    fake=False → NotImplementedError naming the mime.
-    """
-
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = pdf['payload']
-            feats = []
-            digests = []
-            for meta, p in zip(pdf['meta'], payloads):
-                p = bytes(p)
-                digests.append(hashlib.md5(p).hexdigest())
-                decoder = DECODERS.get(meta['mime'])
-                if decoder is not None:
-                    decoded = decoder(p)
-                    if decoded['kind'] == 'audio':
-                        signal = decoded['samples']
-                    else:
-                        signal = decoded['pixels'].astype(np.float32).ravel() / 255.0
-                    chunks = np.array_split(signal.astype(np.float32), dim)
-                    feats.append([
-                        float(np.sqrt(np.mean(c * c))) if len(c) else 0.0 for c in chunks
-                    ])
-                elif fake:  # decode stub: per-payload byte statistics
-                    arr = np.frombuffer(p, dtype=np.uint8)
-                    chunks = np.array_split(arr.astype(np.float32), dim)
-                    feats.append([float(c.mean()) if len(c) else 0.0 for c in chunks])
-                else:
-                    raise NotImplementedError(
-                        f"no decoder registered for mime {meta['mime']!r} "
-                        '(built-ins: WAV/PPM/PGM; compressed formats need '
-                        'register_decoder with PIL/ffmpeg on the host, or fake=True)'
-                    )
-            yield pd.DataFrame({
-                'media_id': pdf['media_id'],
-                'kind': pdf['kind'],
-                'n_bytes': payloads.map(len).astype('int32'),
-                'digest': digests,
-                'features': feats,
-            })
-
-    return df.mapInPandas(gen, schema=FEATURE_SCHEMA)
-
-
-def resize_images(df: DataFrame, max_side: int = 32, fake: bool = True) -> DataFrame:
-    """Image resize via ``mapInPandas`` (aspect-preserving fit into
-    ``max_side``).  Registered image mimes (PPM/PGM built-in) resize for
-    REAL — decode, nearest-neighbor downsample, re-encode, exact metadata.
-    Unregistered mimes: fake=True → deterministic payload downsample by
-    byte striding; fake=False → NotImplementedError.  Non-image rows pass
-    through untouched."""
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out = pdf.copy()
-            mask = out['kind'] == 'image'
-            if mask.any():
-                metas, payloads = [], []
-                for meta, payload in zip(out.loc[mask, 'meta'], out.loc[mask, 'payload']):
-                    payload = bytes(payload)
-                    decoder = DECODERS.get(meta['mime'])
-                    if decoder is not None:
-                        # REAL resize: decode → nearest-neighbor fit → re-encode
-                        pixels = _resize_nn(decoder(payload)['pixels'], max_side)
-                        nh, nw, nc = pixels.shape
-                        magic = b'P6' if nc == 3 else b'P5'
-                        payloads.append(
-                            magic + b'\n%d %d\n255\n' % (nw, nh) + pixels.tobytes()
-                        )
-                        metas.append({**meta, 'width': nw, 'height': nh})
-                    elif fake:
-                        w, h = meta['width'], meta['height']
-                        scale = max_side / max(w, h) if max(w, h) > max_side else 1.0
-                        nw, nh = max(1, round(w * scale)), max(1, round(h * scale))
-                        stride = max(1, int(round(1 / scale)) if scale < 1 else 1)
-                        metas.append({**meta, 'width': nw, 'height': nh})
-                        payloads.append(payload[::stride])  # decode stub
-                    else:
-                        raise NotImplementedError(
-                            f"no decoder registered for mime {meta['mime']!r}; "
-                            'register one or use fake=True'
-                        )
-                out.loc[mask, 'meta'] = pd.Series(metas, index=out.index[mask])
-                out.loc[mask, 'payload'] = pd.Series(payloads, index=out.index[mask])
-            yield out
-
-    return df.mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 500) -> DataFrame:
-    """Video frame-sampling *plan*: expands each video row into the frame
-    timestamps a decoder would extract — pure expressions (the decode of
-    each frame is the stubbed part, the fan-out shape is real)."""
-    return (
-        df.filter(F.col('kind') == 'video')
-        .select(
-            'media_id',
-            F.explode(
-                F.sequence(F.lit(0), F.col('meta.duration_ms'), F.lit(every_ms))
-            ).alias('frame_ts_ms'),
-        )
-    )

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import get_from_config
-from ..functions.render import iso_datetime, render_value
+from ..functions.render import iso_datetime, render_value, stage_double_str
 from ..functions.strftime import strftime_to_spark
 from ..sources.table_format import _read_source
 from ..types import DEFAULT_RDF_TYPE, find_rdf_types
@@ -127,15 +127,37 @@ def subject_expr(
     return F.concat_ws(key_seperator, F.lit(dgraph_type), *parts)
 
 
+# one regex token: a whole character class, an escape, or one character
+_REGEX_TOKEN = re.compile(r'\[\^?\]?(?:\\.|[^\]\\])*\]|\\.|.', re.S)
+_PY_SPACE = r'\s\x1c-\x1f'  # Python's \s as the body of a Java (?U) class
+
+
+def _python_space(pattern: str) -> str:
+    """Widen every unescaped ``\\s`` to Python's set: Java's ``(?U)\\s``
+    misses U+001C–U+001F (file, group, record and unit separators), which
+    Python's ``\\s`` matches."""
+
+    def widen(m: re.Match) -> str:
+        tok = m.group()
+        if tok == r'\s':
+            return f'[{_PY_SPACE}]'
+        if tok.startswith('['):
+            return re.sub(r'\\.', lambda e: _PY_SPACE if e.group() == r'\s' else e.group(), tok)
+        return tok
+
+    return _REGEX_TOKEN.sub(widen, pattern)
+
+
 def _scrub_expr(col: Column, characters: List[str]) -> Column:
     """C7 — alternation regex removal; parity: vertical_helpers.py:168-198.
 
     ``(?U)`` (UNICODE_CHARACTER_CLASS): the reference compiles the pattern
     with Python ``re``, whose ``\\s``/``\\w``/``\\d`` are Unicode-aware by
     default (``\\s`` strips NBSP etc.), while Java's default classes are
-    ASCII-only — the flag aligns Java with Python's semantics for the
-    default and any user-supplied character patterns."""
-    return F.regexp_replace(col, '(?U)' + '|'.join(characters), '')
+    ASCII-only.  The flag aligns most of Java with Python's semantics for
+    the default and any user-supplied character patterns;
+    ``_python_space`` adds the four code points ``\\s`` still differs in."""
+    return F.regexp_replace(col, '(?U)' + _python_space('|'.join(characters)), '')
 
 
 def empty_triples(spark) -> DataFrame:
@@ -431,34 +453,8 @@ def vertical_transform(
     elif isinstance(obj_type, T.StringType):
         string_sources.add('*')  # every predicate is string-sourced
     elif isinstance(obj_type, (T.FloatType, T.DoubleType)):
-        # stage the double-repr inputs as attributes: the inlined
-        # shortest-repr search exceeds janino's 64 KB method limit
-        # and drops the stage out of codegen (see melt.py)
-        from ..functions.render import (
-            pandas_double_str_parts, sci_staged_cols, sci_staged_k,
-        )
-
-        frame = (
-            frame.withColumn('__pds_d', F.col('object').cast('double'))
-            .withColumn('__pds_s', F.col('__pds_d').cast('string'))
-        )
-        g, e = sci_staged_cols(F.col('__pds_d'), F.col('__pds_s'))
-        frame = frame.withColumn('__pds_g', g).withColumn('__pds_e', e)
-        frame = frame.withColumn(
-            '__pds_k',
-            sci_staged_k(
-                F.col('__pds_d'), F.col('__pds_s'),
-                F.col('__pds_g'), F.col('__pds_e'),
-            ),
-        )
-        frame = frame.withColumn(
-            'object',
-            pandas_double_str_parts(
-                F.col('__pds_d'), F.col('__pds_s'),
-                ds=F.col('__pds_g'), expn=F.col('__pds_e'),
-                k=F.col('__pds_k'),
-            ),
-        ).drop('__pds_d', '__pds_s', '__pds_g', '__pds_e', '__pds_k')
+        staged, double_str = stage_double_str(frame, ['object'])
+        frame = staged.withColumn('object', double_str['object']).select(*frame.columns)
     else:
         frame = frame.withColumn('object', render_value(F.col('object'), obj_type))
 

@@ -1,8 +1,8 @@
 """Event-time windowed aggregation with watermarks (late-data handling).
 
 Reference has no streaming (SURVEY §2.9); this covers the windowed-agg /
-watermark surface for transcript feeds: per-window per-tool invocation
-counts with a bounded-lateness watermark.  In append mode a window is
+watermark surface for event feeds (transcript turns, events): per-window
+per-key counts with a bounded-lateness watermark.  In append mode a window is
 emitted exactly once — when the watermark (max event time − lateness)
 passes its end — and events arriving later than the watermark are dropped
 by Spark's state store, which is what bounds state size at 10^12-turn
@@ -12,31 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def tool_call_windows(
-    transcripts_stream: DataFrame,
-    window_duration: str = '1 minute',
-    lateness: str = '2 minutes',
-) -> DataFrame:
-    """Tool invocations per (event-time window, tool), watermarked.
-
-    Append-mode semantics: each (window, tool) row is final when emitted;
-    turns later than ``lateness`` behind the max seen ``ts`` are dropped.
-    """
-    return (
-        transcripts_stream
-        .withWatermark('ts', lateness)
-        .filter(F.col('tool').isNotNull())
-        .groupBy(F.window('ts', window_duration).alias('w'), 'tool')
-        .agg(F.count('*').alias('n_calls'))
-        .select(
-            F.col('w.start').alias('window_start'),
-            F.col('w.end').alias('window_end'),
-            'tool',
-            'n_calls',
-        )
-    )
 
 
 def windowed_counts(

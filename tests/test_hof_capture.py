@@ -1,5 +1,5 @@
-"""Lambda-capture guard for the ``functions.similarity`` helpers and the
-LSH-blocked operators built on them.
+"""Lambda-capture guard for the ``functions.similarity`` helpers, the
+LSH-blocked operators built on them and every driver query.
 
 Spark does no common-subexpression elimination inside a lambda, so a
 higher-order function or aggregate in a lambda body that references none
@@ -11,11 +11,13 @@ subexpression.
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as E
 from dgraphpandas_spark.functions import similarity as S
 from dgraphpandas_spark.operators.blocking import hamming1
 from dgraphpandas_spark.operators.dedup import embedding_neardup_pairs_lsh
@@ -120,6 +122,15 @@ OPERATORS = {
 def test_blocked_operators_capture_no_per_element_work(spark, operator):
     corpus = spark.createDataFrame(CORPUS, 'vec_id long, embedding array<float>, label string')
     assert captured_subexpressions(OPERATORS[operator](corpus)) == []
+
+
+QUERY_SF = os.environ.get('SPARK_GRAFT_TEST_SF', '/root/testdata/sf0.001')
+QUERIES = E.queries()
+
+
+@pytest.mark.parametrize('name', sorted(QUERIES))
+def test_driver_queries_capture_no_per_element_work(spark, name):
+    assert captured_subexpressions(QUERIES[name](spark, QUERY_SF)) == []
 
 
 def test_the_walk_flags_a_captured_norm(vectors):

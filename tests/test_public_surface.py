@@ -1,0 +1,84 @@
+"""Every public operator has a caller outside the tests.
+
+A public top-level function of ``operators/`` or ``streaming/`` must be
+referenced by name somewhere other than its own ``def``: in the package
+(its own module included), the driver contract ``__spark_entry__.py``,
+``bench.py`` or ``perfbench/``.  A function only tests call is surface
+nobody uses, so it goes, or it gets a driver query and an oracle.
+"""
+from __future__ import annotations
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = os.path.join(ROOT, 'dgraphpandas_spark')
+SURFACE_DIRS = ('operators', 'streaming')
+
+
+def _py_files(path: str) -> list:
+    if path.endswith('.py'):
+        return [path]
+    return sorted(
+        os.path.join(root, f)
+        for root, dirs, files in os.walk(path)
+        for f in files
+        if f.endswith('.py')
+    )
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding='utf-8') as f:
+        return ast.parse(f.read(), filename=path)
+
+
+def public_functions() -> dict:
+    """``name -> module path`` of every public top-level function."""
+    out = {}
+    for sub in SURFACE_DIRS:
+        for path in _py_files(os.path.join(PACKAGE, sub)):
+            for node in _parse(path).body:
+                if isinstance(node, ast.FunctionDef) and not node.name.startswith('_'):
+                    out[node.name] = path
+    return out
+
+
+def _names(node: ast.AST):
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name.rsplit('.', 1)[-1]
+
+
+def referenced_names() -> set:
+    """Names used in the callers, each top-level ``def``'s own body
+    excluded from its own name (recursion is not a caller)."""
+    roots = [PACKAGE, os.path.join(ROOT, '__spark_entry__.py'),
+             os.path.join(ROOT, 'bench.py'), os.path.join(ROOT, 'perfbench')]
+    seen = set()
+    for path in (p for r in roots for p in _py_files(r)):
+        for node in _parse(path).body:
+            names = set(_names(node))
+            if isinstance(node, ast.FunctionDef):
+                names.discard(node.name)
+            seen |= names
+    return seen
+
+
+def test_every_public_operator_has_a_caller_outside_the_tests():
+    used = referenced_names()
+    orphans = {
+        f'{os.path.relpath(path, ROOT)}:{name}'
+        for name, path in public_functions().items()
+        if name not in used
+    }
+    assert not orphans, f'public functions only tests call: {sorted(orphans)}'
+
+
+def test_the_scan_sees_the_operators():
+    public = public_functions()
+    assert {'horizontal_transform', 'windowed_counts', 'decode_media_stats'} <= set(public)
+    assert 'windowed_counts' in referenced_names()

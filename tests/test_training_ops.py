@@ -110,32 +110,6 @@ def test_brute_force_topk_and_lsh(spark, emb):
     assert rows and rows[0]['vec_id'] == 0, 'query vector must be in its own bucket'
 
 
-def test_multimodal_stub_plumbing(spark):
-    from dgraphpandas_spark.operators.multimodal import (
-        extract_features,
-        frame_sample_plan,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, n_rows=30)
-    feats = extract_features(media, dim=8, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r['features']) == 8 for r in rows)
-    assert all(len(r['digest']) == 32 for r in rows)
-
-    again = extract_features(media, dim=8, fake=True).collect()
-    assert sorted(r['digest'] for r in rows) == sorted(r['digest'] for r in again)
-
-    plan = frame_sample_plan(media, every_ms=500)
-    assert plan.count() > 0
-
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match='NotImplementedError|media decode'):
-        extract_features(media, fake=False).collect()
-
-
 def test_ivf_assign_and_topk(spark, emb):
     from dgraphpandas_spark.operators.simsearch import (
         brute_force_topk,
@@ -160,25 +134,6 @@ def test_ivf_assign_and_topk(spark, emb):
     # probing 2/8 cells: query's own vector is in a probed cell by construction
     rows2 = ivf_topk(emb, qvec, k=5, n_cells=8, nprobe=2, seed=7).collect()
     assert rows2 and rows2[0]['vec_id'] == 0
-
-
-def test_multimodal_resize(spark):
-    from dgraphpandas_spark.operators.multimodal import resize_images, synthetic_media
-
-    media = synthetic_media(spark, n_rows=30)
-    resized = resize_images(media, max_side=32, fake=True)
-    rows = {r['media_id']: r for r in resized.collect()}
-    orig = {r['media_id']: r for r in media.collect()}
-    assert len(rows) == 30
-    for mid, r in rows.items():
-        if r['kind'] == 'image':
-            assert max(r['meta']['width'], r['meta']['height']) <= 32
-            # aspect preserved within rounding
-            ow, oh = orig[mid]['meta']['width'], orig[mid]['meta']['height']
-            assert abs(r['meta']['width'] / r['meta']['height'] - ow / oh) < 0.2
-            assert 0 < len(r['payload']) <= len(orig[mid]['payload'])
-        else:
-            assert r['payload'] == orig[mid]['payload'], 'non-images pass through'
 
 
 def test_embedding_neardup_lsh_subset_of_exact(spark, emb):
@@ -358,93 +313,6 @@ def test_multimodal_real_codecs_roundtrip():
     d = decode_pgm(payload)
     assert d['width'] == 4 and d['height'] == 3
     assert d['pixels'].ravel().tolist() == list(gray)
-
-
-def test_multimodal_real_decode_features(spark):
-    """fake=False WORKS for registered mimes (WAV/PPM): features are RMS of
-    the decoded signal, not byte statistics."""
-    import numpy as np
-
-    from dgraphpandas_spark.operators.multimodal import (
-        extract_features,
-        synthetic_real_media,
-    )
-
-    media = synthetic_real_media(spark, n_rows=20)
-    rows = {r['media_id']: r for r in extract_features(media, dim=4, fake=False).collect()}
-    assert len(rows) == 20
-    for r in rows.values():
-        assert len(r['features']) == 4
-        if r['kind'] == 'audio':
-            # 0.5-amplitude sine → RMS ≈ 0.5/sqrt(2) ≈ 0.354 per chunk
-            assert all(abs(f - 0.3536) < 0.05 for f in r['features'])
-        else:
-            assert all(0.0 <= f <= 1.0 for f in r['features'])
-    # determinism
-    again = {r['media_id']: r for r in extract_features(media, dim=4, fake=False).collect()}
-    assert all(rows[m]['features'] == again[m]['features'] for m in rows)
-
-
-def test_multimodal_real_resize(spark):
-    """PPM rows resize for REAL: payload re-encodes at the new geometry and
-    re-decodes to the nearest-neighbor downsample of the original."""
-    import numpy as np
-
-    from dgraphpandas_spark.operators.multimodal import (
-        decode_ppm,
-        resize_images,
-        synthetic_real_media,
-    )
-
-    media = synthetic_real_media(spark, n_rows=20)
-    orig = {r['media_id']: r for r in media.collect() if r['kind'] == 'image'}
-    rows = {
-        r['media_id']: r
-        for r in resize_images(media, max_side=8, fake=False).collect()
-        if r['kind'] == 'image'
-    }
-    assert rows
-    for mid, r in rows.items():
-        d = decode_ppm(bytes(r['payload']))
-        assert max(d['width'], d['height']) <= 8
-        assert d['width'] == r['meta']['width'] and d['height'] == r['meta']['height']
-        o = decode_ppm(bytes(orig[mid]['payload']))
-        # corners survive nearest-neighbor resize
-        assert (d['pixels'][0, 0] == o['pixels'][0, 0]).all()
-
-
-def test_register_decoder_seam(spark):
-    """The registry is the pluggable seam: registering a decoder makes a
-    previously-stubbed mime decode for real."""
-    from dgraphpandas_spark.operators.multimodal import (
-        DECODERS,
-        extract_features,
-        register_decoder,
-        synthetic_media,
-    )
-
-    def fake_jpeg(payload):
-        import numpy as np
-        return {'kind': 'image',
-                'pixels': np.full((2, 2, 3), 255, dtype=np.uint8),
-                'width': 2, 'height': 2}
-
-    from pyspark.sql import functions as F
-
-    media = synthetic_media(spark, n_rows=3).withColumn(
-        'meta',
-        F.struct(
-            F.lit('image/jpeg').alias('mime'),
-            'meta.width', 'meta.height', 'meta.duration_ms',
-        ),
-    )
-    register_decoder('image/jpeg', fake_jpeg)
-    try:
-        rows = extract_features(media, dim=2, fake=False).collect()
-        # all-255 pixels → normalized signal of 1.0 → RMS exactly 1.0
-        assert all(abs(f - 1.0) < 1e-6 for r in rows for f in r['features'])
-    finally:
-        DECODERS.pop('image/jpeg', None)
 
 
 def test_winnow_fingerprints_properties(spark):

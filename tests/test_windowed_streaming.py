@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dgraphpandas_spark.streaming.stream import stream_transcripts
-from dgraphpandas_spark.streaming.windows import tool_call_windows
+from dgraphpandas_spark.streaming.windows import windowed_counts
 
 SCHEMA = 'conv_id string, turn_idx int, role string, text string, tool string, ts timestamp'
 
@@ -26,7 +26,8 @@ def _rows(spark, rows):
 
 
 def _run(spark, input_dir, ckpt, out):
-    windows = tool_call_windows(stream_transcripts(spark, input_dir))
+    turns = stream_transcripts(spark, input_dir).filter(F.col('tool').isNotNull())
+    windows = windowed_counts(turns, 'ts', 'tool', '1 minute', '2 minutes')
 
     def _append(batch_df, batch_id):
         batch_df.write.mode('append').parquet(out)
@@ -57,7 +58,7 @@ def test_watermark_drops_late_and_finalizes_windows(spark, tmp_path):
     _run(spark, input_dir, ckpt, out)
 
     got = {
-        (r['window_start'].minute, r['tool']): r['n_calls']
+        (r['window_start'].minute, r['tool']): r['n_events']
         for r in spark.read.parquet(out).collect()
     }
     # minute-0 window finalized after wave 1 with the on-time counts only;

@@ -1,13 +1,15 @@
-"""Count the package's code lines: every line of ``dgraphpandas_spark/``
-that carries a token other than a comment, blank line or docstring.
+"""Count code lines: every line of a package directory or a single ``.py``
+file that carries a token other than a comment, blank line or docstring.
 
 A docstring is the leading string-literal statement of a module, class or
 function body (found with ``ast``); every other line holding at least one
 real token (found with ``tokenize``) counts once, so a statement spread
 over three lines counts three.  Prints one ``<lines>  <module>`` row per
-module, then the total.
+module, then the directory's total; a file prints one row.  The default
+is the package.
 
-Usage: python tools/count_loc.py [package_dir]
+Usage: python tools/count_loc.py [package_dir | file.py] ...
+    e.g. python tools/count_loc.py dgraphpandas_spark __spark_entry__.py bench.py
 """
 from __future__ import annotations
 
@@ -51,25 +53,32 @@ def code_lines(source: str) -> int:
     return len(lines)
 
 
-def count(package_dir: str) -> dict:
+def _lines(path: str) -> int:
+    with open(path, encoding='utf-8') as f:
+        return code_lines(f.read())
+
+
+def count(path: str) -> dict:
+    if not os.path.isdir(path):
+        return {os.path.basename(path): _lines(path)}
     out = {}
-    for root, dirs, files in os.walk(package_dir):
+    for root, dirs, files in os.walk(path):
         dirs[:] = sorted(d for d in dirs if d != '__pycache__')
         for name in sorted(files):
             if name.endswith('.py'):
-                path = os.path.join(root, name)
-                with open(path, encoding='utf-8') as f:
-                    out[os.path.relpath(path, package_dir)] = code_lines(f.read())
+                full = os.path.join(root, name)
+                out[os.path.relpath(full, path)] = _lines(full)
     return out
 
 
 def main(argv: list) -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    package_dir = argv[1] if len(argv) > 1 else os.path.join(repo, 'dgraphpandas_spark')
-    per_module = count(package_dir)
-    for module, n in per_module.items():
-        print(f'{n:6d}  {module}')
-    print(f'{sum(per_module.values()):6d}  total')
+    for path in argv[1:] or [os.path.join(repo, 'dgraphpandas_spark')]:
+        per_module = count(path)
+        for module, n in per_module.items():
+            print(f'{n:6d}  {module}')
+        if os.path.isdir(path):
+            print(f'{sum(per_module.values()):6d}  total')
 
 
 if __name__ == '__main__':
