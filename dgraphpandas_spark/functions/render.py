@@ -22,13 +22,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def iso_datetime(col: Column) -> Column:
-    """``datetime.isoformat()``: ``2026-01-01T10:00:00`` and, only when the
-    microsecond component is non-zero, ``.ffffff`` (6 digits).
-
-    Parity: reference vertical_helpers.py:153-164 (C3).
-    """
-    base = F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss")
+def _py_datetime(col: Column, fmt: str) -> Column:
+    """``fmt`` (``date_format`` pattern of the whole seconds) plus
+    ``.ffffff`` (6 digits) only when the microsecond component is
+    non-zero — Python's datetime rendering for both separators."""
+    base = F.date_format(col, fmt)
     # cast covers TIMESTAMP_NTZ (unix_micros only accepts TIMESTAMP;
     # session TZ is UTC so the cast is lossless and matches date_format)
     micros = F.pmod(F.unix_micros(col.cast('timestamp')), F.lit(1_000_000))
@@ -39,19 +37,22 @@ def iso_datetime(col: Column) -> Column:
     )
 
 
+def iso_datetime(col: Column) -> Column:
+    """``datetime.isoformat()``: ``2026-01-01T10:00:00`` and, only when the
+    microsecond component is non-zero, ``.ffffff`` (6 digits).
+
+    Parity: reference vertical_helpers.py:153-164 (C3).
+    """
+    return _py_datetime(col, "yyyy-MM-dd'T'HH:mm:ss")
+
+
 def py_str_datetime(col: Column) -> Column:
     """``str(pd.Timestamp)``: space separator, fraction only when non-zero.
 
     Used for timestamp columns *not* declared as dateTime in config — the
     reference stringifies those with plain ``str()`` (upserts.py:20).
     """
-    base = F.date_format(col, 'yyyy-MM-dd HH:mm:ss')
-    micros = F.pmod(F.unix_micros(col.cast('timestamp')), F.lit(1_000_000))
-    return F.when(col.isNull(), F.lit(None).cast('string')).otherwise(
-        F.when(micros == 0, base).otherwise(
-            F.concat(base, F.lit('.'), F.lpad(micros.cast('string'), 6, '0'))
-        )
-    )
+    return _py_datetime(col, 'yyyy-MM-dd HH:mm:ss')
 
 
 def py_str_bool(col: Column) -> Column:

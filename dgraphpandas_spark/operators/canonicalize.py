@@ -76,7 +76,6 @@ def conversation_edges(
     key_seperator: str = '_',
     turn_type: str = 'turn',
     conversation_type: str = 'conversation',
-    assume_unique_keys: bool = True,
 ) -> DataFrame:
     """turn→conversation edge triples:
     ``<turn_{conv}_{idx}> <conv> <conversation_{conv}> .``
@@ -85,7 +84,7 @@ def conversation_edges(
     convention carries the linkage (same convention the reference relies on,
     docs/horizontal_and_vertical_formats.md:72-81).
     """
-    df = transcripts.select(
+    return transcripts.select(
         F.concat_ws(
             key_seperator,
             F.lit(turn_type),
@@ -96,7 +95,6 @@ def conversation_edges(
         F.concat_ws(key_seperator, F.lit(conversation_type), F.col('conv_id')).alias('object'),
         F.lit(None).cast('string').alias('type'),
     )
-    return df if assume_unique_keys else df.dropDuplicates(['subject'])
 
 
 def conversation_nodes(
@@ -139,12 +137,7 @@ def tool_nodes(
     )
 
 
-def merge_triples(
-    existing: DataFrame,
-    delta: DataFrame,
-    edge_predicates: Optional[list] = None,
-    assume_unique_keys: bool = True,
-) -> DataFrame:
+def merge_triples(existing: DataFrame, delta: DataFrame) -> DataFrame:
     """Incremental KG merge with Dgraph upsert semantics — the compaction
     job of a continuously-built graph (Dgraph live-loader upserts mutate
     per predicate: a single-valued predicate's new value REPLACES the old
@@ -152,66 +145,35 @@ def merge_triples(
     to `dgraph live --upsertPredicate xid`, samples/planets/publish.sh:12).
 
     ``existing``/``delta``: triple frames (subject, predicate, object,
-    type).  Edge rows are ``edge_predicates`` members, or rows whose
-    ``type`` is null (the engine's edge convention).
+    type).  Edge rows are the rows whose ``type`` is null (the engine's
+    edge convention).  Each batch holds at most one row per (subject,
+    predicate) for single-valued predicates and is internally distinct on
+    edges (true of any well-formed store and compacted delta).
 
-    Two strategies, chosen by ``assume_unique_keys``:
-
-    - **True (default — the incremental-merge reality)**: each batch holds
-      at most one row per (subject, predicate) for single-valued
-      predicates and is internally distinct on edges (true of any
-      well-formed store and compacted delta).  Merge is then pure
-      ANTI-JOINS: delta singles pass through, existing singles survive
-      where their key is absent from the delta; new edges are the delta
-      anti existing.  The single-valued branch's build side is the DELTA
-      KEY SET — for the typical small-delta-vs-huge-store merge AQE turns
-      it into a broadcast anti-join and the 100 TB store is NEVER
-      shuffled.  No value-carrying aggregate exists (max over strings
-      falls to SortAggregate on this engine — measured), no sort of the
-      store.  The edge anti-join does co-locate both sides on the full
-      triple; with the store in the bucketed layout (plans/lineage.py) a
-      storage-partitioned join removes that shuffle too.
-    - **False**: batches may contain duplicate writes to one key; winner
-      per (subject, predicate) is a struct-max aggregate over
-      lexicographic (batch, object, type) — deterministic under
-      same-batch conflicts (max_by(batch) alone would be run-order-
-      dependent), skew-immune via partial combine, but pays a
-      SortAggregate (var-length max) over both inputs.
+    Merge is pure ANTI-JOINS: delta singles pass through, existing singles
+    survive where their key is absent from the delta; new edges are the
+    delta anti existing.  The single-valued branch's build side is the
+    DELTA KEY SET — for the typical small-delta-vs-huge-store merge AQE
+    turns it into a broadcast anti-join and the 100 TB store is NEVER
+    shuffled.  No value-carrying aggregate exists (max over strings falls
+    to SortAggregate on this engine — measured), no sort of the store.
+    The edge anti-join does co-locate both sides on the full triple; with
+    the store in the bucketed layout (plans/lineage.py) a
+    storage-partitioned join removes that shuffle too.
 
     Returns the merged triple frame (same 4 columns).  Idempotent:
     re-applying a delta is a no-op — the property bucket-level resume
     (plans/lineage.py) relies on.
     """
-    if edge_predicates is not None:
-        is_edge = F.col('predicate').isin(list(edge_predicates))
-    else:
-        is_edge = F.col('type').isNull()
-
-    if assume_unique_keys:
-        e_single, d_single = existing.filter(~is_edge), delta.filter(~is_edge)
-        single = d_single.unionByName(
-            e_single.join(
-                d_single.select('subject', 'predicate'), ['subject', 'predicate'], 'left_anti'
-            )
+    is_edge = F.col('type').isNull()
+    e_single, d_single = existing.filter(~is_edge), delta.filter(~is_edge)
+    single = d_single.unionByName(
+        e_single.join(
+            d_single.select('subject', 'predicate'), ['subject', 'predicate'], 'left_anti'
         )
-        e_edges, d_edges = existing.filter(is_edge), delta.filter(is_edge)
-        edges = e_edges.unionByName(
-            d_edges.join(e_edges, ['subject', 'predicate', 'object'], 'left_anti')
-        )
-        return single.unionByName(edges).select('subject', 'predicate', 'object', 'type')
-
-    tagged = existing.withColumn('__batch', F.lit(0)).unionByName(
-        delta.withColumn('__batch', F.lit(1))
     )
-    single = (
-        tagged.filter(~is_edge)
-        .groupBy('subject', 'predicate')
-        .agg(F.max(F.struct('__batch', 'object', 'type')).alias('v'))
-        .select('subject', 'predicate', F.col('v.object'), F.col('v.type'))
+    e_edges, d_edges = existing.filter(is_edge), delta.filter(is_edge)
+    edges = e_edges.unionByName(
+        d_edges.join(e_edges, ['subject', 'predicate', 'object'], 'left_anti')
     )
-    edges = (
-        tagged.filter(is_edge)
-        .select('subject', 'predicate', 'object', 'type')
-        .distinct()
-    )
-    return single.unionByName(edges)
+    return single.unionByName(edges).select('subject', 'predicate', 'object', 'type')

@@ -1,50 +1,24 @@
-"""Checkpoint strategy seam for iterative operators (round-4 verdict #6).
+"""Per-round lineage truncation for iterative operators.
 
-Every iterative operator (pagerank / weighted pagerank / k-hop /
-connected-components dedup / the BPE merge loop) truncates its lineage per
-round so plan depth stays O(1) across iterations.  In this sandbox the
-right mechanism is ``localCheckpoint`` (executor-local blocks, no
-distributed FS needed) — but local checkpoints die with their executor, so
-on a real cluster a lost node kills the job halfway through iteration 40.
-PLANS.md §6 promises the cluster-safe swap; this module is the parameter
-that delivers it: pass ``checkpoint_dir`` (an HDFS/S3/DBFS path) to any
-iterative operator and every per-round truncation becomes a RELIABLE
-``DataFrame.checkpoint`` into that directory instead.
-
-The returned callable is the only thing operators touch, so the choice is
-made once per operator call and cannot be half-applied.
+Every iterative operator (pagerank / weighted pagerank / label
+propagation / k-hop / connected-components dedup / the BPE merge loop)
+truncates its lineage per round so plan depth stays O(1) across
+iterations.  The mechanism is a property of the deployment, not of the
+call, so it comes from the session: with a checkpoint directory set on
+the SparkContext (``sc.setCheckpointDir`` — an HDFS/S3/DBFS path visible
+to every executor) each truncation is a RELIABLE ``DataFrame.checkpoint``
+whose files survive executor loss; with none set (local mode / single JVM)
+it is ``localCheckpoint`` — executor-local blocks, fastest, but a lost
+node loses them (PLANS.md §6).
 """
 from __future__ import annotations
-
-from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
 
 
-def make_checkpointer(
-    checkpoint_dir: Optional[str] = None,
-) -> Callable[..., DataFrame]:
-    """Build the per-round lineage-truncation function.
-
-    ``checkpoint_dir is None`` (default, sandbox / single-JVM): returns
-    ``df.localCheckpoint(eager=...)`` — fastest, lost-executor-unsafe.
-
-    ``checkpoint_dir`` set: sets the SparkContext checkpoint dir (idempotent
-    — last setter wins, which is fine because every reliable checkpoint
-    call re-reads the current value) and returns ``df.checkpoint(eager=...)``
-    — files survive executor loss; the directory must be on fault-tolerant
-    storage visible to every executor.
-    """
-    if checkpoint_dir is None:
-        def local_ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-            return df.localCheckpoint(eager=eager)
-
-        return local_ckpt
-
-    def reliable_ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() != checkpoint_dir:
-            sc.setCheckpointDir(checkpoint_dir)
+def truncate(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.checkpoint(eager)`` when the session has a checkpoint dir,
+    else ``df.localCheckpoint(eager)``."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
-
-    return reliable_ckpt
+    return df.localCheckpoint(eager=eager)

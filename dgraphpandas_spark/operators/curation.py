@@ -27,12 +27,15 @@ from ..functions.text import lang_id, quality_score, token_count
 from .dedup import dedup_clusters
 
 
-def _id_bucket(col: Column, n: int) -> Column:
+def _id_bucket(col: Column, n: int, salt: str = '') -> Column:
     """Deterministic, engine-portable id→bucket: first 8 hex digits of
-    md5(id) mod n.  md5 (not xxhash64) so any SQL engine can reproduce
-    the assignment byte-for-byte (DuckDB oracle, downstream auditors);
-    the per-row cost is noise next to scan IO, and swapping in xxhash64
-    is a one-line change if provenance tooling ever allows it."""
+    md5(id || salt) mod n (an empty salt hashes the id alone).  md5 (not
+    xxhash64) so any SQL engine can reproduce the assignment
+    byte-for-byte (DuckDB oracle, downstream auditors); the per-row cost
+    is noise next to scan IO, and swapping in xxhash64 is a one-line
+    change if provenance tooling ever allows it."""
+    if salt:
+        col = F.concat(col.cast('string'), F.lit(salt))
     return md5_int(col.cast('string'), 8) % n
 
 
@@ -63,10 +66,7 @@ def split_corpus(
     weights = weights or {'train': 98, 'val': 1, 'test': 1}
     if sum(weights.values()) != 100:
         raise ValueError(f'weights must sum to 100, got {weights}')
-    bucket = _id_bucket(
-        F.concat(F.col(id_col).cast('string'), F.lit(salt)) if salt else F.col(id_col),
-        100,
-    )
+    bucket = _id_bucket(F.col(id_col), 100, salt)
     expr = None
     cum = 0
     for name, w in weights.items():
@@ -165,10 +165,7 @@ def sample_stratified(
     NULL strata out of its count aggregate).
     """
     scale = 1_000_000
-    bucket = _id_bucket(
-        F.concat(F.col(id_col).cast('string'), F.lit(salt)) if salt else F.col(id_col),
-        scale,
-    )
+    bucket = _id_bucket(F.col(id_col), scale, salt)
     # round, not truncate: a rate that arrived as micro/1e6 (mixing_rates)
     # must survive the float round-trip to the same integer threshold
     thr = None
@@ -300,7 +297,6 @@ def bpe_train(
     text_col: str = 'text',
     n_merges: int = 8,
     token_pattern: str | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Byte-pair-encoding trainer: the iterated pair-merge loop over the
     word frequency table (Sennrich et al. 2016) — the missing piece
@@ -323,9 +319,8 @@ def bpe_train(
     over the vocab-sized word table only — one explode + hash-groupBy for
     pair counts, a 1-row ``TakeOrderedAndProject`` collect (argmax is the
     only driver traffic, one row per round), and one pure-projection
-    ``replace`` to apply the merge.  The word table is
-    checkpointed per round (pagerank pattern; ``checkpoint_dir`` selects
-    reliable vs local — operators/checkpointing.py) so round K does
+    ``replace`` to apply the merge.  The word table is checkpointed per
+    round (pagerank pattern, operators/checkpointing.py) so round K does
     not replay rounds 1..K-1; at 100 TB the corpus scan still happens
     once and the loop cost is O(n_merges × |vocab|).
 
@@ -342,10 +337,9 @@ def bpe_train(
     )
     if token_pattern:
         tok = tok.filter(F.col('word').rlike(token_pattern))
-    from .checkpointing import make_checkpointer
+    from .checkpointing import truncate
 
-    ckpt = make_checkpointer(checkpoint_dir)
-    words = ckpt(
+    words = truncate(
         tok.groupBy('word')
         .agg(F.count('*').alias('cnt'))
         .select('cnt', _bpe_delim_expr(F.col('word')).alias('s'))
@@ -377,7 +371,7 @@ def bpe_train(
         merges.append((rank, l, r, l + r, c))
         pat = F.lit(_BPE_SEP + l + _BPE_SEP + _BPE_SEP + r + _BPE_SEP)
         rep = F.lit(_BPE_SEP + l + r + _BPE_SEP)
-        words = ckpt(words.select(
+        words = truncate(words.select(
             'cnt', F.replace(F.col('s'), pat, rep).alias('s')
         ))
 
@@ -619,10 +613,7 @@ def sample_weighted(
     exchanges; the weight expression must be deterministic per row.
     """
     scale = 1_000_000
-    bucket = _id_bucket(
-        F.concat(F.col(id_col).cast('string'), F.lit(salt)) if salt else F.col(id_col),
-        scale,
-    )
+    bucket = _id_bucket(F.col(id_col), scale, salt)
     p = units(F.least(F.lit(1.0), F.greatest(F.lit(0.0), weight)), scale)
     return df.filter(bucket < p)
 
@@ -839,11 +830,7 @@ def cap_per_source(
     )
 
 
-def corpus_health(
-    df: DataFrame,
-    text_col: str = 'text',
-    exact: bool = True,
-) -> DataFrame:
+def corpus_health(df: DataFrame, text_col: str = 'text') -> DataFrame:
     """One-row corpus health panel — the monitoring rollup an ingestion
     pipeline runs per wave: document and token totals, exact-duplicate
     rate (distinct content fingerprints vs docs, in integer ppm), the
@@ -862,18 +849,17 @@ def corpus_health(
     + two integer sums + a fingerprint count-distinct) plus a
     language-keyed aggregate reduced to its top row (TakeOrdered, ≤
     #langs rows) broadcast back onto the 1-row stats frame.  The exact
-    ``count_distinct`` is a full shuffle of distinct fingerprints — at
-    100 TB pass ``exact=False`` for HLL ``approx_count_distinct`` (the
-    ``events_cardinality`` trade; dup_ppm then carries ~2% relative
-    error and the oracle check no longer applies).
+    ``count_distinct`` is a full shuffle of distinct fingerprints; at
+    100 TB an HLL ``approx_count_distinct`` would shrink it (the
+    ``events_cardinality`` trade) at ~2% relative error in dup_ppm and
+    the loss of the oracle check.
     """
     from ..functions.text import fingerprint, lang_id, quality_score, token_count
 
-    cd = (F.count_distinct if exact else F.approx_count_distinct)
     stats = df.agg(
         F.count('*').alias('n_docs'),
         F.sum(token_count(F.col(text_col)).cast('long')).alias('n_tokens'),
-        cd(fingerprint(F.col(text_col))).alias('n_distinct'),
+        F.count_distinct(fingerprint(F.col(text_col))).alias('n_distinct'),
         F.sum(units(quality_score(F.col(text_col)), 1e6)).alias('q_micro'),
     )
     top_lang = (

@@ -87,15 +87,10 @@ def ngram_jaccard_pairs(
     ``max_df=None`` for exact small-data runs; the oracle mirrors the
     guard.  |A|,|B| count the shingles that survive the guard.
     """
-    # DISK_ONLY, not memory cache: the shingle frame is O(corpus tokens) —
-    # at 100 TB it cannot live in executor memory, and it is read 4×
-    # (hot-list, sizes, both join sides), so recompute would re-tokenize
-    # the corpus 4×.  Disk spill of the exploded frame is the right trade.
-    from pyspark import StorageLevel
-
-    sh = drop_hot_keys(
-        shingles(df, id_col, text_col, n).persist(StorageLevel.DISK_ONLY), 'shingle', max_df
-    )
+    # the shingle frame feeds the hot list, the sizes and both join sides
+    # and is recomputed for each, like jaccard_for_pairs: a persist here
+    # would pin one cache entry per corpus for the life of the session
+    sh = drop_hot_keys(shingles(df, id_col, text_col, n), 'shingle', max_df)
     a = sh.select(F.col('id').alias('id_a'), 'shingle')
     b = sh.select(F.col('id').alias('id_b'), 'shingle')
     inter = (
@@ -198,7 +193,6 @@ def jaccard_for_pairs(
     id_col: str = 'doc_id',
     text_col: str = 'text',
     n: int = 3,
-    shingle_storage: str | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard for a given candidate pair list (id_a, id_b).
 
@@ -206,22 +200,12 @@ def jaccard_for_pairs(
     all-pairs — this is the verify stage that makes LSH candidates safe to
     act on.
 
-    The shingle frame feeds THREE consumers (sizes, both join sides).
-    ``shingle_storage`` (a StorageLevel name, e.g. ``'DISK_ONLY'``)
-    persists it once past its distinct so each consumer reads blocks
-    instead of replaying scan + explode + the distinct shuffle — the IO
-    accounting that wins at 100 TB (three O(corpus-token) shuffle writes
-    vs one + a spill write + three local reads).  The default is None
-    (recompute): the round-5 ABAB ledger in BENCH/BASELINE.md measured
-    the DISK_ONLY persist ~25-50% SLOWER at sf0.1 on this host — local
-    recompute of a columnar scan beats materialize-and-reread until the
-    scan itself is the bottleneck — so the persist is a scale knob, not
-    a default."""
+    The shingle frame feeds THREE consumers (sizes, both join sides) and
+    is recomputed for each, never persisted: the round-5 ABAB ledger in
+    BENCH/BASELINE.md measured a DISK_ONLY persist ~25-50% SLOWER at
+    sf0.1 — local recompute of a columnar scan beats
+    materialize-and-reread until the scan itself is the bottleneck."""
     sh = shingles(df, id_col, text_col, n)
-    if shingle_storage:
-        from pyspark import StorageLevel
-
-        sh = sh.persist(getattr(StorageLevel, shingle_storage))
     sa = sh.select(F.col('id').alias('id_a'), 'shingle')
     sb = sh.select(F.col('id').alias('id_b'), 'shingle')
     inter = (
@@ -238,7 +222,6 @@ def connected_components(
     ids: DataFrame,
     edges: DataFrame,
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation.
 
@@ -248,23 +231,21 @@ def connected_components(
     component — converges in O(component diameter) rounds, each round one
     shuffle-join + one shuffle-agg over (edge, label) rows only (labels
     are ids, never payloads).  The per-round checkpoint truncates the plan
-    (iterative self-joins otherwise grow the lineage exponentially):
-    ``localCheckpoint`` by default, reliable ``checkpoint`` into
-    ``checkpoint_dir`` when given (the lost-executor-safe cluster story —
-    operators/checkpointing.py).  Hub-node
-    skew in the join is handled by AQE skew-join (session default).
+    (iterative self-joins otherwise grow the lineage exponentially;
+    reliable when the session has a checkpoint dir, local otherwise —
+    operators/checkpointing.py).  Hub-node skew in the join is handled by
+    AQE skew-join (session default).
     Raises if not converged within ``max_iter`` — near-dup components have
     tiny diameters, so hitting the cap means pathological input.
     """
     from pyspark.sql import Observation
 
-    from .checkpointing import make_checkpointer
+    from .checkpointing import truncate
 
-    ckpt = make_checkpointer(checkpoint_dir)
-    und = ckpt(edges.select(F.col('id_a').alias('src'), F.col('id_b').alias('dst')).unionByName(
+    und = truncate(edges.select(F.col('id_a').alias('src'), F.col('id_b').alias('dst')).unionByName(
         edges.select(F.col('id_b').alias('src'), F.col('id_a').alias('dst'))
     ).distinct())
-    labels = ckpt(ids.select(F.col('id'), F.col('id').alias('label')))
+    labels = truncate(ids.select(F.col('id'), F.col('id').alias('label')))
     for _ in range(max_iter):
         nbr = (
             und.join(labels.withColumnsRenamed({'id': 'src', 'label': 'src_label'}), 'src')
@@ -290,7 +271,7 @@ def connected_components(
             )
             .observe(obs, F.sum(F.col('__chg').cast('long')).alias('n_changed'))
         )
-        new_labels = ckpt(staged.select('id', 'label'))
+        new_labels = truncate(staged.select('id', 'label'))
         changed = obs.get['n_changed'] or 0
         labels = new_labels
         if changed == 0:
@@ -307,8 +288,6 @@ def dedup_clusters(
     threshold: float = 0.8,
     max_bucket: int = 10_000,
     max_iter: int = 20,
-    shingle_storage: str | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The operator a training-data pipeline actually runs: MinHash-LSH
     candidates → exact-Jaccard verify → connected components → per-cluster
@@ -319,17 +298,13 @@ def dedup_clusters(
     Every stage is bucketed/equi-join (no all-pairs path): candidates from
     band buckets (hot-bucket capped), verification joins only candidate
     pairs, components propagate labels in O(diameter) bounded rounds.
-    ``shingle_storage``/``checkpoint_dir`` are the 100-TB knobs: persist
-    the verify stage's shingle frame (see ``jaccard_for_pairs``) and make
-    the label-propagation checkpoints lost-executor-safe
-    (operators/checkpointing.py).
     """
     cand = minhash_lsh_candidates(df, id_col, text_col, n, bands, max_bucket)
-    edges = jaccard_for_pairs(
-        cand, df, id_col, text_col, n, shingle_storage=shingle_storage
-    ).filter(F.col('jaccard') >= threshold)
+    edges = jaccard_for_pairs(cand, df, id_col, text_col, n).filter(
+        F.col('jaccard') >= threshold
+    )
     ids = df.select(F.col(id_col).alias('id')).distinct()
-    labels = connected_components(ids, edges, max_iter, checkpoint_dir=checkpoint_dir)
+    labels = connected_components(ids, edges, max_iter)
     return labels.select(
         'id', 'cluster_id', (F.col('id') == F.col('cluster_id')).alias('keep')
     )
@@ -493,8 +468,6 @@ def block_dedup(
     text_col: str = 'text',
     block: int = 8,
     max_docs: int = 1,
-    exact: bool = True,
-    rsd: float = 0.05,
 ) -> DataFrame:
     """Sub-document exact dedup at token-block granularity (the line-level
     dedup of CCNet/RefinedWeb, generalized to fixed-size token blocks for
@@ -510,14 +483,10 @@ def block_dedup(
 
     Scale shape: blocking is a per-row expression + posexplode (no
     shuffle); the frequency table is ONE hash-groupBy on the block hash
-    (map-side partial absorbs within-doc repeats; with ``exact=True``
-    count(DISTINCT doc) plans as the two-phase expanded distinct, while
-    ``exact=False`` swaps in ``approx_count_distinct(rsd)`` — a
-    constant-width HLL sketch whose partial combine fully shrinks the
-    shuffle, the right choice at 100 TB where the expanded distinct's
-    (bh, id) re-shuffle dominates; boundary blocks within ±rsd of
-    ``max_docs`` may then flip, the documented trade); the drop step is a
-    LEFT ANTI join of blocks
+    (map-side partial absorbs within-doc repeats; count(DISTINCT doc) plans
+    as the two-phase expanded distinct, whose (bh, id) re-shuffle is the
+    cost an HLL sketch would cut at 100 TB, at the price of flipping
+    blocks near ``max_docs``); the drop step is a LEFT ANTI join of blocks
     against the *dup-hash list only* (boilerplate hash count ≪ block
     count, AQE broadcasts it when small); reassembly is one groupBy on the
     doc id.  Within-document repeats (count_distinct = 1) are preserved —
@@ -542,13 +511,10 @@ def block_dedup(
         'id', 'n_blocks', F.posexplode_outer(blocks_expr).alias('pos', 'btext')
     ).withColumn('bh', F.md5(F.col('btext').cast('binary')))
 
-    n_docs_agg = (
-        F.count_distinct('id') if exact else F.approx_count_distinct('id', rsd)
-    )
     dup_hashes = (
         exploded.filter(F.col('bh').isNotNull())
         .groupBy('bh')
-        .agg(n_docs_agg.alias('n_docs'))
+        .agg(F.count_distinct('id').alias('n_docs'))
         .filter(F.col('n_docs') > max_docs)
         .select('bh')
     )

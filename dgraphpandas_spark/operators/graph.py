@@ -7,9 +7,9 @@ and stops; these operators consume the (subject, predicate, object) edge
 tables the engine extracts (see operators/canonicalize.py for the
 construction side).  Architecture mirrors ``dedup.connected_components``:
 fixed/driver-bounded iteration over DataFrames, a checkpoint per round to
-truncate lineage (``localCheckpoint`` by default, reliable
-``checkpoint(dir)`` when ``checkpoint_dir`` is passed — see
-operators/checkpointing.py), labels/ranks shuffled — never payloads.
+truncate lineage (``checkpointing.truncate``: reliable when the session
+has a checkpoint dir, local otherwise), labels/ranks shuffled — never
+payloads.
 
 One PageRank iteration loop: ``pagerank`` is ``pagerank_weighted`` with
 unit weights and uniform teleport.  Ranks, contributions and md5 node
@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.determinism import md5_int, quantize, units
 from .blocking import drop_hot_keys
-from .checkpointing import make_checkpointer
+from .checkpointing import truncate
 
 
 def pagerank(
@@ -33,7 +33,6 @@ def pagerank(
     iters: int = 3,
     damping: float = 0.85,
     ndigits: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list: ``pagerank_weighted``
     with every weight 1 and uniform teleport.  Returns DataFrame[id, pr].
@@ -47,9 +46,7 @@ def pagerank(
     unit = edges.select(
         F.col(src).alias('src'), F.col(dst).alias('dst'), F.lit(1).alias('weight')
     )
-    return pagerank_weighted(
-        unit, iters=iters, damping=damping, ndigits=ndigits, checkpoint_dir=checkpoint_dir
-    )
+    return pagerank_weighted(unit, iters=iters, damping=damping, ndigits=ndigits)
 
 
 def pagerank_weighted(
@@ -61,7 +58,6 @@ def pagerank_weighted(
     iters: int = 3,
     damping: float = 0.85,
     ndigits: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Weighted / personalized PageRank over a weighted edge list —
     the ranking pass a KG consumer runs over the co-occurrence
@@ -93,9 +89,9 @@ def pagerank_weighted(
     (src, pr·w/Σw) contributions keyed on src and ONE shuffle-agg by dst,
     key+double rows only, never payloads; AQE splits hub-node skew in the
     join (hubs are the web's power-law reality).  Edge list and teleport
-    vector are checkpointed once (``checkpoint_dir`` selects reliable vs
-    local — operators/checkpointing.py).  Dangling nodes (no out-edges)
-    contribute no redistributed mass — the standard simplification; feed
+    vector are checkpointed once (operators/checkpointing.py).  Dangling
+    nodes (no out-edges) contribute no redistributed mass — the standard
+    simplification; feed
     symmetrized edges (the projection is symmetrized) if every node must
     have out-degree ≥ 1.  The only driver actions are the node count
     (uniform teleport) or the 1-row teleport total (personalized).
@@ -103,28 +99,27 @@ def pagerank_weighted(
     # checkpoint the edge list FIRST: nodes/wout/ed/teleport all derive
     # from it, and an upstream that is itself expensive (the bipartite
     # projection) would otherwise be recomputed once per consumer
-    ckpt = make_checkpointer(checkpoint_dir)
-    e = ckpt(edges.select(
+    e = truncate(edges.select(
         F.col(src).alias('src'), F.col(dst).alias('dst'), F.col(weight).alias('w')
     ))
-    nodes = ckpt(
+    nodes = truncate(
         e.select(F.col('src').alias('id'))
         .unionByName(e.select(F.col('dst').alias('id')))
         .distinct()
     )
     wout = e.groupBy('src').agg(F.sum('w').alias('wout'))
-    ed = ckpt(e.join(wout, 'src'))
+    ed = truncate(e.join(wout, 'src'))
 
     if teleport is None:
         n = nodes.count()
-        tvec = ckpt(nodes.withColumn('t', F.lit(1.0) / F.lit(float(n))))
+        tvec = truncate(nodes.withColumn('t', F.lit(1.0) / F.lit(float(n))))
     else:
         tid, tw = teleport.columns[0], teleport.columns[1]
         tp = teleport.select(F.col(tid).alias('id'), F.col(tw).alias('tw'))
         total = tp.agg(F.sum('tw')).first()[0]
         if not total:
             raise ValueError('teleport weights must sum to a positive value')
-        tvec = ckpt(
+        tvec = truncate(
             nodes.join(tp, 'id', 'left')
             .select('id', (F.coalesce(F.col('tw'), F.lit(0)) / F.lit(total)).alias('t'))
         )
@@ -155,7 +150,7 @@ def pagerank_weighted(
                 ndigits,
             ).alias('pr'),
         )
-        pr = ckpt(pr, eager=False)
+        pr = truncate(pr, eager=False)
     return pr
 
 
@@ -164,7 +159,6 @@ def label_propagation(
     src: str = 'src',
     dst: str = 'dst',
     iters: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Label-propagation community detection (Raghavan et al. 2007) made
     fully deterministic: every node starts labeled with its own id; each
@@ -189,14 +183,13 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    ckpt = make_checkpointer(checkpoint_dir)
     und = (
         edges.select(F.col(src).alias('a'), F.col(dst).alias('b'))
         .unionByName(edges.select(F.col(dst).alias('a'), F.col(src).alias('b')))
         .distinct()
     )
     nodes = und.select(F.col('a').alias('id')).distinct()
-    voters = ckpt(
+    voters = truncate(
         und.unionByName(nodes.select(F.col('id').alias('a'), F.col('id').alias('b')))
         .distinct()
     )
@@ -214,7 +207,7 @@ def label_propagation(
             .filter(F.col('rn') == 1)
             .select('id', 'label')
         )
-        labels = ckpt(labels, eager=False)
+        labels = truncate(labels, eager=False)
     return labels
 
 
@@ -224,7 +217,6 @@ def k_hop(
     k: int = 3,
     src: str = 'src',
     dst: str = 'dst',
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Bounded-depth BFS: minimum hop distance (0..k) from the seed set
     for every reachable node.  Returns DataFrame[id, hop].
@@ -240,16 +232,15 @@ def k_hop(
     is small — the common case for entity neighborhoods) and ONE
     anti-join against the visited set — both shuffle node-id strings
     only, never payloads.  Frontiers are checkpointed per round
-    (``checkpoint_dir`` selects reliable vs local) so lineage stays O(1); k is
-    a driver constant, so there are no data-dependent driver actions at
-    all — the whole expansion is one lazy plan per hop.
+    (operators/checkpointing.py) so lineage stays O(1); k is a driver
+    constant, so there are no data-dependent driver actions at all — the
+    whole expansion is one lazy plan per hop.
     """
-    ckpt = make_checkpointer(checkpoint_dir)
     e = edges.select(F.col(src).alias('src'), F.col(dst).alias('dst'))
-    frontier = ckpt(seeds.select(F.col(seeds.columns[0]).alias('id')).distinct())
+    frontier = truncate(seeds.select(F.col(seeds.columns[0]).alias('id')).distinct())
     visited = frontier.withColumn('hop', F.lit(0))
     for h in range(1, k + 1):
-        frontier = ckpt(
+        frontier = truncate(
             e.join(frontier.withColumnRenamed('id', 'src'), 'src')
             .select(F.col('dst').alias('id'))
             .distinct()

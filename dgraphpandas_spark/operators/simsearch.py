@@ -21,6 +21,10 @@ from ..functions.determinism import half_up
 from ..functions.similarity import cosine, dot, hyperplanes, ivf_cell, lsh_bucket, unit
 from .blocking import hamming1, hot_keys
 
+# knn_classify(method='brute') broadcasts the query side: at most this many
+# rows (~5 MB of dim-64 doubles), larger query sets must block with 'lsh'
+BRUTE_MAX_QUERIES = 10_000
+
 
 def brute_force_topk(
     df: DataFrame,
@@ -735,8 +739,9 @@ def knn_classify(
     ``method='brute'``: exact — the query set is BROADCAST against the
     reference corpus (the asymmetry matters: refs are the 100-TB side and
     never move; each executor scores its ref partitions against the
-    in-memory query block).  Scale bound: queries must fit in a broadcast
-    (~10 MB/1k queries at dim 64); beyond that, switch to ``lsh``.
+    in-memory query block).  Scale bound: more than ``BRUTE_MAX_QUERIES``
+    queries raise a ValueError naming ``method='lsh'`` (counted with one
+    ``limit(cap + 1).count()``, so the check never scans past the cap).
 
     ``method='lsh'``: sign-LSH blocked — both sides bucket, the QUERY
     side (small) explodes to its Hamming-distance<=1 probe buckets with
@@ -771,6 +776,11 @@ def knn_classify(
             qb = qb.select('qid', 'qv', F.explode(hamming1(F.col('bucket'), n_planes)).alias('bucket'))
         cand = r.join(F.broadcast(qb), 'bucket')
     else:
+        if queries.limit(BRUTE_MAX_QUERIES + 1).count() > BRUTE_MAX_QUERIES:
+            raise ValueError(
+                f"knn_classify(method='brute') broadcasts the query side, which "
+                f"holds more than {BRUTE_MAX_QUERIES} rows; use method='lsh'"
+            )
         cand = r.crossJoin(F.broadcast(q.select('qid', 'qv')))
     scored = cand.select(
         'qid', 'rid', 'label',

@@ -96,9 +96,10 @@ def _expand_csv_edges(frame: DataFrame, csv_edges: List[str], seperator: str = '
     # (vertical_helpers.py:34) strips every char with str.isspace() —
     # \t\n\v\f\r, the ASCII file/group/record/unit separators, NEL, NBSP
     # and the unicode space block — while Spark's trim removes ' ' only.
-    # (Fuzz-found: '1 \n' must strip to '1', not scrub to '1 '.)
-    py_ws = '[\\t-\\r \\x1c-\\x1f\\x85\\xa0\\u1680\\u2000-\\u200a\\u2028\\u2029\\u202f\\u205f\\u3000]+'
-    stripped = F.regexp_replace(F.col('object'), f'^{py_ws}|{py_ws}$', '')
+    # (Fuzz-found: '1 \n' must strip to '1', not scrub to '1 '.)  That set
+    # is Python's \s, spelled once in ``_PY_SPACE`` for the C7 scrub.
+    py_ws = f'[{_PY_SPACE}]+'
+    stripped = F.regexp_replace(F.col('object'), f'(?U)^{py_ws}|{py_ws}$', '')
     frame = frame.withColumn(
         'object', F.when(is_csv, stripped).otherwise(F.col('object'))
     )

@@ -8,6 +8,11 @@ Layout under ``output_dir``:
     data/conv_bucket=NN/part-*.parquet   triple rows for one bucket
     manifest/bucket=NN.json              committed lineage row per bucket
 
+(read it back with ``spark.read.parquet(<output_dir>/data)``; a filter on
+``conv_bucket`` prunes partitions at the source).  The append mode below
+keeps the same layout one level down, ``data/wave=W/conv_bucket=NN/``,
+committed by ``manifest/wave=W.json``.
+
 A bucket's manifest row is written only after its data is fully on disk and
 re-read (read-back verification), so the manifest IS the commit marker.
 Resume = process only buckets without a manifest row; dynamic partition
@@ -24,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -67,6 +73,28 @@ def load_manifest(output_dir: str) -> Dict[int, dict]:
     return rows
 
 
+def _write_buckets(frame: DataFrame, data_dir: str, partition_cols: List[str]) -> int:
+    """The one write step of both materializers: dynamic partition
+    overwrite, so only the partitions ``frame`` holds are replaced and a
+    re-run of a half-written one is never doubled.  Returns the row count
+    observed on the write action (free, no second pass)."""
+    frame.sparkSession.conf.set('spark.sql.sources.partitionOverwriteMode', 'dynamic')
+    obs = Observation()
+    (
+        # hash-repartition on the bucket column BEFORE partitionBy:
+        # without it every task writes a file into every bucket dir
+        # (tasks × buckets small files — fatal at scale); with it each
+        # bucket is written by exactly one task → one file per bucket,
+        # and n_buckets (not task count) is the file-count knob
+        frame.observe(obs, F.count(F.lit(1)).alias('rows'))
+        .repartition(F.col(BUCKET_COL))
+        .write.mode('overwrite')
+        .partitionBy(*partition_cols)
+        .parquet(data_dir)
+    )
+    return int(obs.get['rows'])
+
+
 def materialize_triples(
     triples: DataFrame,
     output_dir: str,
@@ -100,35 +128,13 @@ def materialize_triples(
 
     data_dir = os.path.join(output_dir, 'data')
     bucketed = with_bucket(triples, n_buckets, bucket_key)
-
     wave_size = max(1, (len(pending) + waves - 1) // waves)
-    # globally monotonic wave ids: a resumed run continues AFTER the crashed
-    # run's last committed wave, so the manifest's wave sequence is a valid
-    # snapshot history across restarts (read_snapshot/snapshot_log rely on
-    # this — the Iceberg-snapshot-id analogue)
-    wave_base = (
-        max((row.get('wave', 0) for row in load_manifest(output_dir).values()), default=-1) + 1
-    )
-    spark.conf.set('spark.sql.sources.partitionOverwriteMode', 'dynamic')
-
-    import time as _time
 
     for w in range(0, len(pending), wave_size):
-        wave_t0 = _time.time()
+        wave_t0 = time.time()
         wave_buckets = pending[w:w + wave_size]
-        subset = bucketed.filter(F.col(BUCKET_COL).isin(wave_buckets))
-        obs = Observation()
-        (
-            # hash-repartition on the bucket column BEFORE partitionBy:
-            # without it every task writes a file into every bucket dir
-            # (tasks × buckets small files — fatal at scale); with it each
-            # bucket is written by exactly one task → one file per bucket,
-            # and n_buckets (not task count) is the file-count knob
-            subset.observe(obs, F.count(F.lit(1)).alias('rows'))
-            .repartition(F.col(BUCKET_COL))
-            .write.mode('overwrite')
-            .partitionBy(BUCKET_COL)
-            .parquet(data_dir)
+        wave_rows = _write_buckets(
+            bucketed.filter(F.col(BUCKET_COL).isin(wave_buckets)), data_dir, [BUCKET_COL]
         )
         stats_by_bucket = {}
         if verify:
@@ -145,12 +151,10 @@ def materialize_triples(
                 .collect()
             )
             stats_by_bucket = {r[BUCKET_COL]: r for r in stats}
-        wave_rows = int(obs.get['rows'])  # observed on the write, free
-        wave_ms = int((_time.time() - wave_t0) * 1000)
-        rows = []
+        wave_ms = int((time.time() - wave_t0) * 1000)
         for b in wave_buckets:  # empty buckets commit too (rows=0)
             r = stats_by_bucket.get(b)
-            rows.append({
+            _write_marker(os.path.join(output_dir, 'manifest', f'bucket={b}.json'), {
                 'stage': stage,
                 'bucket': b,
                 'rows': int(r['rows']) if r else (None if not verify else 0),
@@ -158,63 +162,16 @@ def materialize_triples(
                 'status': 'committed',
                 'verified': bool(verify),
                 # metrics (north_rule: per-partition lineage + metrics):
-                # wall time of the wave that committed this bucket, and the
-                # wave's total row count observed on the write action
-                'wave': wave_base + w // wave_size,
+                # this run's wave that committed the bucket, its wall time
+                # and its total row count observed on the write action
+                'wave': w // wave_size,
                 'wave_ms': wave_ms,
                 'wave_rows': wave_rows,
             })
-        for row in rows:
-            _write_marker(os.path.join(output_dir, 'manifest', f'bucket={row["bucket"]}.json'), row)
         if fail_after_wave is not None and (w // wave_size) + 1 >= fail_after_wave:
             raise RuntimeError(f'simulated failure after wave {fail_after_wave}')
 
     return load_manifest(output_dir)
-
-
-def read_triples(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Read back a materialized triple table (bucket-pruned scans: filter on
-    conv_bucket prunes partitions at the source)."""
-    return spark.read.parquet(os.path.join(output_dir, 'data'))
-
-
-def snapshot_log(output_dir: str) -> List[dict]:
-    """Snapshot history derived from the per-bucket manifests: one entry
-    per committed wave — the engine's analogue of Iceberg's snapshot log
-    (this sandbox has no Iceberg runtime; the seam is
-    sources/table_format.py).  Each wave's commit is atomic per bucket
-    (os.replace markers), so a wave is 'in' a snapshot iff all its bucket
-    markers exist — which materialize_triples guarantees by committing a
-    wave's markers together after its write completes.
-
-    Returns [{'wave', 'n_buckets', 'rows', 'wave_ms'}] ordered by wave.
-    """
-    waves: Dict[int, dict] = {}
-    for b, row in load_manifest(output_dir).items():
-        w = row.get('wave', 0)
-        ent = waves.setdefault(w, {'wave': w, 'n_buckets': 0, 'rows': 0, 'wave_ms': row.get('wave_ms', 0)})
-        ent['n_buckets'] += 1
-        ent['rows'] += int(row.get('rows', 0))
-    return [waves[w] for w in sorted(waves)]
-
-
-def read_snapshot(spark: SparkSession, output_dir: str, max_wave: int) -> DataFrame:
-    """Time-travel read: the triple table as of the commit of ``max_wave``
-    (inclusive) — only buckets whose manifest marker belongs to wave ≤
-    ``max_wave`` are visible, exactly the rows a job that died after that
-    wave had durably committed.
-
-    Scale shape: the bucket list comes from the manifest (driver-side
-    metadata, O(n_buckets) tiny JSONs — the same cost class as an Iceberg
-    snapshot's manifest list); the scan filters on the partition column,
-    so Spark prunes non-snapshot buckets at the source (PartitionFilters,
-    pinned by pytest) and never reads their files.
-    """
-    buckets = [
-        b for b, row in load_manifest(output_dir).items()
-        if row.get('wave', 0) <= max_wave
-    ]
-    return read_triples(spark, output_dir).filter(F.col(BUCKET_COL).isin(buckets))
 
 
 # ---------------------------------------------------------------- append mode
@@ -247,9 +204,9 @@ def append_triples(
       no-op if committed), else DYNAMIC-OVERWRITES only its own
       ``wave=<w>`` partition directories — a half-written first attempt
       is replaced, never doubled, and no other wave's files are touched.
-    - **all-or-nothing visibility**: readers (`read_appended` /
-      `read_append_snapshot`) take the committed-wave list from the
-      markers, so uncommitted data files are invisible.
+    - **all-or-nothing visibility**: ``read_appended`` takes the
+      committed-wave list from the markers, so uncommitted data files are
+      invisible.
 
     The batch-mode sibling (`materialize_triples`) is for full-frame jobs
     (bucket-level resume over ONE dataset); this is for accumulating
@@ -259,36 +216,20 @@ def append_triples(
     Scale shape: one ``repartition(bucket)`` shuffle per batch (avoids
     per-task small files, same as the batch path), row count observed on
     the write action for free.  Partition layout stays prunable on BOTH
-    wave (snapshot reads) and bucket (key-routed reads).
+    wave and bucket (key-routed reads).
     """
-    import time as _time
-
-    from pyspark.sql import Observation
-
     marker = _append_manifest_path(output_dir, wave)
     if os.path.exists(marker):
         with open(marker) as f:
             return json.load(f)
 
-    spark = triples.sparkSession
-    t0 = _time.time()
-    bucketed = with_bucket(triples, n_buckets, bucket_key).withColumn(
-        'wave', F.lit(int(wave))
+    t0 = time.time()
+    rows = _write_buckets(
+        with_bucket(triples, n_buckets, bucket_key).withColumn('wave', F.lit(int(wave))),
+        os.path.join(output_dir, 'data'),
+        ['wave', BUCKET_COL],
     )
-    obs = Observation()
-    spark.conf.set('spark.sql.sources.partitionOverwriteMode', 'dynamic')
-    (
-        bucketed.observe(obs, F.count(F.lit(1)).alias('rows'))
-        .repartition(BUCKET_COL)
-        .write.mode('overwrite')
-        .partitionBy('wave', BUCKET_COL)
-        .parquet(os.path.join(output_dir, 'data'))
-    )
-    row = {
-        'wave': int(wave),
-        'rows': int(obs.get['rows']),
-        'ms': int((_time.time() - t0) * 1000),
-    }
+    row = {'wave': int(wave), 'rows': rows, 'ms': int((time.time() - t0) * 1000)}
     _write_marker(marker, row)
     return row
 
@@ -304,10 +245,14 @@ def _empty_append_frame(spark: SparkSession) -> DataFrame:
     )
 
 
-def _require_data_dir(output_dir: str, waves: list) -> str:
-    """Committed markers promise data: if waves are committed but the data
-    dir is gone, the store is corrupted (partial delete / wrong path) —
-    raise loudly instead of masking it as an empty read (ADVICE r4)."""
+def read_appended(spark: SparkSession, output_dir: str) -> DataFrame:
+    """All COMMITTED waves (marker-gated — uncommitted files invisible).
+    A store with no committed waves reads as an empty frame with the
+    triple schema; committed waves WITHOUT a data dir raise (corruption —
+    a partial delete or a wrong path — not emptiness)."""
+    waves = appended_waves(output_dir)
+    if not waves:
+        return _empty_append_frame(spark)
     data_dir = os.path.join(output_dir, 'data')
     if not os.path.isdir(data_dir):
         raise FileNotFoundError(
@@ -315,34 +260,4 @@ def _require_data_dir(output_dir: str, waves: list) -> str:
             f'wave marker(s) (e.g. wave {waves[0]}) but no data/ directory '
             f'— the store is corrupted or partially deleted'
         )
-    return data_dir
-
-
-def read_appended(spark: SparkSession, output_dir: str) -> DataFrame:
-    """All COMMITTED waves (marker-gated — uncommitted files invisible).
-    A store with no committed waves reads as an empty frame with the
-    triple schema; committed waves WITHOUT a data dir raise (corruption,
-    not emptiness)."""
-    waves = appended_waves(output_dir)
-    if not waves:
-        return _empty_append_frame(spark)
-    return spark.read.parquet(_require_data_dir(output_dir, waves)).filter(
-        F.col('wave').isin(waves)
-    )
-
-
-def read_append_snapshot(spark: SparkSession, output_dir: str, max_wave: int) -> DataFrame:
-    """Time travel over the append log: committed waves ≤ ``max_wave``
-    (wave = micro-batch id, so this is 'the table as of batch N');
-    partition-pruned on the wave column.  No committed waves at all reads
-    as an empty frame with the triple schema; committed waves without a
-    data dir raise (corruption, not emptiness).  An empty in-range subset
-    of a healthy store is an empty frame."""
-    all_waves = appended_waves(output_dir)
-    if not all_waves:
-        return _empty_append_frame(spark)
-    data_dir = _require_data_dir(output_dir, all_waves)
-    waves = [w for w in all_waves if w <= max_wave]
-    if not waves:
-        return _empty_append_frame(spark)
     return spark.read.parquet(data_dir).filter(F.col('wave').isin(waves))

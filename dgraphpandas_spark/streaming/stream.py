@@ -183,8 +183,8 @@ def stream_materialize(
     replay-idempotent (committed wave → no-op; half-written wave →
     dynamic-overwritten in place), so the materialized table contains
     each input row exactly once no matter where a crash lands.  Readers
-    go through the wave markers (``read_appended`` /
-    ``read_append_snapshot``) and never see uncommitted files.
+    go through the wave markers (``read_appended``, filtered on ``wave``
+    for one batch) and never see uncommitted files.
     """
     from ..plans.lineage import append_triples
 

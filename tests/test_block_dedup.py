@@ -54,35 +54,6 @@ def test_block_dedup_trailing_partial_block_and_order(spark):
     assert out[2] == (3, 2, _md5('x x y'))
 
 
-def test_block_dedup_approx_path_matches_exact_within_hll_error(spark):
-    """exact=False swaps count_distinct for an HLL approx_count_distinct
-    (constant-width partial combine — the 100-TB path).  With distinct doc
-    counts far from the max_docs boundary relative to rsd, the kept/dropped
-    decision — and therefore the whole output — must equal the exact path
-    (mirrors the HLL precedent in events_cardinality)."""
-    # 30 docs sharing one boilerplate block (n_docs=30 ≫ max_docs=1, far
-    # outside ±5% HLL error), each with a unique tail block (n_docs=1)
-    rows = [(i, f'a b u{i} v{i}') for i in range(30)]
-    df = spark.createDataFrame(rows, 'doc_id int, text string')
-    exact = sorted(
-        tuple(r) for r in block_dedup(df, block=2, max_docs=1, exact=True).collect()
-    )
-    approx = sorted(
-        tuple(r)
-        for r in block_dedup(df, block=2, max_docs=1, exact=False, rsd=0.05).collect()
-    )
-    assert exact == approx
-    assert exact[0][2] == 1  # boilerplate stripped, unique tail kept
-
-    # plan evidence: the approx path carries no expanded-distinct re-shuffle
-    import io, contextlib
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        block_dedup(df, block=2, max_docs=1, exact=False).explain()
-    assert 'approx_count_distinct' in buf.getvalue()
-
-
 def test_dup_spans_coverage_math(spark):
     """dup_spans (Lee et al. exact-substring dedup): hand-computed span
     coverage — shared grams at ANY offset mark both docs, overlapping dup

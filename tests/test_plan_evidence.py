@@ -199,7 +199,7 @@ def test_semantic_dedup_is_an_equi_join_on_cell(spark):
 
 
 def test_incremental_merge_default_path_never_sort_aggregates(spark):
-    """merge_triples(assume_unique_keys=True): pure anti-joins — the plan
+    """merge_triples: pure anti-joins — the plan
     must contain no SortAggregate (var-length max) and no Window; the
     single-valued branch joins on (subject, predicate) only."""
     import __spark_entry__ as e

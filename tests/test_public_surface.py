@@ -1,6 +1,6 @@
-"""Every public operator has a caller outside the tests.
+"""Every public function of the package has a caller outside the tests.
 
-A public top-level function of ``operators/`` or ``streaming/`` must be
+A public top-level function of any ``dgraphpandas_spark`` module must be
 referenced by name somewhere other than its own ``def``: in the package
 (its own module included), the driver contract ``__spark_entry__.py``,
 ``bench.py`` or ``perfbench/``.  A function only tests call is surface
@@ -13,7 +13,6 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, 'dgraphpandas_spark')
-SURFACE_DIRS = ('operators', 'streaming')
 
 
 def _py_files(path: str) -> list:
@@ -35,11 +34,10 @@ def _parse(path: str) -> ast.Module:
 def public_functions() -> dict:
     """``name -> module path`` of every public top-level function."""
     out = {}
-    for sub in SURFACE_DIRS:
-        for path in _py_files(os.path.join(PACKAGE, sub)):
-            for node in _parse(path).body:
-                if isinstance(node, ast.FunctionDef) and not node.name.startswith('_'):
-                    out[node.name] = path
+    for path in _py_files(PACKAGE):
+        for node in _parse(path).body:
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith('_'):
+                out[node.name] = path
     return out
 
 
@@ -80,5 +78,6 @@ def test_every_public_operator_has_a_caller_outside_the_tests():
 
 def test_the_scan_sees_the_operators():
     public = public_functions()
-    assert {'horizontal_transform', 'windowed_counts', 'decode_media_stats'} <= set(public)
+    assert {'horizontal_transform', 'windowed_counts', 'decode_media_stats',
+            'materialize_triples', 'read_table', 'iso_datetime'} <= set(public)
     assert 'windowed_counts' in referenced_names()

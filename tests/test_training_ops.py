@@ -189,6 +189,26 @@ def test_hot_shingle_guard_drops_quadratic_candidates(spark):
     assert guarded == 0  # guard removes the quadratic blowup
 
 
+def test_ngram_jaccard_pairs_leaves_no_cache_entry(spark):
+    """Each corpus ngram_jaccard_pairs runs over must not leave a persisted
+    frame behind: two corpora, two calls, the session's persistent-RDD
+    count is unchanged."""
+    from dgraphpandas_spark.operators.dedup import ngram_jaccard_pairs
+
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = n_persisted()
+    for tag in ('x', 'y'):
+        df = spark.createDataFrame(
+            [(1, f'a b c d {tag}'), (2, f'a b c d {tag}'), (3, 'q r s t')],
+            'doc_id long, text string',
+        )
+        pairs = ngram_jaccard_pairs(df, n=2, threshold=0.5).collect()
+        assert [(r['id_a'], r['id_b']) for r in pairs] == [(1, 2)]
+    assert n_persisted() == before
+
+
 def test_hot_bucket_guard_on_embedding_lsh(spark, emb):
     from dgraphpandas_spark.operators.dedup import embedding_neardup_pairs_lsh
 
@@ -859,27 +879,13 @@ def test_merge_triples_upsert_semantics(spark):
         ('t1', 'tool', 'browse'),
         ('t3', 'role', 'zz'),
     }
-    for unique in (True, False):   # anti-join path and struct-max path agree
-        out = merge_triples(existing, delta, assume_unique_keys=unique).collect()
-        got = {(r['subject'], r['predicate'], r['object']) for r in out}
-        assert got == expected, f'assume_unique_keys={unique}'
-        assert len(out) == 6
-        # merge is idempotent: re-applying the same delta changes nothing
-        again = merge_triples(
-            merge_triples(existing, delta, assume_unique_keys=unique),
-            delta, assume_unique_keys=unique,
-        ).collect()
-        assert {(r['subject'], r['predicate'], r['object']) for r in again} == expected
-
-    # dirty delta (two same-batch writes to one key) needs the struct-max
-    # path: deterministic lexicographic winner, not run order
-    dirty = spark.createDataFrame(
-        [('t4', 'role', 'zz', '<xs:string>'), ('t4', 'role', 'aa', '<xs:string>')],
-        schema,
-    )
-    out = merge_triples(existing, dirty, assume_unique_keys=False).collect()
-    winners = {r['object'] for r in out if r['subject'] == 't4'}
-    assert winners == {'zz'}
+    out = merge_triples(existing, delta).collect()
+    got = {(r['subject'], r['predicate'], r['object']) for r in out}
+    assert got == expected
+    assert len(out) == 6
+    # merge is idempotent: re-applying the same delta changes nothing
+    again = merge_triples(merge_triples(existing, delta), delta).collect()
+    assert {(r['subject'], r['predicate'], r['object']) for r in again} == expected
 
 
 def test_tfidf_topk_integer_scores_and_ranks(spark):
@@ -987,6 +993,32 @@ def test_knn_classify_majority_and_tiebreak(spark):
     # 4th neighbor is id 4 (cos 0) or 5 -> votes 7:2, 9:1, 3:1 -> still 7.
     out4 = knn_classify(queries, refs, k=4).collect()
     assert out4[0]['pred_label'] == 7
+
+
+def test_knn_classify_brute_caps_the_broadcast_query_side(spark, monkeypatch):
+    """method='brute' broadcasts every query row: a query side of exactly
+    BRUTE_MAX_QUERIES rows runs, one row more raises before any join and
+    points at method='lsh', which still classifies the larger side."""
+    import pytest
+
+    from dgraphpandas_spark.operators import simsearch
+
+    monkeypatch.setattr(simsearch, 'BRUTE_MAX_QUERIES', 3)
+    refs = spark.createDataFrame(
+        [(1, [1.0, 0.0], 7), (2, [0.0, 1.0], 9)],
+        'vec_id bigint, embedding array<double>, label int',
+    )
+
+    def queries(n):
+        return spark.createDataFrame(
+            [(100 + i, [1.0, 0.01 * i]) for i in range(n)], 'vec_id bigint, embedding array<double>')
+
+    at_cap = simsearch.knn_classify(queries(3), refs, k=1).collect()
+    assert sorted((r['id'], r['pred_label']) for r in at_cap) == [(100, 7), (101, 7), (102, 7)]
+    with pytest.raises(ValueError, match="method='lsh'"):
+        simsearch.knn_classify(queries(4), refs, k=1)
+    lsh = simsearch.knn_classify(queries(4), refs, k=1, method='lsh', n_planes=2, dim=2)
+    assert lsh.count() == 4
 
 
 def test_knn_classify_lsh_matches_brute_on_tight_clusters(spark):
@@ -1108,6 +1140,3 @@ def test_corpus_health_closed_form(spark):
     assert r['dup_ppm'] == (4 - 3) * 1_000_000 // 4        # one dup pair
     assert r['top_lang_ppm'] >= 250_000
     assert 0.0 <= r['avg_quality'] <= 1.0
-    # approx variant returns the same shape (values may differ on dup_ppm)
-    ra = corpus_health(docs, exact=False).collect()[0]
-    assert set(r.asDict()) == set(ra.asDict())
