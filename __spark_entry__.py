@@ -1146,7 +1146,7 @@ def q_emb_pq_codes(spark, sf_dir):
     Tall (vec_id, sub, code) output; the oracle replays each subspace's
     training as suffix-uniquified k-means CTEs."""
     emb = _t(spark, sf_dir, 'embeddings')
-    books = SS.train_pq_codebooks(emb, m_sub=4, n_codes=8, iters=1, dim=64)
+    books = SS.train_pq_codebooks(emb, m_sub=4, n_codes=8, iters=1)
     enc = SS.pq_encode(emb, books)
     return enc.select(
         'vec_id',
@@ -1160,7 +1160,7 @@ def q_emb_pq_topk(spark, sf_dir):
     array-literal lookups + 3 adds — no per-row dot products — into one
     TakeOrderedAndProject."""
     emb = _t(spark, sf_dir, 'embeddings')
-    books = SS.train_pq_codebooks(emb, m_sub=4, n_codes=8, iters=1, dim=64)
+    books = SS.train_pq_codebooks(emb, m_sub=4, n_codes=8, iters=1)
     qvec = [float(x) for x in emb.filter('vec_id = 0').first()['embedding']]
     return SS.pq_topk(emb, qvec, books, k=10)
 
@@ -1173,10 +1173,9 @@ def q_emb_pq_ivf_topk(spark, sf_dir):
     rows are ADC-scored via the PQ lookup table.  Candidate volume
     nprobe/n_cells × corpus; per-candidate cost m_sub lookups."""
     emb = _t(spark, sf_dir, 'embeddings')
-    books = SS.train_pq_codebooks(emb, m_sub=4, n_codes=8, iters=1, dim=64)
+    books = SS.train_pq_codebooks(emb, m_sub=4, n_codes=8, iters=1)
     qvec = [float(x) for x in emb.filter('vec_id = 0').first()['embedding']]
-    probes = SS._query_cells(qvec, CENTROIDS, 2)
-    pruned = SS.ivf_assign(emb, centroids=CENTROIDS).filter(F.col('cell').isin(probes))
+    pruned = SS.ivf_probe(SS.ivf_assign(emb, centroids=CENTROIDS), qvec, CENTROIDS, 2)
     return SS.pq_topk(pruned, qvec, books, k=10)
 
 
@@ -1185,7 +1184,7 @@ def q_emb_pq_rerank_topk(spark, sf_dir):
     over the compressed codes, exact-cosine re-rank of only those rows
     (broadcast id join — the raw corpus never shuffles)."""
     emb = _t(spark, sf_dir, 'embeddings')
-    books = SS.train_pq_codebooks(emb, m_sub=4, n_codes=8, iters=1, dim=64)
+    books = SS.train_pq_codebooks(emb, m_sub=4, n_codes=8, iters=1)
     qvec = [float(x) for x in emb.filter('vec_id = 0').first()['embedding']]
     return SS.pq_rerank_topk(emb, qvec, books, k=10, candidates=50)
 
@@ -1204,11 +1203,10 @@ def q_emb_pq_recall(spark, sf_dir):
     exactness invariant (shortlist=corpus ⇒ identical to brute force) is
     pinned engine-side in tests/test_pq.py."""
     emb = _t(spark, sf_dir, 'embeddings')
-    books = SS.train_pq_codebooks(emb, m_sub=4, n_codes=8, iters=1, dim=64)
+    books = SS.train_pq_codebooks(emb, m_sub=4, n_codes=8, iters=1)
     qvec = [float(x) for x in emb.filter('vec_id = 0').first()['embedding']]
     brute = SS.brute_force_topk(emb, qvec, k=10).select('vec_id')
-    probes = SS._query_cells(qvec, CENTROIDS, 2)
-    pruned = SS.ivf_assign(emb, centroids=CENTROIDS).filter(F.col('cell').isin(probes))
+    pruned = SS.ivf_probe(SS.ivf_assign(emb, centroids=CENTROIDS), qvec, CENTROIDS, 2)
     cands = {
         'pq_adc': SS.pq_topk(emb, qvec, books, k=10),
         'pq_ivf_adc': SS.pq_topk(pruned, qvec, books, k=10),
@@ -2447,7 +2445,7 @@ def _pq_topk_sql(m_sub: int = 4, n_codes: int = 8, iters: int = 1,
     left-to-right, rounded once IN ENGINE on both sides (mirrors
     simsearch.pq_topk).  ``nprobe`` adds the composed IVF×PQ path: only
     rows in the query's nprobe nearest seeded coarse-quantizer cells are
-    scored (mirrors ivf_assign + _query_cells pruning before pq_topk)."""
+    scored (mirrors ivf_assign + ivf_probe pruning before pq_topk)."""
     d_sub = dim // m_sub
     parts, fins, cents = _pq_ctes(m_sub, n_codes, iters, dim)
     parts.append('q AS (SELECT v FROM eb WHERE vec_id = 0)')
@@ -3867,7 +3865,7 @@ FROM e GROUP BY 1
 """
 
     # probe cells: top-2 centroid scores of the query vector (score DESC,
-    # cell ASC on ties) — same rule as operators.simsearch._query_cells
+    # cell ASC on ties) — same rule as operators.simsearch.ivf_probe
     cent_rows = ' UNION ALL '.join(
         f"SELECT {i} AS cell, round({_dot_sql('q.v', plane_sql_literal(c))}, 6) AS s FROM q"
         for i, c in enumerate(CENTROIDS)

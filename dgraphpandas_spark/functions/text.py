@@ -98,6 +98,41 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalized(text).cast('binary'))
 
 
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Word ``n``-grams of a token array, each joined by ' ', in order; an
+    array of fewer than ``n`` tokens gives none.  The one n-gram spelling
+    of the package: ``n`` shifted slices folded with ``zip_with``, so
+    ``toks`` enters every higher-order function as an ARGUMENT (evaluated
+    once per row) and may be any expression — a lambda-captured array
+    would be re-evaluated per gram (the HOF-capture rule, CLAUDE.md)."""
+    m = F.size(toks) - F.lit(n - 1)
+    gram = F.slice(toks, 1, m)
+    for j in range(1, n):
+        gram = F.zip_with(gram, F.slice(toks, j + 1, m),
+                          lambda x, y: F.concat(x, F.lit(' '), y))
+    # Spark's slice raises on a negative length: short arrays branch away
+    return F.when(F.size(toks) < n, F.array().cast('array<string>')).otherwise(gram)
+
+
+def window_count(toks: Column, stride: int) -> Column:
+    """How many ``token_windows`` a token array has at ``stride``:
+    ⌈size / stride⌉, 0 for an empty or null array."""
+    n = F.size(toks)
+    return F.when(n > 0, F.floor((n - 1) / F.lit(stride)).cast('int') + 1).otherwise(F.lit(0))
+
+
+def token_windows(toks: Column, size: int, stride: int) -> Column:
+    """Windows of up to ``size`` tokens, each joined by ' ', one starting
+    at every ``stride``-th token (the tail windows may be shorter);
+    ``size == stride`` is the aligned-block case.  ``toks`` is captured by
+    the window lambda, so pass an attribute reference (a staged column),
+    never a deep expression."""
+    return F.transform(
+        F.array_repeat(F.lit(0), window_count(toks, stride)),
+        lambda _, i: F.array_join(F.slice(toks, i * stride + 1, size), ' '),
+    )
+
+
 def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken MOSS
     scheme): hash every k-token gram, slide a window of ``w`` consecutive
@@ -113,22 +148,15 @@ def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
     Docs shorter than k tokens fingerprint to an empty set; shorter than
     k+w−1 grams use the global minimum (one window).
 
-    Performance note (round 5): sliding windows are built from SHIFTED
-    SLICES combined with ``zip_with`` — never ``transform(sequence(...),
-    i -> f(expensive_array, i))``.  A lambda-captured array is
-    re-evaluated per element (no CSE across lambda invocations), which
-    made the original formulation O(n²) in regex/md5 work per document;
-    as zip_with ARGUMENTS each array is evaluated once, keeping the whole
-    fingerprint O(n·k) per row.  Output is bit-identical.
+    Performance note (round 5): the grams (``word_ngrams``) and the
+    sliding windows are built from SHIFTED SLICES combined with
+    ``zip_with`` — never ``transform(sequence(...), i -> f(expensive_array,
+    i))``.  A lambda-captured array is re-evaluated per element (no CSE
+    across lambda invocations), which made the original formulation O(n²)
+    in regex/md5 work per document; as zip_with ARGUMENTS each array is
+    evaluated once, keeping the whole fingerprint O(n·k) per row.
     """
-    toks = tokens(text)
-    m = F.size(toks) - F.lit(k - 1)
-    gram = F.slice(toks, 1, m)
-    for j in range(1, k):
-        gram = F.zip_with(gram, F.slice(toks, j + 1, m),
-                          lambda x, y: F.concat(x, F.lit(' '), y))
-    grams = F.when(F.size(toks) < k, F.array().cast('array<string>')).otherwise(gram)
-    hashes = F.transform(grams, lambda g: md5_int(g, 15))
+    hashes = F.transform(word_ngrams(tokens(text), k), lambda g: md5_int(g, 15))
     m2 = F.size(hashes) - F.lit(w - 1)
     win = F.slice(hashes, 1, m2)
     for j in range(1, w):
@@ -155,16 +183,6 @@ def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
 # length, ruinous on 100k-token web documents).  Instead: sort the gram
 # array once, find run starts, take the max gap between consecutive starts
 # — O(L log L), identically expressible in DuckDB for the oracle.
-
-
-def _word_grams(toks: Column, n: int) -> Column:
-    """n-grams over a token array ('a b c' joined); < n tokens → empty."""
-    return F.when(F.size(toks) < n, F.array().cast('array<string>')).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, n), ' '),
-        )
-    )
 
 
 def _dup_fraction(arr: Column) -> Column:
@@ -199,8 +217,8 @@ def with_repetition_stats(df, text_col: str = 'text'):
     tk, g2, g3, s2, st = (F.col(f'__rep_{c}') for c in ('toks', 'g2', 'g3', 's2', 'starts'))
     df = (
         df.withColumn('__rep_toks', tokens(t))
-        .withColumn('__rep_g2', _word_grams(tk, 2))
-        .withColumn('__rep_g3', _word_grams(tk, 3))
+        .withColumn('__rep_g2', word_ngrams(tk, 2))
+        .withColumn('__rep_g3', word_ngrams(tk, 3))
         .withColumn('__rep_s2', F.array_sort(g2))
         .withColumn(
             '__rep_starts',

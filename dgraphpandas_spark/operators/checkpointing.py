@@ -10,6 +10,13 @@ to every executor) each truncation is a RELIABLE ``DataFrame.checkpoint``
 whose files survive executor loss; with none set (local mode / single JVM)
 it is ``localCheckpoint`` — executor-local blocks, fastest, but a lost
 node loses them (PLANS.md §6).
+
+Reliable checkpoint files live as long as the frame that owns them:
+``get_spark`` sets ``spark.cleaner.referenceTracking.cleanCheckpoints``,
+so once a round's frame is unreachable on the driver (Python reference
+dropped, then a JVM garbage collection) Spark's context cleaner deletes
+its ``rdd-*`` directory.  Without it every round of every iterative
+operator kept its files for the life of the directory.
 """
 from __future__ import annotations
 

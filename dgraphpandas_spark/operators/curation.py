@@ -704,6 +704,23 @@ def unigram_logprob(
     )
 
 
+def _bigram_rows(t: DataFrame, *keep: str) -> DataFrame:
+    """DataFrame[*keep, w1, w2]: one row per adjacent pair of non-empty
+    tokens of the token-array column ``t`` — a pure array ``transform``
+    and one explode, no posexplode self-join.  A row whose ``t`` holds
+    fewer than two tokens gives none.  ``collocations`` and
+    ``bigram_logprob`` both count bigrams from here."""
+    return (
+        t.filter(F.size('t') >= 2)
+        .select(*keep, F.explode(F.expr(
+            'transform(sequence(0, size(t) - 2),'
+            ' i -> struct(t[i] AS w1, t[i + 1] AS w2))'
+        )).alias('bg'))
+        .select(*keep, 'bg.w1', 'bg.w2')
+        .filter((F.col('w1') != '') & (F.col('w2') != ''))
+    )
+
+
 def bigram_logprob(
     df: DataFrame,
     train_df: DataFrame = None,
@@ -726,9 +743,9 @@ def bigram_logprob(
     quantized in-engine) before the per-doc sum, so partial-aggregation
     order cannot flip a digit; only the final average divides (6 dp).
 
-    Physical shape: bigram extraction is the same pure array ``transform``
-    as ``collocations`` (no posexplode self-join); TWO train-side
-    HashAggregates (bigram + unigram counts, map-side combined); the
+    Physical shape: bigram extraction is ``_bigram_rows``, as in
+    ``collocations``; TWO train-side HashAggregates (bigram + unigram
+    counts, map-side combined); the
     vocabulary-sized LM tables join back unhinted, so AQE broadcasts them
     while they fit and plans a shuffle join beyond that; one regroup on
     the doc id.  Returns
@@ -740,21 +757,11 @@ def bigram_logprob(
     if train_df is None:
         train_df = df
 
-    def _bigrams(frame, with_id):
-        cols = [F.col(id_col).alias('id')] if with_id else []
-        keep = ['id'] if with_id else []
-        t = frame.select(*cols, tokens(F.col(text_col)).alias('t'))
-        return (
-            t.filter(F.size('t') >= 2)
-            .select(*keep, F.explode(F.expr(
-                'transform(sequence(0, size(t) - 2),'
-                ' i -> struct(t[i] AS w1, t[i + 1] AS w2))'
-            )).alias('bg'))
-            .select(*keep, 'bg.w1', 'bg.w2')
-            .filter((F.col('w1') != '') & (F.col('w2') != ''))
-        )
-
-    bc = _bigrams(train_df, False).groupBy('w1', 'w2').agg(F.count('*').alias('cb'))
+    bc = (
+        _bigram_rows(train_df.select(tokens(F.col(text_col)).alias('t')))
+        .groupBy('w1', 'w2')
+        .agg(F.count('*').alias('cb'))
+    )
     uni = (
         train_df.select(F.explode(tokens(F.col(text_col))).alias('w'))
         .filter(F.col('w') != '')
@@ -764,7 +771,7 @@ def bigram_logprob(
     total = uni.agg(F.sum('c').alias('total'))
     alpha_micro = units(F.log(F.lit(float(alpha))), 1e6)
     scored = (
-        _bigrams(df, True)
+        _bigram_rows(df.select(F.col(id_col).alias('id'), tokens(F.col(text_col)).alias('t')), 'id')
         .join(bc, ['w1', 'w2'], 'left')
         .join(uni.select(F.col('w').alias('w1'), F.col('c').alias('cu1')), 'w1', 'left')
         .join(uni.select(F.col('w').alias('w2'), F.col('c').alias('cu2')), 'w2', 'left')
@@ -897,23 +904,12 @@ def chunk_documents(
     and ONE posexplode (Generate) — zero shuffles, embarrassingly
     parallel; downstream embedding/indexing re-partitions as it needs.
     """
-    from ..functions.text import tokens
+    from ..functions.text import token_windows, tokens
 
-    t = tokens(F.col(text_col))
-    n = F.size(t)
-    n_chunks = F.when(n > 0, F.floor((n - 1) / stride) + 1).otherwise(F.lit(0)).cast('int')
-    windows = F.when(
-        F.col('__nc') > 0,
-        F.expr(
-            f"transform(sequence(0, __nc - 1), "
-            f"i -> array_join(slice(__toks, i * {stride} + 1, {size}), ' '))"
-        ),
-    ).otherwise(F.array().cast('array<string>'))
-    staged = df.select(
-        F.col(id_col).alias('id'), t.alias('__toks'), n_chunks.alias('__nc')
-    )
+    staged = df.select(F.col(id_col).alias('id'), tokens(F.col(text_col)).alias('__toks'))
     return staged.select(
-        'id', F.posexplode(windows).alias('chunk_idx', 'chunk_text')
+        'id',
+        F.posexplode(token_windows(F.col('__toks'), size, stride)).alias('chunk_idx', 'chunk_text'),
     ).withColumn(
         'n_chunk_tokens', F.size(F.split(F.col('chunk_text'), ' '))
     ).select('id', 'chunk_idx', 'n_chunk_tokens', 'chunk_text')
@@ -1047,17 +1043,8 @@ def collocations(
     from ..functions.text import tokens
 
     t = df.select(tokens(F.col(text_col)).alias('t'))
-    bg = (
-        t.filter(F.size('t') >= 2)
-        .select(F.explode(F.expr(
-            'transform(sequence(0, size(t) - 2),'
-            ' i -> struct(t[i] AS w1, t[i + 1] AS w2))'
-        )).alias('bg'))
-        .select('bg.w1', 'bg.w2')
-        .filter((F.col('w1') != '') & (F.col('w2') != ''))
-    )
     pair = (
-        bg.groupBy('w1', 'w2')
+        _bigram_rows(t).groupBy('w1', 'w2')
         .agg(F.count('*').alias('pair_count'))
         .filter(F.col('pair_count') >= min_count)
     )

@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 
 from ..functions.determinism import md5_int
 from ..functions.similarity import dot, unit
-from ..functions.text import fingerprint, token_count, tokens
-from .blocking import drop_hot_keys, hamming1
+from ..functions.text import fingerprint, token_count, token_windows, tokens, window_count, word_ngrams
+from .blocking import cosine_block_pairs, drop_hot_keys
 
 
 def exact_dedup(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text') -> DataFrame:
@@ -47,26 +47,14 @@ def shingles(
     n: int = 3,
     distinct: bool = True,
 ) -> DataFrame:
-    """(id, shingle) pairs: word n-grams of the normal form.
-    Expression-only: shifted slices combined with zip_with, then explode
-    — the arrays enter the HOFs as ARGUMENTS (evaluated once per row),
-    never as lambda captures, which would re-evaluate the whole
-    tokenize/normalize chain per shingle (the O(n²) trap fixed in
-    functions.text.winnow_fingerprints, round 5; output is identical).
+    """(id, shingle) pairs: word n-grams of the normal form
+    (``functions.text.word_ngrams``), then explode.
 
     ``distinct=True`` (set semantics — required for Jaccard counting) costs
     a full shuffle of every (id, shingle) pair; pass ``distinct=False``
     where duplicates don't change the result (MinHash signatures: ``min``
     over a multiset equals ``min`` over its set)."""
-    toks = tokens(F.col(text_col))
-    m = F.size(toks) - F.lit(n - 1)
-    g = F.slice(toks, 1, m)
-    for j in range(1, n):
-        g = F.zip_with(g, F.slice(toks, j + 1, m),
-                       lambda x, y: F.concat(x, F.lit(' '), y))
-    # guard: Spark slice with negative length errors; short docs get an
-    # empty shingle set instead
-    sh = F.when(F.size(toks) < n, F.array().cast('array<string>')).otherwise(g)
+    sh = word_ngrams(tokens(F.col(text_col)), n)
     out = df.select(F.col(id_col).alias('id'), F.explode(sh).alias('shingle'))
     return out.distinct() if distinct else out
 
@@ -386,22 +374,10 @@ def embedding_neardup_pairs_lsh(
         unit(F.col(vec_col)).alias('v'),
         lsh_bucket(F.col(vec_col), planes).alias('bucket'),
     ), 'bucket', max_bucket)
-    a = bucketed.select(F.col('id').alias('id_a'), F.col('v').alias('va'), 'bucket')
-    b_src = bucketed
-    if multi_probe:
-        # asymmetric expansion: only ONE side probes its bit-flip neighbors,
-        # so a pair at Hamming distance 1 meets exactly where the flipped
-        # bit matches the other side's true bucket
-        b_src = bucketed.select(
-            'id', 'v', F.explode(hamming1(F.col('bucket'), n_planes)).alias('bucket')
-        )
-    b = b_src.select(F.col('id').alias('id_b'), F.col('v').alias('vb'), 'bucket')
+    pairs = cosine_block_pairs(bucketed, ['bucket'], n_planes if multi_probe else None)
     return (
-        a.join(b, 'bucket')
-        .filter(F.col('id_a') < F.col('id_b'))
-        .withColumn('cos', F.round(dot(F.col('va'), F.col('vb')), 6))
-        .filter(F.col('cos') >= threshold)
-        .select('id_a', 'id_b', 'cos')
+        pairs.filter((F.col('id') < F.col('nbr')) & (F.col('cos') >= threshold))
+        .select(F.col('id').alias('id_a'), F.col('nbr').alias('id_b'), 'cos')
         .distinct()
     )
 
@@ -443,13 +419,10 @@ def semantic_dedup(
     assigned = ivf_assign(df, vec_col=vec_col, centroids=centroids).select(
         F.col(id_col).alias('id'), unit(F.col(vec_col)).alias('v'), 'cell'
     )
-    a = assigned.select(F.col('id').alias('id_a'), F.col('v').alias('va'), 'cell')
-    b = assigned.select(F.col('id').alias('id_b'), F.col('v').alias('vb'), 'cell')
     dups = (
-        a.join(b, 'cell')
-        .filter(F.col('id_a') > F.col('id_b'))
-        .filter(F.round(dot(F.col('va'), F.col('vb')), 6) >= threshold)
-        .select(F.col('id_a').alias('id'))
+        cosine_block_pairs(assigned, ['cell'])
+        .filter((F.col('id') > F.col('nbr')) & (F.col('cos') >= threshold))
+        .select('id')
         .distinct()
     )
     return (
@@ -493,22 +466,12 @@ def block_dedup(
     this operator removes cross-document boilerplate, not self-repetition
     (that is text_repetition's job).
     """
-    t = tokens(F.col(text_col))
+    toks = F.col('__toks')
     src = df.select(
-        F.col(id_col).alias('id'),
-        t.alias('__toks'),
-        F.when(F.size(t) > 0, F.ceil(F.size(t) / F.lit(block)))
-        .otherwise(F.lit(0)).cast('int').alias('n_blocks'),
-    )
-    blocks_expr = F.when(
-        F.col('n_blocks') > 0,
-        F.expr(
-            f"transform(sequence(0, n_blocks - 1), "
-            f"i -> array_join(slice(__toks, i * {block} + 1, {block}), ' '))"
-        ),
-    ).otherwise(F.array().cast('array<string>'))
+        F.col(id_col).alias('id'), tokens(F.col(text_col)).alias('__toks')
+    ).withColumn('n_blocks', window_count(toks, block))
     exploded = src.select(
-        'id', 'n_blocks', F.posexplode_outer(blocks_expr).alias('pos', 'btext')
+        'id', 'n_blocks', F.posexplode_outer(token_windows(toks, block, block)).alias('pos', 'btext')
     ).withColumn('bh', F.md5(F.col('btext').cast('binary')))
 
     dup_hashes = (
@@ -574,16 +537,8 @@ def dup_spans(
         toks.alias('__toks'),
         F.coalesce(token_count(F.col(text_col)).cast('long'), F.lit(0)).alias('n_tokens'),
     )
-    grams_expr = F.when(
-        F.size('__toks') < n, F.array().cast('array<string>')
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size('__toks') - F.lit(n - 1)),
-            lambda i: F.array_join(F.slice('__toks', i, n), ' '),
-        )
-    )
     grams = src.select(
-        'id', F.posexplode(grams_expr).alias('pos0', 'gram')
+        'id', F.posexplode(word_ngrams(F.col('__toks'), n)).alias('pos0', 'gram')
     ).select('id', (F.col('pos0') + 1).alias('pos'), F.md5(F.col('gram').cast('binary')).alias('gh'))
     dup = (
         grams.groupBy('gh')

@@ -5,10 +5,15 @@
   shuffle except the final top-k (a TakeOrdered, driver gets k rows only).
 - ``lsh_topk``: sign-LSH bucketed variant — the scale path: buckets
   pre-partition the corpus so a query probes ~1/2^P of it.
-- ``ivf_assign``/``ivf_topk``: IVF inverted file — nearest-centroid cell
-  assignment (deterministic seeded centroids; swap in k-means-trained ones
-  at scale, the assignment expression is unchanged) with ``nprobe``-cell
-  query pruning.
+- ``ivf_assign``/``ivf_probe``/``ivf_topk``: IVF inverted file —
+  nearest-centroid cell assignment (deterministic seeded centroids; swap
+  in k-means-trained ones at scale, the assignment expression is
+  unchanged) with ``nprobe``-cell query pruning.
+
+Each primitive has one home: every exact scorer ends in ``_cosine_topk``,
+every cell probe is ``ivf_probe``, the one Lloyd loop is
+``train_pq_codebooks`` (IVF training is its one-subspace case), and the
+within-block pair join is ``blocking.cosine_block_pairs``.
 """
 from __future__ import annotations
 
@@ -19,11 +24,31 @@ from pyspark.sql import functions as F
 
 from ..functions.determinism import half_up
 from ..functions.similarity import cosine, dot, hyperplanes, ivf_cell, lsh_bucket, unit
-from .blocking import hamming1, hot_keys
+from .blocking import cosine_block_pairs, hamming1, hot_keys
 
 # knn_classify(method='brute') broadcasts the query side: at most this many
 # rows (~5 MB of dim-64 doubles), larger query sets must block with 'lsh'
 BRUTE_MAX_QUERIES = 10_000
+
+
+def _ranked(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The ``k`` best rows of DataFrame[id_col, score]: score DESC, id ASC
+    (a total order both engines replay)."""
+    return scored.orderBy(F.desc('score'), F.asc(id_col)).limit(k)
+
+
+def _cosine_topk(
+    df: DataFrame, query_vec: List[float], k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact cosine top-k of ``df``'s rows against ``query_vec``: score
+    ``round(cosine(vec, q), 6)``, ranked by ``_ranked``.  Every exact
+    scorer here (brute force, the LSH and IVF probes, the PQ re-rank)
+    is this call over the rows it kept."""
+    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    return _ranked(
+        df.select(F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias('score')),
+        k, id_col,
+    )
 
 
 def brute_force_topk(
@@ -33,12 +58,7 @@ def brute_force_topk(
     id_col: str = 'vec_id',
     vec_col: str = 'embedding',
 ) -> DataFrame:
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = df.select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col), q), 6).alias('score'),
-    )
-    return scored.orderBy(F.col('score').desc(), F.col(id_col)).limit(k)
+    return _cosine_topk(df, query_vec, k, id_col, vec_col)
 
 
 def with_lsh_bucket(
@@ -74,14 +94,8 @@ def lsh_topk(
         if d > 0:
             qb += 2 ** i
     probes = [qb] + ([qb ^ (2 ** i) for i in range(n_planes)] if multi_probe else [])
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     bucketed = df.withColumn('bucket', lsh_bucket(F.col(vec_col), planes))
-    return (
-        bucketed.filter(F.col('bucket').isin(probes))
-        .select(F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias('score'))
-        .orderBy(F.col('score').desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _cosine_topk(bucketed.filter(F.col('bucket').isin(probes)), query_vec, k, id_col, vec_col)
 
 
 def train_ivf_centroids(
@@ -92,38 +106,16 @@ def train_ivf_centroids(
     vec_col: str = 'embedding',
     ndigits: int = 6,
 ) -> List[List[float]]:
-    """Lloyd's k-means coarse quantizer, fully deterministic (no rand):
-    init takes the first ``n_cells`` vectors in md5(id) order (a uniform
-    but replayable shuffle); each round assigns vectors to their nearest
-    centroid (``ivf_cell`` over centroid literals) and recomputes per-dim
-    means as ONE HashAggregate with ``dim`` avg columns — map-side partial
-    combine, so each round shuffles n_cells × dim partial sums per task,
-    never vectors.  Centroids are rounded to ``ndigits`` every round so the
-    DuckDB oracle can replay training bit-identically (error does not
-    propagate).  The driver holds only n_cells × dim floats per round —
-    the standard k-means driver loop (bounded, metadata-scale collects).
-    Empty cells keep their previous centroid.
-    """
-    dim = len(df.select(vec_col).first()[0])
-    seed_rows = (
-        df.select(F.col(id_col).alias('id'), F.col(vec_col).alias('v'))
-        .orderBy(F.md5(F.col('id').cast('string')), F.col('id'))
-        .limit(n_cells)
-        .collect()
-    )
-    cents = [[round(float(x), ndigits) for x in r['v']] for r in seed_rows]
-    for _ in range(iters):
-        assigned = df.select(
-            ivf_cell(F.col(vec_col), cents).alias('cell'), F.col(vec_col).alias('v')
-        )
-        aggs = [
-            F.round(F.avg(F.col('v')[i].cast('double')), ndigits).alias(f'd{i}')
-            for i in range(dim)
-        ]
-        rows = assigned.groupBy('cell').agg(*aggs).collect()
-        new = {int(r['cell']): [float(r[f'd{i}']) for i in range(dim)] for r in rows}
-        cents = [new.get(c, cents[c]) for c in range(n_cells)]
-    return cents
+    """Lloyd's k-means coarse quantizer: the one-subspace case of the
+    product quantizer (Jégou et al. 2011), so ``train_pq_codebooks`` with
+    ``m_sub=1`` and its single codebook is the centroid list — same
+    md5-ordered init, argmax-dot assignment (``ivf_cell``), per-round
+    ``ndigits`` rounding the DuckDB oracle replays, and empty cells
+    keeping their previous centroid."""
+    return train_pq_codebooks(
+        df, m_sub=1, n_codes=n_cells, iters=iters, id_col=id_col, vec_col=vec_col,
+        ndigits=ndigits,
+    )[0]
 
 
 def ivf_assign(
@@ -144,7 +136,17 @@ def ivf_assign(
     return df.withColumn('cell', ivf_cell(F.col(vec_col), centroids))
 
 
-def _query_cells(query_vec: List[float], centroids, nprobe: int) -> List[int]:
+def ivf_probe(
+    assigned: DataFrame,
+    query_vec: List[float],
+    centroids: Sequence[Sequence[float]],
+    nprobe: int,
+) -> DataFrame:
+    """The rows of a cell-assigned frame (``ivf_assign`` output, or a
+    materialized inverted file) in the query's ``nprobe`` nearest cells.
+    The driver scores the centroids with the ``ivf_cell`` rule (6-dp dot,
+    lowest cell first on ties), so the ``cell IN (…)`` filter is a
+    partition filter on a table written ``partitionBy('cell')``."""
     scored = sorted(
         (
             (round(sum(float(a) * float(b) for a, b in zip(query_vec, c)), 6), -i)
@@ -152,7 +154,7 @@ def _query_cells(query_vec: List[float], centroids, nprobe: int) -> List[int]:
         ),
         reverse=True,
     )
-    return [-neg_i for _, neg_i in scored[:nprobe]]
+    return assigned.filter(F.col('cell').isin([-neg_i for _, neg_i in scored[:nprobe]]))
 
 
 def ivf_topk(
@@ -173,15 +175,8 @@ def ivf_topk(
     seeded random-projection quantizer."""
     if centroids is None:
         centroids = hyperplanes(n_cells, len(query_vec), seed)
-    probes = _query_cells(query_vec, centroids, nprobe)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    assigned = df.withColumn('cell', ivf_cell(F.col(vec_col), centroids))
-    return (
-        assigned.filter(F.col('cell').isin(probes))
-        .select(F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias('score'))
-        .orderBy(F.col('score').desc(), F.col(id_col))
-        .limit(k)
-    )
+    assigned = ivf_assign(df, vec_col=vec_col, centroids=centroids)
+    return _cosine_topk(ivf_probe(assigned, query_vec, centroids, nprobe), query_vec, k, id_col, vec_col)
 
 
 def ivf_materialize(
@@ -192,22 +187,19 @@ def ivf_materialize(
     seed: int = 7,
     vec_col: str = 'embedding',
     centroids: Sequence[Sequence[float]] = None,
-    train_iters: int = 0,
 ) -> List[List[float]]:
     """Build the inverted file ON DISK: assign every vector to its cell and
     write partitioned by ``cell``, so queries prune to nprobe/n_cells of
     the corpus at the SCAN (PartitionFilters — pinned by
-    tests/test_plan_evidence.py).  ``train_iters > 0`` runs k-means rounds
-    first (train_ivf_centroids).  Returns the centroids — persist them next
-    to the table; they are the query-side half of the index.
+    tests/test_plan_evidence.py).  ``centroids``: trained list
+    (``train_ivf_centroids``); defaults to the seeded random-projection
+    quantizer.  Returns the centroids — persist them next to the table;
+    they are the query-side half of the index.
     """
     if centroids is None:
-        if train_iters > 0:
-            centroids = train_ivf_centroids(df, n_cells, train_iters, vec_col=vec_col)
-        else:
-            centroids = hyperplanes(n_cells, dim, seed)
-    assigned = ivf_assign(df, n_cells, dim, seed, vec_col, centroids)
-    assigned.write.mode('overwrite').partitionBy('cell').parquet(path)
+        centroids = hyperplanes(n_cells, dim, seed)
+    ivf_assign(df, vec_col=vec_col, centroids=centroids).write.mode(
+        'overwrite').partitionBy('cell').parquet(path)
     return [list(map(float, c)) for c in centroids]
 
 
@@ -224,15 +216,8 @@ def ivf_query_materialized(
     """Query a materialized inverted file: the driver scores the centroids,
     and the scan reads ONLY the nprobe probed cell partitions (partition
     pruning — no recompute of cell assignment, no full-corpus scan)."""
-    probes = _query_cells(query_vec, centroids, nprobe)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        spark.read.parquet(path)
-        .filter(F.col('cell').isin(probes))
-        .select(F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias('score'))
-        .orderBy(F.col('score').desc(), F.col(id_col))
-        .limit(k)
-    )
+    probed = ivf_probe(spark.read.parquet(path), query_vec, centroids, nprobe)
+    return _cosine_topk(probed, query_vec, k, id_col, vec_col)
 
 
 def bucket_histogram(
@@ -314,15 +299,19 @@ def train_pq_codebooks(
     iters: int = 1,
     id_col: str = 'vec_id',
     vec_col: str = 'embedding',
-    dim: int = 64,
     ndigits: int = 6,
 ) -> List[List[List[float]]]:
     """Product-quantization codebooks (Jégou et al. 2011): split the
-    ``dim``-dimensional space into ``m_sub`` contiguous subspaces and train
-    an ``n_codes``-entry codebook in each with the same fully deterministic
-    k-means as ``train_ivf_centroids`` (md5-ordered init, argmax-dot
-    assignment, per-round 6-dp centroid rounding — the DuckDB oracle
-    replays every subspace's training bit-identically).
+    vector space (``dim`` read from the seed rows) into ``m_sub``
+    contiguous subspaces and train an ``n_codes``-entry codebook in each
+    with Lloyd's k-means, fully deterministic: init takes the first
+    ``n_codes`` vectors in md5(id) order (a uniform but replayable
+    shuffle), each round assigns every sub-vector to its nearest entry
+    (argmax dot, ``ivf_cell``) and recomputes per-dim means, and entries
+    are rounded to ``ndigits`` every round so the DuckDB oracle replays
+    every subspace's training bit-identically (error does not propagate).
+    Empty cells keep their previous entry.  This is the package's one
+    Lloyd loop: ``train_ivf_centroids`` is its ``m_sub=1`` case.
 
     Returns ``m_sub`` codebooks of ``n_codes × dim/m_sub`` floats — the
     whole index metadata is ``m_sub·n_codes·d_sub`` doubles (KBs), broadcast
@@ -345,15 +334,16 @@ def train_pq_codebooks(
     Raises ``ValueError`` unless ``m_sub`` divides ``dim``: the subspaces
     must tile the vector, or trailing dimensions would be silently dropped.
     """
-    if m_sub <= 0 or dim % m_sub:
-        raise ValueError(f'm_sub={m_sub} must divide dim={dim} into equal subspaces')
-    d_sub = dim // m_sub
     seed_rows = (
         df.select(F.col(id_col).alias('id'), F.col(vec_col).alias('v'))
         .orderBy(F.md5(F.col('id').cast('string')), F.col('id'))
         .limit(n_codes)
         .collect()
     )
+    dim = len(seed_rows[0]['v'])
+    if m_sub <= 0 or dim % m_sub:
+        raise ValueError(f'm_sub={m_sub} must divide dim={dim} into equal subspaces')
+    d_sub = dim // m_sub
     books = [
         [
             [round(float(x), ndigits) for x in r['v'][s * d_sub:(s + 1) * d_sub]]
@@ -454,11 +444,7 @@ def pq_topk(
             lut.append(acc)
         term = F.get(F.array(*[F.lit(w) for w in lut]), F.col(f'code_{s}'))
         score = term if score is None else score + term
-    return (
-        enc.select(F.col(id_col), F.round(score, 6).alias('score'))
-        .orderBy(F.desc('score'), F.asc(id_col))
-        .limit(k)
-    )
+    return _ranked(enc.select(F.col(id_col), F.round(score, 6).alias('score')), k, id_col)
 
 
 def pq_rerank_topk(
@@ -487,13 +473,7 @@ def pq_rerank_topk(
     cand = pq_topk(
         df, query_vec, codebooks, k=candidates, id_col=id_col, vec_col=vec_col
     ).select(id_col)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        df.join(F.broadcast(cand), id_col)
-        .select(F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias('score'))
-        .orderBy(F.desc('score'), F.asc(id_col))
-        .limit(k)
-    )
+    return _cosine_topk(df.join(F.broadcast(cand), id_col), query_vec, k, id_col, vec_col)
 
 
 def pca_top_component(
@@ -586,14 +566,12 @@ def knn_graph(
     DataFrame[id, nbr, cos, rank] with rank 1..k per id (ties broken by
     ascending neighbor id — a total order, engine-portable).
 
-    Candidate generation is the sign-LSH block join of
-    ``dedup.embedding_neardup_pairs_lsh`` made DIRECTED: node x collects
-    every y whose Hamming-distance from x's bucket is ≤ 1 (with
-    ``multi_probe``; 0 otherwise).  The probe expansion is asymmetric
-    (only the build side explodes to its P+1 bit-flip buckets), which
-    still covers both directions — x meets y iff bucket(x) ∈ probes(y),
-    a symmetric predicate — and each (x, y) candidate arises from
-    EXACTLY one bucket match, so no dedup pass is needed before ranking.
+    Candidate generation is the directed sign-LSH block join
+    (``blocking.cosine_block_pairs``, shared with
+    ``dedup.embedding_neardup_pairs_lsh``): node x collects every y whose
+    Hamming-distance from x's bucket is ≤ 1 (with ``multi_probe``; 0
+    otherwise).  Each (x, y) candidate arises from EXACTLY one bucket
+    match, so no dedup pass is needed before ranking.
 
     Scale shape: one equi-join on bucket (never all-pairs), then ONE
     window per node over its candidate list (shuffle keyed on id; the
@@ -638,22 +616,6 @@ def knn_graph(
     """
     from pyspark.sql import Window
 
-    def pairs(side, keys, bits):
-        # directed within-block pairs of `side` on `keys`; with `bits`, the
-        # build side explodes its last key to the Hamming-1 probes
-        a = side.select('id', F.col('v').alias('va'), *keys)
-        b_src = side
-        if bits:
-            b_src = side.select(
-                'id', 'v', *keys[:-1], F.explode(hamming1(F.col(keys[-1]), bits)).alias(keys[-1])
-            )
-        b = b_src.select(F.col('id').alias('nbr'), F.col('v').alias('vb'), *keys)
-        return (
-            a.join(b, keys)
-            .filter(F.col('id') != F.col('nbr'))
-            .select('id', 'nbr', F.round(dot(F.col('va'), F.col('vb')), 6).alias('cos'))
-        )
-
     if method == 'ivf':
         cents = centroids if centroids is not None else train_ivf_centroids(
             df, n_cells=n_cells, iters=iters, id_col=id_col, vec_col=vec_col
@@ -661,10 +623,10 @@ def knn_graph(
         # cell assignment reads the RAW vector (identical blocking to the
         # oracle); the stored v is prenormalized so the per-pair cosine
         # below is ONE dot product instead of three (functions.unit)
-        cand = pairs(ivf_assign(df, vec_col=vec_col, centroids=cents).select(
+        cand = cosine_block_pairs(ivf_assign(df, vec_col=vec_col, centroids=cents).select(
             F.col(id_col).alias('id'), unit(F.col(vec_col)).alias('v'),
             F.col('cell').alias('bucket'),
-        ), ['bucket'], None)
+        ), ['bucket'])
     else:
         planes = hyperplanes(n_planes, dim, seed)
         # bucket from the RAW vector (sign-LSH is scale-invariant in exact
@@ -685,7 +647,7 @@ def knn_graph(
                 audit['hot_nodes'] = int(sum(r['count'] for r in hot_rows))
             if hot_buckets:
                 bucketed = bucketed.filter(~F.col('bucket').isin(hot_buckets))
-        cand = pairs(bucketed, ['bucket'], n_planes if multi_probe else None)
+        cand = cosine_block_pairs(bucketed, ['bucket'], n_planes if multi_probe else None)
         if hot_buckets:
             # Fallback routing for hot-bucket members: refine with independent
             # extra planes, join within (bucket, sub).  Hot meets only hot of
@@ -701,7 +663,7 @@ def knn_graph(
                 lsh_bucket(F.col(vec_col), sub_planes).alias('sub'),
             ).filter(F.col('bucket').isin(hot_buckets))
             cand = cand.unionByName(
-                pairs(hot_ref, ['bucket', 'sub'], n_sub_planes if multi_probe else None)
+                cosine_block_pairs(hot_ref, ['bucket', 'sub'], n_sub_planes if multi_probe else None)
             )
     w = Window.partitionBy('id').orderBy(F.desc('cos'), F.asc('nbr'))
     return (

@@ -3,7 +3,9 @@
 All settings are plain public Spark confs: AQE (with skew-join handling for
 hot conversations), Arrow for the pandas-parity path, UTC session timezone
 so timestamp lexical forms are stable across hosts, and a generated-code
-cache large enough to hold a whole pass of the dedup and kNN stages.
+cache large enough to hold a whole pass of the dedup and kNN stages, and
+reliable checkpoint files removed once the frames that own them are
+garbage-collected.
 
 Codegen cache sizing: Spark keeps compiled whole-stage-codegen classes in
 an LRU keyed by the generated source (``spark.sql.codegen.cache.maxEntries``,
@@ -62,6 +64,9 @@ def get_spark(
         # recompiles nearly every class every pass; one pass's distinct
         # classes must fit (module docstring).
         .config('spark.sql.codegen.cache.maxEntries', '1024')
+        # reliable checkpoint files go with the frames that own them
+        # (operators/checkpointing.py)
+        .config('spark.cleaner.referenceTracking.cleanCheckpoints', 'true')
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

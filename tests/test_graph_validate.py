@@ -13,6 +13,11 @@ def _edges(spark, pairs):
     return spark.createDataFrame(pairs, 'src string, dst string')
 
 
+def _unset_checkpoint_dir(sc):
+    # SparkContext has no public unset; its Option field is the state
+    getattr(sc._jsc.sc(), 'checkpointDir_$eq')(sc._jvm.scala.Option.empty())
+
+
 def test_k_hop_min_distance_and_bound(spark):
     # chain a→b→c→d plus shortcut a→c: min-hop wins, k bounds the walk
     e = _edges(spark, [('a', 'b'), ('b', 'c'), ('c', 'd'), ('a', 'c')])
@@ -158,16 +163,54 @@ def test_pagerank_reliable_checkpoint_dir_identical(spark, tmp_path):
     ckdir = str(tmp_path / 'ck')
     sc.setCheckpointDir(ckdir)
     try:
-        assert 'ReliableCheckpointRDD' in lineage(truncate(ids))
+        # held until the walk below: the context cleaner deletes a reliable
+        # checkpoint's files once its frame is garbage
+        kept = truncate(ids)
+        assert 'ReliableCheckpointRDD' in lineage(kept)
         reliable = run()
         found = [f for root, _, fs in os.walk(ckdir) for f in fs if f.startswith('part-')]
         assert found, 'no reliable checkpoint files written to the session dir'
     finally:
-        # SparkContext has no public unset; its Option field is the state
-        getattr(sc._jsc.sc(), 'checkpointDir_$eq')(sc._jvm.scala.Option.empty())
+        _unset_checkpoint_dir(sc)
     assert sc.getCheckpointDir() is None
     assert local == reliable
     assert dict(local[1]) == {'a': 'a', 'b': 'a', 'c': 'a', 'd': 'a', 'e': 'e', 'f': 'e', 'g': 'g'}
+
+
+def test_reliable_checkpoint_files_go_with_their_frames(spark, tmp_path):
+    """Under a session checkpoint dir every pagerank round writes a
+    reliable checkpoint; once the frames are dropped and the JVM collects
+    them, Spark's context cleaner deletes every ``rdd-*`` directory
+    (``get_spark`` sets ``spark.cleaner.referenceTracking.cleanCheckpoints``).
+    Without that setting the directories stay for the life of the dir."""
+    import gc
+    import os
+    import time
+
+    from dgraphpandas_spark.operators.graph import pagerank
+
+    sc = spark.sparkContext
+    ckdir = str(tmp_path / 'ck')
+    edges = _edges(spark, [('a', 'b'), ('b', 'c'), ('c', 'a'), ('c', 'd')])
+
+    def rdd_dirs():
+        return sorted(d for _, dirs, _ in os.walk(ckdir) for d in dirs if d.startswith('rdd-'))
+
+    sc.setCheckpointDir(ckdir)
+    try:
+        ranks = pagerank(edges, iters=3)
+        assert ranks.count() == 4
+        assert rdd_dirs(), 'pagerank wrote no reliable checkpoints'
+        del ranks
+        deadline = time.monotonic() + 60
+        while rdd_dirs() and time.monotonic() < deadline:
+            gc.collect()
+            sc._jvm.System.gc()
+            time.sleep(0.5)
+        assert rdd_dirs() == [], 'checkpoint files outlived their frames'
+    finally:
+        _unset_checkpoint_dir(sc)
+    assert sc.getCheckpointDir() is None
 
 
 def test_label_propagation_finds_planted_communities(spark):

@@ -43,7 +43,7 @@ def emb(spark):
 
 @pytest.fixture(scope='module')
 def books(emb):
-    return train_pq_codebooks(emb, m_sub=_M_SUB, n_codes=_N_CODES, iters=1, dim=_DIM)
+    return train_pq_codebooks(emb, m_sub=_M_SUB, n_codes=_N_CODES, iters=1)
 
 
 def test_codebook_geometry_and_determinism(emb, books):
@@ -53,7 +53,7 @@ def test_codebook_geometry_and_determinism(emb, books):
         assert all(len(c) == _D_SUB for c in book)
         # 6-dp rounding is the cross-engine replay contract
         assert all(x == round(x, 6) for c in book for x in c)
-    again = train_pq_codebooks(emb, m_sub=_M_SUB, n_codes=_N_CODES, iters=1, dim=_DIM)
+    again = train_pq_codebooks(emb, m_sub=_M_SUB, n_codes=_N_CODES, iters=1)
     assert again == books
 
 
@@ -130,6 +130,9 @@ def test_quantization_recovers_cluster_cohesion(emb, books):
 
 
 @pytest.mark.parametrize('dim,m_sub', [(8, 3), (10, 4), (8, 0)])
-def test_codebooks_reject_subspaces_that_do_not_tile_dim(emb, dim, m_sub):
-    with pytest.raises(ValueError, match='must divide dim'):
-        train_pq_codebooks(emb, m_sub=m_sub, n_codes=_N_CODES, iters=1, dim=dim)
+def test_codebooks_reject_subspaces_that_do_not_tile_dim(spark, dim, m_sub):
+    # dim is read from the data
+    vecs = spark.createDataFrame([(i, [float(i)] * dim) for i in range(8)],
+                                 'vec_id long, embedding array<double>')
+    with pytest.raises(ValueError, match=f'must divide dim={dim}'):
+        train_pq_codebooks(vecs, m_sub=m_sub, n_codes=_N_CODES, iters=1)

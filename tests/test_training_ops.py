@@ -400,8 +400,9 @@ def test_ivf_materialized_query_matches_inline(spark, emb, tmp_path):
     )
 
     out = str(tmp_path / 'ivf_index')
-    cents = ivf_materialize(emb, out, n_cells=8, dim=64, train_iters=2)
-    assert cents == [list(map(float, c)) for c in train_ivf_centroids(emb, 8, 2)]
+    trained = train_ivf_centroids(emb, 8, 2)
+    cents = ivf_materialize(emb, out, n_cells=8, centroids=trained)
+    assert cents == [list(map(float, c)) for c in trained]
 
     qvec = [float(x) for x in emb.filter('vec_id = 0').first()['embedding']]
     stored = ivf_query_materialized(spark, out, cents, qvec, k=5, nprobe=2)
