@@ -26,7 +26,14 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .vertical import TRIPLE_COLUMNS
+from .vertical import ILLEGAL_CHARACTERS, TRIPLE_COLUMNS, compile_scrub, subject_expr
+
+
+def _xid(transcripts: DataFrame, key: list, key_seperator: str, dgraph_type: str):
+    """The xid the horizontal entry gives a node keyed on ``key`` under the
+    default C7 list, so the edges below attach to the turn nodes."""
+    dtypes = {f.name: f.dataType for f in transcripts.schema.fields}
+    return subject_expr(key, key_seperator, dgraph_type, dtypes, compile_scrub(ILLEGAL_CHARACTERS))
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:
@@ -82,17 +89,14 @@ def conversation_edges(
 
     Derived straight from the source table — no join needed, the xid
     convention carries the linkage (same convention the reference relies on,
-    docs/horizontal_and_vertical_formats.md:72-81).
+    docs/horizontal_and_vertical_formats.md:72-81).  Both xids are built
+    and scrubbed as the horizontal entry builds the turn subject
+    (``subject_expr`` with the default C7 list), null keys included.
     """
     return transcripts.select(
-        F.concat_ws(
-            key_seperator,
-            F.lit(turn_type),
-            F.col('conv_id'),
-            F.col('turn_idx').cast('string'),
-        ).alias('subject'),
+        _xid(transcripts, ['conv_id', 'turn_idx'], key_seperator, turn_type).alias('subject'),
         F.lit('conv').alias('predicate'),
-        F.concat_ws(key_seperator, F.lit(conversation_type), F.col('conv_id')).alias('object'),
+        _xid(transcripts, ['conv_id'], key_seperator, conversation_type).alias('object'),
         F.lit(None).cast('string').alias('type'),
     )
 
@@ -105,11 +109,10 @@ def conversation_nodes(
     """One ``dgraph.type`` intrinsic triple per distinct conversation.
     Distinct over conv_id only — a pre-aggregated (partial agg) shuffle of
     the key column, not the full table."""
+    keys = transcripts.select('conv_id').distinct()
     return (
-        transcripts.select('conv_id')
-        .distinct()
-        .select(
-            F.concat_ws(key_seperator, F.lit(conversation_type), F.col('conv_id')).alias('subject'),
+        keys.select(
+            _xid(keys, ['conv_id'], key_seperator, conversation_type).alias('subject'),
             F.lit('dgraph.type').alias('predicate'),
             F.lit(conversation_type).alias('object'),
             F.lit('<xs:string>').alias('type'),

@@ -11,12 +11,18 @@ depends only on a row's *source column* (its predicate), so it is resolved
 here at plan time, once per column: the branch fate (C5 pre_rename → P1
 ignore_fields → R4 edge_fields, ``melt.branch_fates``), the renamed and
 '_id'-stripped predicate name (C5/C6, as the Expand's literal), the C7 object
-scrub (one ``regexp_replace`` per string-sourced column on the wide frame)
-and the C4 subject with its scrub.  Each branch then melts only its own
-columns (``melt.melt_branch``): ignored columns are never read, the edge
-branch reads the key columns plus its edge columns, and with unique
-subjects the dgraph.type row (R3) is one more projection of the intrinsic
-Expand.  The vertical (long-frame) entry keeps the per-row chain.
+scrub (once per string-sourced column on the wide frame, in the form
+``vertical.compile_scrub`` lowers the list to: ``translate``, a ``replace``
+first for a literal, ``regexp_replace`` only for lists that do not lower)
+and the C4 subject with its scrub (per key part when the scrub removes
+single code points, so an int part needs none).  Each branch then melts
+only its own columns (``melt.melt_branch``): ignored columns are never
+read, the edge branch reads the key columns plus its edge columns, and
+with unique subjects the dgraph.type row (R3) is one more projection of
+the intrinsic Expand.  A branch whose NA drop would remove every long row
+of an all-null source row filters such rows out before the subject is
+built, on ``isnotnull`` of its own columns, which the scan receives as a
+pushed filter.  The vertical (long-frame) entry keeps the per-row chain.
 
 Casting failures yield NULL (Spark semantics) where pandas would raise and
 the reference would ``exit()`` (horizontal.py:79); we consider silent-null
@@ -46,8 +52,9 @@ from .melt import (
 )
 from .vertical import (
     RefineOptions,
+    Scrub,
     _expand_csv_edges,
-    _scrub_expr,
+    compile_scrub,
     empty_triples,
     finish_edges,
     finish_intrinsic,
@@ -151,10 +158,12 @@ def horizontal_transform(
 
     # C4 + C7 subject: built and scrubbed ONCE per source row on the wide
     # frame, so each Expand replicates a finished string instead of
-    # re-running concat_ws + regexp_replace on every melted row.
-    subj = subject_expr(list(subject_fields), o.key_seperator, dgraph_type, dtypes)
-    if o.illegal_characters:
-        subj = _scrub_expr(subj, o.illegal_characters)
+    # re-running concat_ws + the scrub on every melted row.
+    scrubs = {
+        INTRINSIC: compile_scrub(o.illegal_characters_intrinsic_object),
+        EDGE: compile_scrub(o.illegal_characters),
+    }
+    subj = subject_expr(list(subject_fields), o.key_seperator, dgraph_type, dtypes, scrubs[EDGE])
     staged, rendered, string_sources = render_columns(
         frame.withColumn('__subject', subj), value_vars, datetime_cols, force_double_cols
     )
@@ -170,7 +179,6 @@ def horizontal_transform(
     # stays a long-frame step after the split; otherwise it is resolved
     # into the melted predicate names
     strip_late = strip and bool(o.csv_edges)
-    chars = {INTRINSIC: o.illegal_characters_intrinsic_object, EDGE: o.illegal_characters}
 
     def final_name(pred: str, branch: str) -> str:
         return pred.replace('_id', '') if branch == EDGE and strip else pred
@@ -184,20 +192,21 @@ def horizontal_transform(
     gate = {b: {final_name(p, b) for p in str_names} for b in (INTRINSIC, EDGE)}
     long_gate = {b: {final_name(p, b) for p in o.csv_edges} for b in (INTRINSIC, EDGE)}
 
-    def scrubbed(value: Column, pred: str, branch: str) -> Column:
+    def scrub_of(pred: str, branch: str) -> Optional[Scrub]:
         name = final_name(pred, branch)
-        if chars[branch] and name in gate[branch] and name not in long_gate[branch]:
-            return _scrub_expr(value, chars[branch])
-        return value
+        if name in gate[branch] and name not in long_gate[branch]:
+            return scrubs[branch]
+        return None
 
-    melted = [c for c in value_vars if fates[c] is not None]
-    wide = staged.select(
-        '__subject',
-        *[scrubbed(rendered[c], o.pre_rename.get(c, c), fates[c]).alias(c) for c in melted],
-    )
-    values: Dict[str, List[Column]] = {INTRINSIC: [], EDGE: []}
-    for c in melted:
-        values[fates[c]].append(F.col(c).alias(melted_name(o.pre_rename.get(c, c), fates[c])))
+    def scrubbed(c: str) -> Column:
+        scrub = scrub_of(o.pre_rename.get(c, c), fates[c])
+        return rendered[c] if scrub is None else scrub(rendered[c])
+
+    cols = {b: [c for c in value_vars if fates[c] == b] for b in (INTRINSIC, EDGE)}
+    values: Dict[str, List[Column]] = {
+        b: [F.col(c).alias(melted_name(o.pre_rename.get(c, c), b)) for c in cols[b]]
+        for b in (INTRINSIC, EDGE)
+    }
 
     # R3 — dgraph.type rows land in the branch their predicate routes to.
     # Without csv_edges/ignore_fields every source row keeps at least one
@@ -206,22 +215,38 @@ def horizontal_transform(
     # scan, no union); otherwise a distinct over the wide subjects, or over
     # the long rows when a stage before R3 may have removed a subject.
     type_branch = EDGE if 'dgraph.type' in edge_fields else INTRINSIC
-    type_object = scrubbed(F.lit(dgraph_type), 'dgraph.type', type_branch)
+    type_scrub = scrub_of('dgraph.type', type_branch)
+    type_object = F.lit(dgraph_type if type_scrub is None else type_scrub.text(dgraph_type))
     wide_subjects = not (o.csv_edges or o.ignore_fields)
     in_expand = o.add_dgraph_type_records and wide_subjects and o.assume_unique_subjects
     if in_expand:
         values[type_branch].append(type_object.alias('dgraph.type'))
 
+    # A branch whose P2 drop removes every long row of a source row with
+    # all its columns null skips that row before the subject is built:
+    # the filter is on source columns, so it reaches the scan.  Not when
+    # the branch's Expand adds a literal row, nor when the R3 subjects
+    # come from the long frames.
+    drop_na = {INTRINSIC: o.drop_na_intrinsic_objects, EDGE: o.drop_na_edge_objects}
+    types_from_longs = o.add_dgraph_type_records and not wide_subjects
+
+    def branch_wide(branch: str) -> DataFrame:
+        src = staged
+        literal_row = in_expand and branch == type_branch
+        if drop_na[branch] and not literal_row and not types_from_longs:
+            src = src.filter(reduce(Column.__or__, [rendered[c].isNotNull() for c in cols[branch]]))
+        return src.select('__subject', *[scrubbed(c).alias(c) for c in cols[branch]])
+
     longs: Dict[str, Optional[DataFrame]] = {}
     for branch in (INTRINSIC, EDGE):
-        long = melt_branch(wide, '__subject', values[branch]) if values[branch] else None
+        long = melt_branch(branch_wide(branch), '__subject', values[branch]) if values[branch] else None
         if long is not None and o.csv_edges:
             long = _expand_csv_edges(long, o.csv_edges, o.csv_edges_seperator)
         longs[branch] = long
 
     if o.add_dgraph_type_records and not in_expand:
         if wide_subjects:
-            parts = [wide.select(F.col('__subject').alias('subject'))]
+            parts = [staged.select(F.col('__subject').alias('subject'))]
         else:
             parts = [lf.select('subject') for lf in longs.values() if lf is not None]
         if parts:

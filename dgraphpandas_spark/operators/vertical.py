@@ -22,9 +22,12 @@ Stage map (reference file:line → here):
                             anywhere, matching pandas str.replace regex=False)
   rdf types (C8)           vertical_helpers.py:116-134 → map-literal + coalesce
   date fields (C2/C3/P3)   vertical_helpers.py:137-165 → to_timestamp + iso expr
-  illegal scrub (C7)       vertical_helpers.py:168-198 → regexp_replace, gated
-                            to string-sourced predicates (pandas Series.replace
-                            only rewrites str values)
+  illegal scrub (C7)       vertical_helpers.py:168-198 → compiled at plan time
+                            (``compile_scrub``): translate over Python's
+                            code-point set, a replace first for a literal
+                            such as \\r\\n, regexp_replace only for lists that
+                            do not lower; gated to string-sourced predicates
+                            (pandas Series.replace only rewrites str values)
   NA drops (P2)            vertical_helpers.py:201-213 → filter isNotNull
   edge qualify (C9)        vertical_helpers.py:216-249 → when/otherwise exprs
   projection (P4)          vertical.py:112-113         → select
@@ -37,6 +40,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import lru_cache, reduce
 from typing import Any, Dict, Iterable, List, Optional, Set, Tuple
 
 from pyspark.sql import Column, DataFrame
@@ -106,31 +110,19 @@ def _expand_csv_edges(frame: DataFrame, csv_edges: List[str], seperator: str = '
     return frame.filter(~(is_csv & F.col('object').isNull()))
 
 
-def subject_expr(
-    key: List[str], key_seperator: str, dgraph_type: str, dtypes: Dict[str, T.DataType]
-) -> Column:
-    """C4 — composite xid ``{dgraph_type}{sep}{k1}{sep}{k2}…``.
-
-    Parity: vertical_helpers.py:41-67, including str()-rendering of each key
-    and pandas' ``'nan'`` for missing key values.  Single vectorized
-    ``concat_ws`` — the reference's row-wise ``apply`` escape (its own perf
-    comment at :43-46) is unnecessary under codegen.
-    """
-    # pandas renders a missing key as 'None' (object/string columns hold
-    # None) or 'nan' (numeric columns hold NaN) — keep that distinction.
-    parts = [
-        F.coalesce(
-            render_value(F.col(k), dtypes[k]),
-            F.lit('None') if isinstance(dtypes[k], T.StringType) else F.lit('nan'),
-        )
-        for k in key
-    ]
-    return F.concat_ws(key_seperator, F.lit(dgraph_type), *parts)
-
-
 # one regex token: a whole character class, an escape, or one character
 _REGEX_TOKEN = re.compile(r'\[\^?\]?(?:\\.|[^\]\\])*\]|\\.|.', re.S)
 _PY_SPACE = r'\s\x1c-\x1f'  # Python's \s as the body of a Java (?U) class
+# unescaped outside a class, these make a token's meaning depend on its
+# neighbours (groups, alternation, quantifiers, anchors)
+_CONTEXT_TOKENS = frozenset('()|*+?{}^$')
+# a code-point set larger than this (a negated class, '.', \S) keeps the
+# regex: its translate literal would be most of Unicode
+_MAX_SET = 1 << 18
+# at most this many trigger characters: rows holding none skip the scrub
+_MAX_GUARD = 4
+_INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_INT_ALPHABET = '-0123456789'
 
 
 def _python_space(pattern: str) -> str:
@@ -149,16 +141,162 @@ def _python_space(pattern: str) -> str:
     return _REGEX_TOKEN.sub(widen, pattern)
 
 
-def _scrub_expr(col: Column, characters: List[str]) -> Column:
-    """C7 — alternation regex removal; parity: vertical_helpers.py:168-198.
+@lru_cache(maxsize=1)
+def _code_points() -> str:
+    """Every code point but the surrogates, as one string."""
+    return ''.join(map(chr, range(0xD800))) + ''.join(map(chr, range(0xE000, 0x110000)))
 
-    ``(?U)`` (UNICODE_CHARACTER_CLASS): the reference compiles the pattern
-    with Python ``re``, whose ``\\s``/``\\w``/``\\d`` are Unicode-aware by
-    default (``\\s`` strips NBSP etc.), while Java's default classes are
-    ASCII-only.  The flag aligns most of Java with Python's semantics for
-    the default and any user-supplied character patterns;
-    ``_python_space`` adds the four code points ``\\s`` still differs in."""
-    return F.regexp_replace(col, '(?U)' + _python_space('|'.join(characters)), '')
+
+def _alternative(alt: str) -> Optional[Tuple[str, str]]:
+    """One alternative of a character list, read with Python's ``re``:
+    ``('set', chars)`` when it matches exactly one code point (the chars
+    it matches, enumerated), ``('lit', text)`` when it matches one fixed
+    text of two or more code points, ``None`` otherwise."""
+    tokens = _REGEX_TOKEN.findall(alt)
+    if not tokens or _CONTEXT_TOKENS.intersection(tokens):
+        return None
+    sets = []
+    for tok in tokens:
+        try:
+            found = re.findall(tok, _code_points())
+        except re.error:
+            return None
+        if len(found) > _MAX_SET or any(len(m) != 1 for m in found):
+            return None
+        sets.append(''.join(found))
+    if len(sets) == 1:
+        return 'set', sets[0]
+    if all(len(s) == 1 for s in sets) and re.fullmatch(alt, ''.join(sets)):
+        return 'lit', ''.join(sets)
+    return None
+
+
+@dataclass(frozen=True)
+class Scrub:
+    """C7 — the illegal-character removal of one character list, compiled
+    at plan time; parity: vertical_helpers.py:168-198.
+
+    The reference removes ``re.sub('|'.join(chars), '', value)`` with
+    Python's ``re``.  ``compile_scrub`` lowers that alternation:
+
+    - ``removed``: every code point a one-code-point alternative matches,
+      taken from Python's ``re`` over all code points (so ``\\s``, ``\\w``
+      and ``\\d`` are Python's sets by construction), removed by one
+      ``translate``;
+    - ``literal``: a multi-code-point literal removed by ``replace``
+      before the ``translate``, kept only where that provably equals the
+      regex's left-to-right alternation (the intrinsic list's ``\\r\\n``);
+    - ``guard``: with few trigger characters, rows that contain none of
+      them return the value untouched;
+    - ``removed is None``: the list does not lower (a group, a quantifier,
+      a negated class, …), and the scrub is ``regexp_replace`` under
+      ``(?U)`` with ``\\s`` widened to Python's set (``_python_space``).
+
+    Every form keeps a null value null.
+    """
+
+    chars: Tuple[str, ...]
+    removed: Optional[str]
+    literal: Optional[str] = None
+    guard: Tuple[str, ...] = ()
+
+    @property
+    def per_char(self) -> bool:
+        """The scrub removes single code points only, so it distributes
+        over concatenation: scrub(a + b) == scrub(a) + scrub(b)."""
+        return self.removed is not None and self.literal is None
+
+    def text(self, value: str) -> str:
+        """The scrub of a plan-time string (a type name, a separator)."""
+        return re.sub('|'.join(self.chars), '', value) if self.chars else value
+
+    def __call__(self, col: Column) -> Column:
+        if not self.chars:
+            return col
+        if self.removed is None:
+            return F.regexp_replace(col, '(?U)' + _python_space('|'.join(self.chars)), '')
+        out = col
+        if self.literal:
+            out = F.replace(out, F.lit(self.literal), F.lit(''))
+        if self.removed:
+            out = F.translate(out, self.removed, '')
+        if self.guard:
+            out = F.when(reduce(Column.__or__, [col.contains(c) for c in self.guard]), out).otherwise(col)
+        return out
+
+
+@lru_cache(maxsize=None)
+def _compile(chars: Tuple[str, ...]) -> Scrub:
+    alts = [_alternative(c) for c in chars]
+    if None in alts:
+        return Scrub(chars, None)
+    removed: Set[str] = set()
+    literals: List[str] = []
+    for kind, value in alts:
+        if kind == 'set':
+            removed |= set(value)
+        elif value[0] not in removed and not any(value.startswith(x) for x in literals):
+            # otherwise an earlier alternative wins wherever this one
+            # matches, so it never removes anything
+            literals.append(value)
+    # A literal made of removed code points removes nothing the translate
+    # does not.  One other literal may run first as a replace when every
+    # other match is one code point: then the replace removes exactly the
+    # occurrences the regex's left-to-right scan removes.
+    rest = [x for x in literals if not set(x) <= removed]
+    if len(rest) > 1 or (rest and len(literals) > 1):
+        return Scrub(chars, None)
+    literal = rest[0] if rest else None
+    triggers = removed | ({literal[0]} if literal else set())
+    guard = tuple(sorted(triggers)) if len(triggers) <= _MAX_GUARD else ()
+    return Scrub(chars, ''.join(sorted(removed)), literal, guard)
+
+
+def compile_scrub(chars: Iterable[str]) -> Scrub:
+    """The compiled C7 scrub of a character list, cached per list: the
+    code-point sets are enumerated on the first (cold) plan only."""
+    return _compile(tuple(chars))
+
+
+def subject_expr(
+    key: List[str],
+    key_seperator: str,
+    dgraph_type: str,
+    dtypes: Dict[str, T.DataType],
+    scrub: Optional[Scrub] = None,
+) -> Column:
+    """C4 — composite xid ``{dgraph_type}{sep}{k1}{sep}{k2}…``, with the
+    C7 ``scrub`` applied when given.
+
+    Parity: vertical_helpers.py:41-67, including str()-rendering of each key
+    and pandas' ``'nan'`` for missing key values.  Single vectorized
+    ``concat_ws`` — the reference's row-wise ``apply`` escape (its own perf
+    comment at :43-46) is unnecessary under codegen.
+
+    A per-code-point scrub distributes over the concatenation: the type,
+    the separator and the null forms are scrubbed at plan time, each key
+    part on its own, and an int part not at all when no digit or '-' is
+    removed.  Any other scrub runs over the whole subject.
+    """
+    # pandas renders a missing key as 'None' (object/string columns hold
+    # None) or 'nan' (numeric columns hold NaN) — keep that distinction.
+    per_part = scrub if scrub is not None and scrub.per_char else None
+
+    def part(k: str) -> Column:
+        rendered = render_value(F.col(k), dtypes[k])
+        null_form = 'None' if isinstance(dtypes[k], T.StringType) else 'nan'
+        if per_part is None:
+            return F.coalesce(rendered, F.lit(null_form))
+        if not (isinstance(dtypes[k], _INT_TYPES) and set(_INT_ALPHABET).isdisjoint(per_part.removed)):
+            rendered = per_part(rendered)
+        return F.coalesce(rendered, F.lit(per_part.text(null_form)))
+
+    if per_part is not None:
+        return F.concat_ws(
+            per_part.text(key_seperator), F.lit(per_part.text(dgraph_type)), *[part(k) for k in key]
+        )
+    subject = F.concat_ws(key_seperator, F.lit(dgraph_type), *[part(k) for k in key])
+    return subject if scrub is None else scrub(subject)
 
 
 def empty_triples(spark) -> DataFrame:
@@ -238,14 +376,15 @@ def _gated_scrub(df: DataFrame, field: str, chars: List[str], names: Optional[It
     every row) — pandas' ``Series.replace`` only rewrites str values."""
     if not chars:
         return df
+    scrub = compile_scrub(chars)
     if names is None:
-        return df.withColumn(field, _scrub_expr(F.col(field), chars))
+        return df.withColumn(field, scrub(F.col(field)))
     names = sorted(names)
     if not names:
         return df
     return df.withColumn(
         field,
-        F.when(F.col('predicate').isin(names), _scrub_expr(F.col(field), chars)).otherwise(F.col(field)),
+        F.when(F.col('predicate').isin(names), scrub(F.col(field))).otherwise(F.col(field)),
     )
 
 
@@ -297,11 +436,10 @@ def finish_intrinsic(
 
     if scrub_subject:
         intrinsic = _gated_scrub(intrinsic, 'subject', o.illegal_characters, None)
-    # P2 — NA drop BEFORE the object scrub: regexp_replace preserves
-    # nullness, so the results are identical, but filtering first keeps
-    # Catalyst from substituting the scrub regex into the Filter predicate
-    # (which would run the regexp twice per row — once to null-check, once
-    # to project).
+    # P2 — NA drop BEFORE the object scrub: the scrub preserves nullness,
+    # so the results are identical, but filtering first keeps Catalyst from
+    # substituting the scrub into the Filter predicate (which would run it
+    # twice per row — once to null-check, once to project).
     if o.drop_na_intrinsic_objects:
         intrinsic = intrinsic.filter(F.col('object').isNotNull())
     intrinsic = _gated_scrub(intrinsic, 'object', o.illegal_characters_intrinsic_object, scrub_names)
@@ -327,7 +465,7 @@ def finish_edges(
         edges = edges.withColumn('predicate', F.replace(F.col('predicate'), F.lit('_id'), F.lit('')))
     if scrub_subject:
         edges = _gated_scrub(edges, 'subject', o.illegal_characters, None)
-    # NA drop before the object scrub — same double-regexp avoidance as the
+    # NA drop before the object scrub — same double-scrub avoidance as the
     # intrinsic branch (scrub preserves nullness)
     if o.drop_na_edge_objects:
         edges = edges.filter(F.col('object').isNotNull())

@@ -131,6 +131,31 @@ def test_canonicalize_link_and_nodes(spark, transcripts):
     assert deduped.count() == edges.distinct().count()
 
 
+def test_conversation_xids_attach_to_the_turn_nodes(spark):
+    """The turn→conversation edge's subject is horizontal's turn subject
+    (scrubbed, null keys as 'None'/'nan'), and its object is the
+    conversation node's subject."""
+    from pyspark.sql import functions as F
+
+    from dgraphpandas_spark import horizontal_transform
+
+    rows = [
+        ('conv 1.a', 0, 'user', 'hi', None, '2026-01-01T10:00:00'),
+        ('conv 1.a', 1, 'assistant', 'yo', 'calc', '2026-01-01T10:00:05'),
+        (None, 3, 'user', 'x', None, None),
+        ('c"2', None, 'user', 'y', None, None),
+    ]
+    df = spark.createDataFrame(
+        rows, 'conv_id string, turn_idx int, role string, text string, tool string, ts string'
+    )
+    intrinsic, _ = horizontal_transform(df, TRANSCRIPT_CONFIG, 'turn')
+    turns = {r[0] for r in intrinsic.filter(F.col('predicate') == 'dgraph.type').select('subject').collect()}
+    edges = conversation_edges(df).collect()
+    nodes = {r['subject'] for r in conversation_nodes(df).collect()}
+    assert {r['subject'] for r in edges} == turns == {'turn_conv1a_0', 'turn_conv1a_1', 'turn_None_3', 'turn_c2_nan'}
+    assert {r['object'] for r in edges} == nodes == {'conversation_conv1a', 'conversation_None', 'conversation_c2'}
+
+
 def test_streaming_available_now(spark, transcripts, tmp_path):
     from dgraphpandas_spark.streaming.stream import (
         stream_transcripts,

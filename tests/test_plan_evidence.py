@@ -254,9 +254,11 @@ def test_transcript_branches_melt_only_their_own_columns(spark, tmp_path):
     branch is one scan + one Expand over its own columns.  The edge branch
     reads the key columns plus ``tool``; the intrinsic branch carries the
     dgraph.type row as one more Expand projection (no second scan, no
-    Union); tool_nodes reads ``tool`` alone; and the object scrub runs per
+    Union); tool_nodes reads ``tool`` alone; the object scrub runs per
     source column on the wide frame, never as a per-long-row
-    ``CASE WHEN predicate IN (…) THEN regexp_replace``."""
+    ``CASE WHEN predicate IN (…) THEN …``; under the default lists it is
+    compiled to ``translate``/``replace`` (no ``regexp_replace``) below the
+    Expand; and the edge branch skips null-``tool`` rows at the scan."""
     import re
 
     from dgraphpandas_spark import horizontal_transform
@@ -286,7 +288,10 @@ def test_transcript_branches_melt_only_their_own_columns(spark, tmp_path):
     p_tools = phys(tool_nodes(link_entities(edges, dictionary, target_predicates=['tool'])))
     assert read_schemas(p_tools) == ['struct<tool:string>']
 
-    per_row_scrub = re.compile(r'CASE WHEN \(?predicate#\d+ IN \([^)]*\)\)? THEN regexp_replace')
+    per_row_scrub = re.compile(r'CASE WHEN \(?predicate#\d+ IN \([^)]*\)\)? THEN (regexp_replace|translate|replace)')
     for p in (p_edges, p_intrinsic):
         assert not per_row_scrub.search(p)
-        assert 'regexp_replace' in p.split('Expand [')[1], 'scrubs run below the Expand'
+        assert 'regexp_replace' not in p, 'the default lists lower to translate/replace'
+        above, below = p.split('Expand [', 1)
+        assert 'translate(' in below and 'translate(' not in above, 'scrubs run below the Expand'
+    assert 'PushedFilters: [IsNotNull(tool)]' in p_edges, 'null-tool rows are skipped at the scan'

@@ -191,14 +191,16 @@ def test_hot_shingle_guard_drops_quadratic_candidates(spark):
 
 def test_ngram_jaccard_pairs_leaves_no_cache_entry(spark):
     """Each corpus ngram_jaccard_pairs runs over must not leave a persisted
-    frame behind: two corpora, two calls, the session's persistent-RDD
-    count is unchanged."""
+    frame behind: two corpora, two calls, no persistent RDD added to the
+    session.  Frames earlier tests dropped may be unpersisted meanwhile by
+    Spark's ContextCleaner (on a JVM GC), so the check is on RDD ids, not
+    on the count."""
     from dgraphpandas_spark.operators.dedup import ngram_jaccard_pairs
 
-    def n_persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-    before = n_persisted()
+    before = persisted()
     for tag in ('x', 'y'):
         df = spark.createDataFrame(
             [(1, f'a b c d {tag}'), (2, f'a b c d {tag}'), (3, 'q r s t')],
@@ -206,7 +208,7 @@ def test_ngram_jaccard_pairs_leaves_no_cache_entry(spark):
         )
         pairs = ngram_jaccard_pairs(df, n=2, threshold=0.5).collect()
         assert [(r['id_a'], r['id_b']) for r in pairs] == [(1, 2)]
-    assert n_persisted() == before
+    assert persisted() - before == set()
 
 
 def test_hot_bucket_guard_on_embedding_lsh(spark, emb):
