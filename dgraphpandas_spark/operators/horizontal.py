@@ -17,12 +17,16 @@ first for a literal, ``regexp_replace`` only for lists that do not lower)
 and the C4 subject with its scrub (per key part when the scrub removes
 single code points, so an int part needs none).  Each branch then melts
 only its own columns (``melt.melt_branch``): ignored columns are never
-read, the edge branch reads the key columns plus its edge columns, and
-with unique subjects the dgraph.type row (R3) is one more projection of
-the intrinsic Expand.  A branch whose NA drop would remove every long row
-of an all-null source row filters such rows out before the subject is
-built, on ``isnotnull`` of its own columns, which the scan receives as a
-pushed filter.  The vertical (long-frame) entry keeps the per-row chain.
+read, and the edge branch reads the key columns plus its edge columns.
+The dgraph.type rows (R3) always come from the source rows, one per row
+that keeps a long row (a plan-time predicate over the kept columns): with
+unique subjects and every row kept, one more projection of the intrinsic
+Expand; otherwise the source subjects unioned in, behind a distinct
+unless subjects are unique.  A branch whose NA drop would remove every
+long row of an all-null source row filters such rows out before the
+subject is built, on ``isnotnull`` of its own columns, which the scan
+receives as a pushed filter.  The vertical (long-frame) entry keeps the
+per-row chain.
 
 Casting failures yield NULL (Spark semantics) where pandas would raise and
 the reference would ``exit()`` (horizontal.py:79); we consider silent-null
@@ -69,7 +73,14 @@ def horizontal_transform(
     config_file_key: str,
     **kwargs,
 ) -> Tuple[DataFrame, DataFrame]:
-    """Wide DataFrame (or CSV path) → (intrinsic, edges) triple frames."""
+    """Wide DataFrame (or CSV path) → (intrinsic, edges) triple frames.
+
+    Besides the reference's options, this entry reads
+    ``assume_unique_subjects`` (kwargs > config > default ``False``): the
+    source rows have unique keys (no two share a subject), so the
+    dgraph.type rows need no distinct.  Where that holds, the output is
+    the same without it.
+    """
     if frame is None:
         raise ValueError('frame')
     if not config:
@@ -208,33 +219,39 @@ def horizontal_transform(
         for b in (INTRINSIC, EDGE)
     }
 
-    # R3 — dgraph.type rows land in the branch their predicate routes to.
-    # Without csv_edges/ignore_fields every source row keeps at least one
-    # long row, so the subjects are the wide frame's: with unique subjects
-    # the row is one more projection of that branch's Expand (no second
-    # scan, no union); otherwise a distinct over the wide subjects, or over
-    # the long rows when a stage before R3 may have removed a subject.
+    # R3 — one dgraph.type row per source row that keeps a long row, in
+    # the branch its predicate routes to.  Nothing before R3 drops a value
+    # of a column that is not a csv edge, and R2 drops only null csv values
+    # (a non-null one splits into at least one), so a row keeps a long row
+    # when some kept column is not a csv edge, or else when one of its
+    # kept csv values is not null.  With unique subjects and every row
+    # kept, the row is one more projection of that branch's Expand (no
+    # second scan, no union); otherwise the subjects are the source rows
+    # that keep a long row, behind a distinct unless subjects are unique.
+    unique_subjects = get_from_config('assume_unique_subjects', config, False, **kwargs)
+    kept = [c for c in value_vars if fates[c] is not None]
+    kept_csv = [c for c in kept if o.pre_rename.get(c, c) in o.csv_edges]
+    every_row_kept = len(kept_csv) < len(kept)
     type_branch = EDGE if 'dgraph.type' in edge_fields else INTRINSIC
     type_scrub = scrub_of('dgraph.type', type_branch)
     type_object = F.lit(dgraph_type if type_scrub is None else type_scrub.text(dgraph_type))
-    wide_subjects = not (o.csv_edges or o.ignore_fields)
-    in_expand = o.add_dgraph_type_records and wide_subjects and o.assume_unique_subjects
+    in_expand = o.add_dgraph_type_records and unique_subjects and every_row_kept
     if in_expand:
         values[type_branch].append(type_object.alias('dgraph.type'))
+
+    def any_value(columns: List[str]) -> Column:
+        return reduce(Column.__or__, [rendered[c].isNotNull() for c in columns])
 
     # A branch whose P2 drop removes every long row of a source row with
     # all its columns null skips that row before the subject is built:
     # the filter is on source columns, so it reaches the scan.  Not when
-    # the branch's Expand adds a literal row, nor when the R3 subjects
-    # come from the long frames.
+    # the branch's Expand adds a literal row.
     drop_na = {INTRINSIC: o.drop_na_intrinsic_objects, EDGE: o.drop_na_edge_objects}
-    types_from_longs = o.add_dgraph_type_records and not wide_subjects
 
     def branch_wide(branch: str) -> DataFrame:
         src = staged
-        literal_row = in_expand and branch == type_branch
-        if drop_na[branch] and not literal_row and not types_from_longs:
-            src = src.filter(reduce(Column.__or__, [rendered[c].isNotNull() for c in cols[branch]]))
+        if drop_na[branch] and not (in_expand and branch == type_branch):
+            src = src.filter(any_value(cols[branch]))
         return src.select('__subject', *[scrubbed(c).alias(c) for c in cols[branch]])
 
     longs: Dict[str, Optional[DataFrame]] = {}
@@ -244,18 +261,14 @@ def horizontal_transform(
             long = _expand_csv_edges(long, o.csv_edges, o.csv_edges_seperator)
         longs[branch] = long
 
-    if o.add_dgraph_type_records and not in_expand:
-        if wide_subjects:
-            parts = [staged.select(F.col('__subject').alias('subject'))]
-        else:
-            parts = [lf.select('subject') for lf in longs.values() if lf is not None]
-        if parts:
-            subjects = reduce(DataFrame.unionByName, parts)
-            if not o.assume_unique_subjects:
-                subjects = subjects.distinct()
-            rows = type_rows(subjects, type_object)
-            long = longs[type_branch]
-            longs[type_branch] = rows if long is None else long.unionByName(rows)
+    if o.add_dgraph_type_records and kept and not in_expand:
+        sources = staged if every_row_kept else staged.filter(any_value(kept_csv))
+        subjects = sources.select(F.col('__subject').alias('subject'))
+        if not unique_subjects:
+            subjects = subjects.distinct()
+        rows = type_rows(subjects, type_object)
+        long = longs[type_branch]
+        longs[type_branch] = rows if long is None else long.unionByName(rows)
 
     spark = frame.sparkSession
     rdf_map = find_rdf_types(type_overrides)
@@ -263,15 +276,14 @@ def horizontal_transform(
         empty_triples(spark)
         if longs[INTRINSIC] is None
         else finish_intrinsic(
-            longs[INTRINSIC], o, rdf_map, datetime_cols,
-            scrub_subject=False, scrub_names=long_gate[INTRINSIC],
+            longs[INTRINSIC], o, rdf_map, datetime_cols, scrub_names=long_gate[INTRINSIC],
         )
     )
     edges = (
         empty_triples(spark)
         if longs[EDGE] is None
         else finish_edges(
-            longs[EDGE], o, strip_id=strip_late, scrub_subject=False,
+            longs[EDGE], o, strip_id=strip_late,
             scrub_names=long_gate[EDGE], string_names=gate[EDGE],
         )
     )

@@ -4,16 +4,19 @@ Re-expresses the reference's 16-step chain
 (/root/reference/dgraphpandas/strategies/vertical.py:17-115) as pure Column
 expressions over one long DataFrame — Catalyst collapses the whole chain into
 a single whole-stage-codegen projection per branch; the only shuffle in the
-entire transform is the subject-distinct for dgraph.type records (R3), and
-even that is skipped when ``assume_unique_subjects`` is set (transcript keys
-are unique).
+entire transform is the subject-distinct for dgraph.type records (R3).  A
+long frame repeats each subject once per predicate, so this entry always
+runs that distinct; ``assume_unique_subjects`` (source rows have unique
+keys) is an option of the horizontal entry only.
 
 Stage map (reference file:line → here):
   rename predicate/object  vertical.py:90        → withColumnsRenamed
   pre_rename (C5)          vertical_helpers.py:284-296 → map-literal coalesce
   ignore_fields (P1)       vertical_helpers.py:252-263 → filter ~isin
   csv_edges (R2)           vertical_helpers.py:14-38   → split+explode_outer+trim
-  join key fields (C4)     vertical_helpers.py:41-67   → concat_ws, no row apply
+  join key fields (C4)     vertical_helpers.py:41-67   → concat_ws, no row apply,
+                            with the C7 subject scrub (before R3, so
+                            subjects the scrub merges get one type row)
   dgraph.type (R3)         vertical_helpers.py:70-84   → distinct subjects + union
   split intrinsic/edges(R4) vertical_helpers.py:87-113 → two filters over the
                             same long frame, so each branch scans every
@@ -327,7 +330,6 @@ class RefineOptions:
     type_overrides: Dict[str, str]
     date_fields: Dict[str, Any]
     edge_id_convention: bool
-    assume_unique_subjects: bool
 
     @classmethod
     def from_config(
@@ -359,7 +361,6 @@ class RefineOptions:
             type_overrides=per_file('type_overrides', {}),
             date_fields=per_file('date_fields', {}),
             edge_id_convention=per_file('edge_id_convention', False),
-            assume_unique_subjects=top('assume_unique_subjects', False),
         )
 
 
@@ -393,11 +394,10 @@ def finish_intrinsic(
     o: RefineOptions,
     rdf_map: Dict[str, str],
     datetime_predicates: Set[str],
-    scrub_subject: bool,
     scrub_names: Optional[Iterable[str]],
 ) -> DataFrame:
     """The intrinsic branch after the R4 split: C8 types, C2/C3/P3 dates,
-    C7 scrubs, P2 NA drop, P4 projection.  ``scrub_names`` gates the
+    C7 object scrub, P2 NA drop, P4 projection.  ``scrub_names`` gates the
     object scrub (``None``: every row)."""
     intrinsic = frame
     # C8 — RDF literal types on intrinsic
@@ -434,8 +434,6 @@ def finish_intrinsic(
         ~((F.col('type') == '<xs:dateTime>') & F.col('object').isNull())
     )
 
-    if scrub_subject:
-        intrinsic = _gated_scrub(intrinsic, 'subject', o.illegal_characters, None)
     # P2 — NA drop BEFORE the object scrub: the scrub preserves nullness,
     # so the results are identical, but filtering first keeps Catalyst from
     # substituting the scrub into the Filter predicate (which would run it
@@ -450,12 +448,11 @@ def finish_edges(
     frame: DataFrame,
     o: RefineOptions,
     strip_id: bool,
-    scrub_subject: bool,
     scrub_names: Optional[Iterable[str]],
     string_names: Optional[Iterable[str]],
 ) -> DataFrame:
     """The edge branch after the R4 split: C6 '_id' strip (when
-    ``strip_id``), C7 scrubs, P2 NA drop, C9 qualification.
+    ``strip_id``), C7 object scrub, P2 NA drop, C9 qualification.
     ``scrub_names`` gates the object scrub and ``string_names`` picks the
     string-sourced null form, both by final (stripped) predicate name
     (``None``: every row)."""
@@ -463,8 +460,6 @@ def finish_edges(
     if strip_id:
         # C6 — substring-anywhere, matching pandas str.replace regex=False
         edges = edges.withColumn('predicate', F.replace(F.col('predicate'), F.lit('_id'), F.lit('')))
-    if scrub_subject:
-        edges = _gated_scrub(edges, 'subject', o.illegal_characters, None)
     # NA drop before the object scrub — same double-scrub avoidance as the
     # intrinsic branch (scrub preserves nullness)
     if o.drop_na_edge_objects:
@@ -604,18 +599,19 @@ def vertical_transform(
     frame = _expand_csv_edges(frame, o.csv_edges, o.csv_edges_seperator)
     string_sources |= set(o.csv_edges)
 
-    # C4 — subject key concat, then drop key columns
+    # C4 + C7 subject — key concat and scrub, then drop key columns; the
+    # scrub comes before R3, so subjects it merges get one type row
+    scrub = compile_scrub(o.illegal_characters)
     frame = frame.select(
-        subject_expr(key, o.key_seperator, dgraph_type, dtypes).alias('subject'),
+        subject_expr(key, o.key_seperator, dgraph_type, dtypes, scrub).alias('subject'),
         'predicate',
         'object',
     )
 
-    # R3 — dgraph.type records (vertical_helpers.py:70-84)
+    # R3 — dgraph.type records (vertical_helpers.py:70-84): a long frame
+    # repeats each subject once per predicate, so always a distinct
     if o.add_dgraph_type_records:
-        subjects = frame.select('subject')
-        if not o.assume_unique_subjects:
-            subjects = subjects.distinct()
+        subjects = frame.select('subject').distinct()
         frame = frame.unionByName(type_rows(subjects, F.lit(dgraph_type)))
         string_sources.add('dgraph.type')
 
@@ -629,12 +625,12 @@ def vertical_transform(
     in_edges = F.col('predicate').isin(edges_list)
     intrinsic = finish_intrinsic(
         frame.filter(~in_edges) if edges_list else frame,
-        o, rdf_map, datetime_predicates, scrub_subject=True, scrub_names=str_preds,
+        o, rdf_map, datetime_predicates, scrub_names=str_preds,
     )
     if not edges_list:
         return intrinsic, empty_triples(frame.sparkSession)
     edges = finish_edges(
         frame.filter(in_edges), o, strip_id=o.strip_id_from_edge_names,
-        scrub_subject=True, scrub_names=edge_str_preds, string_names=edge_str_preds,
+        scrub_names=edge_str_preds, string_names=edge_str_preds,
     )
     return intrinsic, edges

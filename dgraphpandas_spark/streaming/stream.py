@@ -45,7 +45,8 @@ def stream_triples(
     streaming directly — except the dgraph.type distinct (R3), a global
     aggregation not allowed in append-mode streams.  Subjects of transcript
     streams are unique per (conv_id, turn_idx), so ``assume_unique_subjects``
-    is forced here: dgraph.type rows emit per input row with no state.
+    is forced here: dgraph.type rows emit per input row that keeps a long
+    row, with no state, under every config.
     Output: single union frame with intrinsic rows (type set) and edge rows
     (type null), tagged by ``is_edge``.
     """

@@ -2,21 +2,18 @@
 
 A branch whose NA drop removes every long row of a source row with all
 its columns null skips such rows before the melt (operators/horizontal.py),
-unless the branch's Expand adds a literal dgraph.type row or the
-dgraph.type subjects come from the long frames (csv_edges /
-ignore_fields).  Every case below holds an all-null row and rows null in
-one branch only; the horizontal triples must equal the vertical entry's
-over the same rows unpivoted, which filters nothing before its NA drop
-(as sets: with ``assume_unique_subjects`` the vertical entry emits one
-dgraph.type row per long row).
+unless the branch's Expand adds a literal dgraph.type row; the dgraph.type
+subjects come from the source rows, not from the filtered branches.
+Every case below holds an all-null row and rows null in one branch only;
+the horizontal triples must equal, row for row, the vertical entry's over
+the same rows unpivoted, which filters nothing before its NA drop.
 """
 from __future__ import annotations
 
 import copy
+from collections import Counter
 
 import pytest
-
-from tests.conftest import triples_set
 
 SCHEMA = 'id string, name string, note string, loc_id string, tags string'
 ROWS = [
@@ -50,6 +47,15 @@ CASES = {
     ),
     'type_rows_as_edges': (_cfg({'edge_fields': ['loc_id', 'dgraph.type']}), {'assume_unique_subjects': True}),
 }
+# every kept column a csv edge: a row keeps a long row only when its tags
+# value is not null
+ALL_CSV = _cfg({'edge_fields': ['tags'], 'csv_edges': ['tags'], 'ignore_fields': ['name', 'note', 'loc_id']})
+CASES['all_csv_unique'] = (ALL_CSV, {'assume_unique_subjects': True})
+CASES['all_csv_distinct'] = (ALL_CSV, {})
+
+
+def _triples(df):
+    return Counter(tuple(r) for r in df.select('subject', 'predicate', 'object', 'type').collect())
 
 
 @pytest.mark.parametrize('name', sorted(CASES))
@@ -63,5 +69,5 @@ def test_prefiltered_branches_match_the_vertical_entry(spark, name):
     h_intrinsic, h_edges = horizontal_transform(wide, copy.deepcopy(config), 'row', **kwargs)
     long = long_frame(spark, SCHEMA, ROWS, ['id'])
     v_intrinsic, v_edges = vertical_transform(long, copy.deepcopy(config), 'row', **kwargs)
-    assert triples_set(h_intrinsic) == triples_set(v_intrinsic)
-    assert triples_set(h_edges) == triples_set(v_edges)
+    assert _triples(h_intrinsic) == _triples(v_intrinsic)
+    assert _triples(h_edges) == _triples(v_edges)

@@ -188,6 +188,59 @@ def test_streaming_available_now(spark, transcripts, tmp_path):
     assert got.filter('is_edge = true').count() == ref_e.count()
 
 
+@pytest.mark.parametrize(
+    'file_config,surviving',
+    [
+        ({'ignore_fields': ['text']}, ['turn_c1_0', 'turn_c1_1', 'turn_c2_0', 'turn_c2_1']),
+        ({'ignore_fields': ['role', 'text', 'ts'], 'csv_edges': ['tool']}, ['turn_c1_1', 'turn_c2_0']),
+    ],
+    ids=['ignore_fields', 'all_csv'],
+)
+def test_stream_triples_one_type_row_per_turn(spark, tmp_path, file_config, surviving):
+    """With ignore_fields, and with csv edges as the only kept columns, the
+    stream stays stateless (no aggregate or distinct, so it starts in
+    append mode) and emits one dgraph.type row per turn that keeps a long row: every turn,
+    or those whose csv value is not null."""
+    import copy
+    from collections import Counter
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    from dgraphpandas_spark.streaming.stream import (
+        stream_transcripts,
+        stream_triples,
+        write_stream_available_now,
+    )
+
+    rows = [
+        ('c1', 0, 'user', 'hi', None, datetime(2026, 1, 1, 10)),
+        ('c1', 1, 'assistant', 'yo', 'calc', datetime(2026, 1, 1, 10, 0, 5)),
+        ('c2', 0, 'user', None, 'web, calc', datetime(2026, 1, 2)),
+        ('c2', 1, 'tool', 'x', None, None),
+    ]
+    src = str(tmp_path / 'src')
+    spark.createDataFrame(
+        rows, 'conv_id string, turn_idx int, role string, text string, tool string, ts timestamp'
+    ).write.parquet(src)
+    config = copy.deepcopy(TRANSCRIPT_CONFIG)
+    config['files']['turn'].update(file_config)
+    triples = stream_triples(stream_transcripts(spark, src), config, 'turn')
+    analyzed = triples._jdf.queryExecution().analyzed().toString()
+    assert 'Aggregate' not in analyzed and 'Distinct' not in analyzed
+
+    sink = str(tmp_path / 'sink')
+
+    def batch_fn(batch_df, batch_id):
+        batch_df.write.mode('append').parquet(sink)
+
+    q = write_stream_available_now(triples, str(tmp_path / 'ckpt'), batch_fn)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    types = spark.read.parquet(sink).filter(F.col('predicate') == 'dgraph.type').collect()
+    assert Counter(r['subject'] for r in types) == Counter(surviving)
+
+
 def test_table_format_seam(spark, transcripts, tmp_path):
     from pyspark.sql import functions as F
 

@@ -22,7 +22,8 @@ for ``edge_id_convention``.
 
 ``tests/test_golden_matrix.py`` recomputes every checksum and compares it
 with ``tests/golden/horizontal_matrix.json`` and
-``tests/golden/vertical_matrix.json``.
+``tests/golden/vertical_matrix.json``.  Capture writes nothing when any
+case emits more dgraph.type rows than distinct subjects.
 
 Usage: python tools/capture_goldens.py [horizontal|vertical ...]
        (default: both, each to its file under tests/golden/)
@@ -224,15 +225,37 @@ def branch_checksum(df) -> List[int]:
     return [int(r['n']), int(r['ck'] or 0)]
 
 
-def case_checksums(spark, case) -> Dict[str, List[int]]:
+def checksums(frames) -> Dict[str, List[int]]:
+    """Per-branch checksums of an ``(intrinsic, edges)`` pair."""
+    intrinsic, edges = frames
+    return {'intrinsic': branch_checksum(intrinsic), 'edges': branch_checksum(edges)}
+
+
+def type_row_counts(frames) -> Tuple[int, int]:
+    """``(dgraph.type rows, distinct subjects among them)`` over both
+    branches of an ``(intrinsic, edges)`` pair; R3 emits one row per
+    subject, so the two are equal."""
+    from pyspark.sql import functions as F
+
+    intrinsic, edges = frames
+    r = (
+        intrinsic.unionByName(edges)
+        .filter(F.col('predicate') == 'dgraph.type')
+        .agg(F.count(F.lit(1)).alias('n'), F.countDistinct('subject').alias('d'))
+        .collect()[0]
+    )
+    return int(r['n']), int(r['d'])
+
+
+def horizontal_output(spark, case):
+    """The case's ``(intrinsic, edges)`` from ``horizontal_transform``."""
     import copy
 
     from dgraphpandas_spark import horizontal_transform
 
     _name, schema, rows, config, key, kwargs = case
     frame = spark.createDataFrame(rows, schema)
-    intrinsic, edges = horizontal_transform(frame, copy.deepcopy(config), key, **kwargs)
-    return {'intrinsic': branch_checksum(intrinsic), 'edges': branch_checksum(edges)}
+    return horizontal_transform(frame, copy.deepcopy(config), key, **kwargs)
 
 
 def long_frame(spark, schema: str, rows: list, subject_fields: List[str]):
@@ -249,7 +272,8 @@ def long_frame(spark, schema: str, rows: list, subject_fields: List[str]):
     return frame.unpivot(subject_fields, values, 'predicate', 'object')
 
 
-def vertical_case_checksums(spark, case) -> Dict[str, List[int]]:
+def vertical_output(spark, case):
+    """The case's ``(intrinsic, edges)`` from ``vertical_transform``."""
     import copy
 
     from dgraphpandas_spark import vertical_transform
@@ -257,19 +281,31 @@ def vertical_case_checksums(spark, case) -> Dict[str, List[int]]:
     _name, schema, rows, config, key, kwargs = case
     config = copy.deepcopy(config)
     frame = long_frame(spark, schema, rows, config['files'][key]['subject_fields'])
-    intrinsic, edges = vertical_transform(frame, config, key, **kwargs)
-    return {'intrinsic': branch_checksum(intrinsic), 'edges': branch_checksum(edges)}
+    return vertical_transform(frame, config, key, **kwargs)
 
 
 ENTRIES = {
-    'horizontal': (CASES, case_checksums, GOLDEN_PATH),
-    'vertical': (VERTICAL_CASES, vertical_case_checksums, VERTICAL_GOLDEN_PATH),
+    'horizontal': (CASES, horizontal_output, GOLDEN_PATH),
+    'vertical': (VERTICAL_CASES, vertical_output, VERTICAL_GOLDEN_PATH),
 }
 
 
 def capture(spark, entry: str) -> Dict[str, Dict[str, List[int]]]:
-    cases, checksums, _path = ENTRIES[entry]
-    return {case[0]: checksums(spark, case) for case in cases}
+    """Every case's checksums; refuses (``ValueError``) a case whose
+    output has more dgraph.type rows than distinct subjects, so no golden
+    pins duplicate type triples."""
+    cases, output, _path = ENTRIES[entry]
+    captured = {}
+    for case in cases:
+        frames = output(spark, case)
+        rows, subjects = type_row_counts(frames)
+        if rows != subjects:
+            raise ValueError(
+                f'{entry} case {case[0]!r}: {rows} dgraph.type rows for {subjects} '
+                f'subjects; refusing to write goldens that pin duplicate type triples'
+            )
+        captured[case[0]] = checksums(frames)
+    return captured
 
 
 def main(argv: List[str]) -> int:
